@@ -33,14 +33,16 @@ failing the file, matching the crate's lenient chunk recovery.
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.logfiles import decode_file_batches, read_binary
 
 FILE_MAGIC = b"ElfFile\x00"
 CHUNK_MAGIC = b"ElfChnk\x00"
@@ -127,49 +129,25 @@ def _frame(rec_idx, record_id, ts_us, payload, plen) -> pd.DataFrame:
     )
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation (same contract as the text
-            # source): one undecodable file — wrong magic, torn
-            # stream, AppleDouble "._" sidecar — warns and skips
-            # instead of killing the job (s4 records a per-file
-            # processing error and moves on)
-            try:
-                f = decode_evtx_file(_decompress(path, bytes(content)))
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+def as_rows(rec: pd.DataFrame) -> pd.DataFrame:
+    """Records → the routed row shape (sources.logfiles.ROWS_SCHEMA,
+    minus conv_id/tool): the payload is the text, the record's
+    written-time the pre-stamped ts."""
+    return pd.DataFrame(
+        {
+            "turn_idx": rec["rec_idx"].astype("int32"),
+            "role": "evtx",
+            "text": rec["payload"],
+            "ts": rec["ts"],
+            "sink": "evtx",
+        }
+    )
 
 
 def read_evtx(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     """.evtx files → records DataFrame (enumeration order, one walk
     per file inside mapInPandas; binaryFile never splits a file)."""
-    from ..sources.logfiles import hadoop_glob_escape
-
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
-    )
+    return read_binary(spark, paths, decode_evtx_file, RECORDS_SCHEMA)
 
 
 def run_evtx_stream_available_now(
@@ -294,7 +272,7 @@ def read_evtx_stream(spark: SparkSession, in_dir: str) -> DataFrame:
         spark.readStream.format("binaryFile")
         .schema(BINARYFILE_SCHEMA)
         # batch routing accepts compressed variants (.evtx.xz etc.;
-        # _decode_batches decompresses by extension) — the stream
+        # decode_file_batches decompresses by extension) — the stream
         # glob must match them too
         .option(
             "pathGlobFilter",
@@ -303,5 +281,6 @@ def read_evtx_stream(spark: SparkSession, in_dir: str) -> DataFrame:
         .load(in_dir)
     )
     return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
+        functools.partial(decode_file_batches, decode=decode_evtx_file),
+        RECORDS_SCHEMA,
     )

@@ -15,12 +15,12 @@ equivalent).  Other layouts are additional dtypes in ``LAYOUTS``.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.logfiles import read_binary
 
 # glibc bits/utmp.h, x86_64: short ut_type; pad; pid_t ut_pid;
 # char ut_line[32]; char ut_id[4]; char ut_user[32]; char ut_host[256];
@@ -128,34 +128,19 @@ def decode_records(
     )
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame], dtype: np.dtype
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation (same contract as the text
-            # source): one undecodable file — wrong magic, torn
-            # stream, AppleDouble "._" sidecar — warns and skips
-            # instead of killing the job (s4 records a per-file
-            # processing error and moves on)
-            try:
-                f = decode_records(_decompress(path, bytes(content)), dtype)
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+def as_rows(rec: pd.DataFrame) -> pd.DataFrame:
+    """Records → the routed row shape (sources.logfiles.ROWS_SCHEMA,
+    minus conv_id/tool): text is 'user line host'."""
+    return pd.DataFrame(
+        {
+            "turn_idx": rec["rec_idx"].astype("int32"),
+            "role": "utmpx",
+            "text": rec["ut_user"] + " " + rec["ut_line"] + " "
+            + rec["ut_host"],
+            "ts": rec["ts"],
+            "sink": "utmpx",
+        }
+    )
 
 
 def read_fixedstruct(
@@ -172,16 +157,9 @@ def read_fixedstruct(
     downstream (the reference pre-sorts in FixedStructReader because
     it streams; a DataFrame sorts lazily where required).
     """
-    from ..sources.logfiles import hadoop_glob_escape
-
     dtype = LAYOUTS[layout]
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        lambda it: _decode_batches(it, dtype), RECORDS_SCHEMA
+    return read_binary(
+        spark, paths, lambda b: decode_records(b, dtype), RECORDS_SCHEMA
     )
 
 

@@ -34,13 +34,15 @@ tables).
 
 from __future__ import annotations
 
+import functools
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.logfiles import decode_file_batches, read_binary
 
 SIGNATURE = b"LPKSHHRH"
 HEADER_SIZE_V187 = 240  # through n_entry_arrays (systemd 187+ layout)
@@ -194,49 +196,25 @@ def _frame(cols: dict[str, list]) -> pd.DataFrame:
     )
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation (same contract as the text
-            # source): one undecodable file — wrong magic, torn
-            # stream, AppleDouble "._" sidecar — warns and skips
-            # instead of killing the job (s4 records a per-file
-            # processing error and moves on)
-            try:
-                f = decode_journal_file(_decompress(path, bytes(content)))
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+def as_rows(rec: pd.DataFrame) -> pd.DataFrame:
+    """Entries → the routed row shape (sources.logfiles.ROWS_SCHEMA,
+    minus conv_id/tool): MESSAGE is the text, SYSLOG_IDENTIFIER the
+    role ('journal' when absent)."""
+    return pd.DataFrame(
+        {
+            "turn_idx": rec["rec_idx"].astype("int32"),
+            "role": rec["identifier"].fillna("").replace("", "journal"),
+            "text": rec["message"],
+            "ts": rec["ts"],
+            "sink": "journal",
+        }
+    )
 
 
 def read_journal(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     """.journal files → entries DataFrame (one walk per file inside
     mapInPandas; binaryFile never splits a file)."""
-    from ..sources.logfiles import hadoop_glob_escape
-
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
-    )
+    return read_binary(spark, paths, decode_journal_file, RECORDS_SCHEMA)
 
 
 def run_journal_stream_available_now(
@@ -334,7 +312,7 @@ def read_journal_stream(spark: SparkSession, in_dir: str) -> DataFrame:
         spark.readStream.format("binaryFile")
         .schema(BINARYFILE_SCHEMA)
         # match compressed variants like batch routing does
-        # (.journal.gz decompresses inside _decode_batches)
+        # (.journal.gz decompresses inside decode_file_batches)
         .option(
             "pathGlobFilter",
             "*.journal{,.gz,.bz2,.xz,.lzma,.lz4}",
@@ -342,5 +320,6 @@ def read_journal_stream(spark: SparkSession, in_dir: str) -> DataFrame:
         .load(in_dir)
     )
     return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
+        functools.partial(decode_file_batches, decode=decode_journal_file),
+        RECORDS_SCHEMA,
     )

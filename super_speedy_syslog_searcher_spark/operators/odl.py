@@ -42,12 +42,13 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.logfiles import read_binary
 
 MAGIC = b"EBFGONED"
 BLOCK_SIG = 0xFFEEDDCC
@@ -163,34 +164,26 @@ def decode_odl_file(data: bytes) -> pd.DataFrame:
     )
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from ..sources.logfiles import _decompress
-
-    for pdf in batches:
-        frames = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            # per-file fault isolation (same contract as the text
-            # source): one undecodable file — wrong magic, torn
-            # stream, AppleDouble "._" sidecar — warns and skips
-            # instead of killing the job (s4 records a per-file
-            # processing error and moves on)
-            try:
-                f = decode_odl_file(_decompress(path, bytes(content)))
-            except Exception as ex:  # noqa: BLE001
-                import sys as _sys
-
-                print(
-                    f"WARNING: failed to decode {path!r}: "
-                    f"{type(ex).__name__}: {ex}",
-                    file=_sys.stderr,
-                )
-                continue
-            f.insert(0, "source", path)
-            frames.append(f)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+def as_rows(rec: pd.DataFrame) -> pd.DataFrame:
+    """Records → the routed row shape (sources.logfiles.ROWS_SCHEMA,
+    minus conv_id/tool): text is the reference's rendered ODL line
+    ('<epoch_ms> <file>:<function>; <params>', trailing params omitted
+    when empty), null when the record has no valid ts."""
+    ms = rec["ts"].to_numpy().astype("datetime64[ms]").astype("int64")
+    params = np.where(rec["params"] != "", " " + rec["params"], "")
+    text = (
+        pd.Series(ms.astype(str), index=rec.index) + " "
+        + rec["code_file"] + ":" + rec["function"] + ";" + params
+    )
+    return pd.DataFrame(
+        {
+            "turn_idx": rec["rec_idx"].astype("int32"),
+            "role": "odl",
+            "text": text.where(rec["ts"].notna(), None),
+            "ts": rec["ts"],
+            "sink": "odl",
+        }
+    )
 
 
 def read_odl(spark: SparkSession, paths: list[str] | str) -> DataFrame:
@@ -198,16 +191,7 @@ def read_odl(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     inside an Arrow-batched mapInPandas; binaryFile never splits a
     file — the one-reader-per-file model of every binary decoder
     here)."""
-    from ..sources.logfiles import hadoop_glob_escape
-
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return bf.select("path", "content").mapInPandas(
-        _decode_batches, RECORDS_SCHEMA
-    )
+    return read_binary(spark, paths, decode_odl_file, RECORDS_SCHEMA)
 
 
 def encode_odl(

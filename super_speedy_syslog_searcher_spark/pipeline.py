@@ -80,19 +80,6 @@ def assembled(
     )
 
 
-def assembled_files(
-    df: DataFrame, tz_offset_min: int = 0
-) -> DataFrame:
-    """File-source variant of ``assembled``: no-year formats anchor to
-    each SOURCE's mtime year (parse_stage(anchor_from_ts=True),
-    syslogprocessor.rs:628-734) instead of the table corpus's global
-    anchor, and the default tz offset threads through."""
-    p = parse_stage(
-        df, anchor_from_ts=True, tz_offset_min=tz_offset_min
-    )
-    return assemble_stage(repair_stage(p))
-
-
 def full_merge(
     df: DataFrame,
     after: str | None = None,

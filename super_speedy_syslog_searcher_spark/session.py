@@ -12,13 +12,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# retained for callers that imported the old constant; the default is
-# now derived from the session's core count (see get_spark) so the
-# shuffle width tracks $SPARK_GRAFT_CPUS instead of being tuned to one
-# local box — guide §2.2: size partitions from the cluster, not a
-# constant, and let AQE coalesce below it
-DEFAULT_SHUFFLE_PARTITIONS = "32"
-
 
 def get_spark(
     master: str | None = None,

@@ -1,30 +1,48 @@
-"""Raw log-file source: the reference's actual input shape.
+"""Raw log-file sources: the reference's actual input shape.
 
-s4 walks paths, routes by file type (text/gz/bz2/…,
-src/readers/filepreprocessor.rs:1462,1188), splits files into lines
-(src/readers/linereader.rs) and assembles syslines.  Spark equivalents:
+s4 walks paths, routes each file by type
+(src/readers/filepreprocessor.rs:1188,1462) and feeds one reader per
+file into one processing loop (s4.rs processing_loop).  Here:
 
- * path walk           → spark.read glob expansion
- * gz/bz2 codecs       → built-in text-source codec handling
- * per-file identity   → input_file_name()
- * line splitting      → text source (one row per line)
- * line numbers        → per-file window over the text source's
-                         preserved intra-file order
+ * ``assembled_from_paths`` — `s4 <paths>` parity.  The path walk
+   happens on the driver; then ONE binaryFile scan reads every file
+   and ONE mapInPandas decodes it, picking the decoder per file (and
+   per tar member) with ``path_to_filetype``: text lines, or the
+   records of the evtx / journal / utmp / ASL / ETL / ODL readers.
+   Every decoder emits one row shape (ROWS_SCHEMA: the transcripts
+   columns plus ``sink``, null for text and the kind for pre-stamped
+   binary records).  All rows take one scatter exchange into parse →
+   repair → assemble, so each file is decoded once per search.
+ * ``read_log_files_decoded`` — the same decode with every file read
+   as text (BOM / null-pattern encoding sniff, per-codec
+   decompression).
+ * ``read_log_files`` — the Spark text source (UTF-8 only; line
+   numbers from a per-file window over its preserved order).
+ * ``read_binary`` / ``decode_file_batches`` — the body of the
+   per-kind binary readers (read_evtx, read_journal, …).
 
-After this source, rows have exactly the transcripts shape
-(conv_id=file, turn_idx=line number, text=line, ts=file mtime
-stand-in), so the entire pipeline (parse → repair → assemble →
-merge) runs unchanged on real log files — `s4 <paths>` parity.
+Text rows have exactly the transcripts shape (conv_id=file,
+turn_idx=line number, text=line, ts=file mtime stand-in), so the
+pipeline (parse → repair → assemble → merge) runs unchanged on real
+log files.  Fault isolation is per file: one undecodable file warns
+and is skipped, never failing its batch.
 """
 
 from __future__ import annotations
 
 import codecs
+import functools
 import glob as _glob
 import gzip
+import io
 import os
+import sys
+import tarfile
+from collections.abc import Callable, Iterator
 from pathlib import Path
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -197,146 +215,19 @@ def read_log_files_decoded(
     forced), splits lines, and numbers turns.  A file is the unit of
     parallelism — identical to s4's one-reader-per-file model; the
     binaryFile source never splits a file, so line numbering is exact.
-    .gz payloads are decompressed before the sniff (BlockReader codec
-    parity).  ts carries the file's modificationTime, the same mtime
-    seed s4 uses for no-year/uptime anchoring.
+    Compressed payloads are decompressed before the sniff (BlockReader
+    codec parity) and tar members become their own sources.  ts
+    carries the file's modificationTime, the same mtime seed s4 uses
+    for no-year/uptime anchoring.
 
     Output shape == read_log_files == transcripts: the whole pipeline
-    runs unchanged on the result.
+    runs unchanged on the result.  Every file is read as text here;
+    ``assembled_from_paths`` is the routed form of the same decode.
     """
-    if isinstance(paths, str):
-        paths = [paths]
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in paths]
-    )
-    return decode_text_binary_df(bf, charset=charset)
-
-
-def decode_text_binary_df(
-    bf: DataFrame, charset: str | None = None
-) -> DataFrame:
-    """The decode stage of ``read_log_files_decoded`` over an
-    existing (path, modificationTime, content) DataFrame — lets tar
-    member rows (``read_tar_members``) flow through the identical
-    text pipeline as directly-loaded files."""
-    import pandas as pd
-
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-
-    import numpy as np
-
-    def decode(batches):
-        for pdf in batches:
-            frames = []
-
-            def emit(source, mtime, data):
-                enc = charset or sniff_encoding(data[:64])
-                # the explicit-endian codecs keep U+FEFF; drop the BOM
-                # bytes so line 0 starts at the real text
-                for bom, e in _BOM_ENCODINGS:
-                    if e == enc and data.startswith(bom):
-                        data = data[len(bom):]
-                        break
-                lines = data.decode(enc, errors="replace").splitlines()
-                if not lines:
-                    return
-                # bulk per-file frame: one list→Series for the lines,
-                # np.arange turn numbering, scalar broadcast for the
-                # per-file constants — Python touches each FILE, not
-                # each line (round-3 verdict item 5)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "conv_id": source,
-                            "turn_idx": np.arange(
-                                len(lines), dtype="int32"
-                            ),
-                            "role": "log",
-                            "text": pd.Series(lines, dtype="object"),
-                            "tool": "none",
-                            "ts": mtime,
-                        }
-                    )
-                )
-
-            for path, mtime, content in zip(
-                pdf["path"], pdf["modificationTime"], pdf["content"]
-            ):
-                # file-level fault isolation: ONE undecodable file
-                # (missing codec lib, truncated archive, corrupt
-                # stream) must never kill the job — s4 records a
-                # per-file processing error and moves on
-                # (syslogprocessor FileErr*; our --summary reports it
-                # via the absent source)
-                try:
-                    # real filesystems carry ns mtimes; Spark
-                    # timestamps are µs and the ns→µs Arrow cast is
-                    # "unsafe" — truncate up front
-                    if mtime is not None and not pd.isna(mtime):
-                        mtime = pd.Timestamp(mtime).floor("us")
-                    _decode_one(emit, path, mtime, content)
-                except Exception as ex:  # noqa: BLE001
-                    import sys as _sys
-
-                    print(
-                        f"WARNING: failed to decode {path!r}: "
-                        f"{type(ex).__name__}: {ex}",
-                        file=_sys.stderr,
-                    )
-                    continue
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    {
-                        "conv_id": pd.Series(dtype="object"),
-                        "turn_idx": pd.Series(dtype="int32"),
-                        "role": pd.Series(dtype="object"),
-                        "text": pd.Series(dtype="object"),
-                        "tool": pd.Series(dtype="object"),
-                        "ts": pd.Series(dtype="datetime64[ns]"),
-                    }
-                )
-
-    def _decode_one(emit, path, mtime, content):
-        if path.endswith((".tar", ".tar.gz", ".tgz")):
-            # archive members become independent sources
-            # ('file.tar!member', process_path_tar parity —
-            # filepreprocessor.rs:1205; each member keeps its
-            # own mtime like the reference's tar entries)
-            import io
-            import tarfile
-
-            raw = bytes(content)
-            if path.endswith((".tar.gz", ".tgz")):
-                raw = gzip.decompress(raw)
-            with tarfile.open(fileobj=io.BytesIO(raw)) as tf:
-                for m in tf.getmembers():
-                    if not m.isfile():
-                        continue
-                    mdata = _decompress(
-                        m.name, tf.extractfile(m).read()
-                    )
-                    emit(
-                        f"{path}!{m.name}",
-                        # member mtimes can be FLOAT seconds with an
-                        # ns remainder (pax headers) — floor to µs and
-                        # pin UTC so frames never mix naive/aware
-                        pd.Timestamp(
-                            m.mtime, unit="s", tz="UTC"
-                        ).floor("us"),
-                        mdata,
-                    )
-            return
-        emit(path, mtime, _decompress(path, bytes(content)))
-
-    return (
-        bf.select("path", "modificationTime", "content")
-        .mapInPandas(decode, schema)
-    )
+    return _routed_rows(
+        spark, paths, functools.partial(_decode_routed, charset=charset,
+                                        route=False)
+    ).drop("sink")
 
 
 # ---------------------------------------------------------------- routing
@@ -361,12 +252,12 @@ def strip_compression(path: str) -> str:
 
 
 def path_to_filetype(path: str) -> str:
-    """'tar' | 'evtx' | 'journal' | 'fixedstruct' | 'text'."""
+    """'tar' | 'evtx' | 'journal' | 'odl' | 'asl' | 'etl' |
+    'fixedstruct' | 'text'."""
     low = strip_compression(path)
     if low.endswith(".tar") or low.endswith(".tgz"):
         # archives route per-MEMBER (filepreprocessor.rs:1205-1260
-        # routes each tar entry by its own inner type); the outer
-        # 'tar' type tells assembled_from_paths to explode first
+        # routes each tar entry by its own inner type)
         return "tar"
     if low.endswith(".evtx"):
         return "evtx"
@@ -387,95 +278,212 @@ def path_to_filetype(path: str) -> str:
     return "text"
 
 
-def tar_member_types(path: str) -> set[str]:
-    """Driver-side header scan of a local tar: the set of inner file
-    types present (member payloads are NOT read — tarfile walks the
-    512-byte headers only).  Lets assembled_from_paths build exactly
-    the per-type decode branches a given archive needs."""
-    import tarfile
+# One row shape for every decoder.  sink is null for text lines (the
+# parse stage assigns it) and names the kind for pre-stamped binary
+# records, which keep their own ts through parse/repair/assemble.
+ROWS_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp, sink string"
+)
+_ROW_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "sink"]
 
-    types: set[str] = set()
-    with tarfile.open(path, "r:*") as tf:
+
+def _warn_failed(path: str, ex: Exception) -> None:
+    print(
+        f"WARNING: failed to decode {path!r}: {type(ex).__name__}: {ex}",
+        file=sys.stderr,
+    )
+
+
+def decode_file_batches(
+    batches: Iterator[pd.DataFrame],
+    decode: Callable[[bytes], pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """(path, content) batches → ``decode``'s record frames with a
+    leading ``source`` column: the body of every binary reader
+    (read_evtx, read_journal, …).  Per-file fault isolation: one
+    undecodable file (wrong magic, torn stream, AppleDouble "._"
+    sidecar) warns and is skipped instead of killing the job — s4
+    records a per-file processing error and moves on."""
+    for pdf in batches:
+        frames = []
+        for path, content in zip(pdf["path"], pdf["content"]):
+            try:
+                f = decode(_decompress(path, bytes(content)))
+            except Exception as ex:  # noqa: BLE001
+                _warn_failed(path, ex)
+                continue
+            f.insert(0, "source", path)
+            frames.append(f)
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
+
+
+def read_binary(
+    spark: SparkSession,
+    paths: list[str] | str,
+    decode: Callable[[bytes], pd.DataFrame],
+    schema: str,
+) -> DataFrame:
+    """Binary log files → record DataFrame: one ``decode`` walk per
+    file inside an Arrow-batched mapInPandas (binaryFile never splits
+    a file — the one-reader-per-file model)."""
+    return _load_files(spark, paths).select("path", "content").mapInPandas(
+        functools.partial(decode_file_batches, decode=decode), schema
+    )
+
+
+def _text_rows(
+    data: bytes, mtime, charset: str | None = None
+) -> pd.DataFrame | None:
+    """One text file's (decompressed) bytes → its lines in the row
+    shape minus conv_id/tool; None when it has no lines."""
+    enc = charset or sniff_encoding(data[:64])
+    # the explicit-endian codecs keep U+FEFF; drop the BOM bytes so
+    # line 0 starts at the real text
+    for bom, e in _BOM_ENCODINGS:
+        if e == enc and data.startswith(bom):
+            data = data[len(bom):]
+            break
+    lines = data.decode(enc, errors="replace").splitlines()
+    if not lines:
+        return None
+    # bulk per-file frame: one list→Series for the lines, np.arange
+    # turn numbering, scalar broadcast for the per-file constants —
+    # Python touches each FILE, not each line
+    return pd.DataFrame(
+        {
+            "turn_idx": np.arange(len(lines), dtype="int32"),
+            "role": "log",
+            "text": pd.Series(lines, dtype="object"),
+            "ts": mtime,
+            "sink": None,
+        }
+    )
+
+
+def _binary_routes() -> dict:
+    """filetype → (decode file bytes → records, records → row shape)."""
+    from ..operators import asl, etl, evtx, fixedstruct, journal, odl
+
+    return {
+        "evtx": (evtx.decode_evtx_file, evtx.as_rows),
+        "journal": (journal.decode_journal_file, journal.as_rows),
+        "asl": (asl.decode_asl_file, asl.as_rows),
+        "etl": (etl.decode_etl_file, etl.as_rows),
+        "odl": (odl.decode_odl_file, odl.as_rows),
+        "fixedstruct": (fixedstruct.decode_records, fixedstruct.as_rows),
+    }
+
+
+def _sources(path: str, mtime, content: bytes):
+    """(source, name, mtime, raw bytes) of a file, or of each member of
+    a tar archive: members become independent sources named
+    'archive.tar!member' with their own mtimes, routed by the member
+    name (process_path_tar parity, filepreprocessor.rs:1205-1260).
+    Member bytes stay raw — a .log.gz member keeps its gzip framing."""
+    if path_to_filetype(path) != "tar":
+        yield path, path, mtime, content
+        return
+    with tarfile.open(fileobj=io.BytesIO(content), mode="r:*") as tf:
         for m in tf.getmembers():
             if m.isfile():
-                types.add(path_to_filetype(m.name))
-    return types
+                # pax headers can carry float mtimes — floor to µs
+                yield (
+                    f"{path}!{m.name}",
+                    m.name,
+                    pd.Timestamp(m.mtime, unit="s").floor("us"),
+                    tf.extractfile(m).read(),
+                )
 
 
-def read_tar_members(
-    spark: SparkSession,
-    tar_paths: list[str],
-    types: set[str] | None = None,
-) -> DataFrame:
-    """Explode tar archives (.tar / .tar.gz / .tgz / .tar.bz2 /
-    .tar.xz) into one row per member file — (path='tar!member',
-    modificationTime, content) — executor-side, one archive per
-    mapInPandas row (binaryFile never splits a file, matching s4's
-    one-reader-per-archive model in process_path_tar,
-    filepreprocessor.rs:1205-1260).
+def _decode_routed(
+    batches: Iterator[pd.DataFrame],
+    charset: str | None = None,
+    route: bool = True,
+) -> Iterator[pd.DataFrame]:
+    """(path, modificationTime, content) batches → ROWS_SCHEMA frames.
 
-    ``types`` restricts extraction to members of those inner file
-    types (path_to_filetype on the member name), so a branch that
-    only needs the .evtx members of a mixed archive skips the byte
-    copy of everything else.  Member bytes stay RAW (a .log.gz
-    member keeps its gzip framing) — every downstream decoder
-    already decompresses by path suffix."""
-    import io
-    import tarfile
+    Each file (or tar member) picks its decoder by path_to_filetype;
+    route=False reads everything as text.  Fault isolation is per
+    source: an undecodable file or member, or an unreadable archive,
+    warns and is skipped, and the rest of the batch still decodes."""
+    routes = _binary_routes() if route else {}
+    for pdf in batches:
+        frames = []
+        for path, mtime, content in zip(
+            pdf["path"], pdf["modificationTime"], pdf["content"]
+        ):
+            try:
+                # real filesystems carry ns mtimes; Spark timestamps
+                # are µs and the ns→µs Arrow cast is "unsafe"
+                members = _sources(
+                    path, pd.Timestamp(mtime).floor("us"), bytes(content)
+                )
+                for src, name, mt, raw in members:
+                    kind = path_to_filetype(name) if route else "text"
+                    if kind == "tar":
+                        continue  # nested archives are not walked
+                    try:
+                        data = _decompress(name, raw)
+                        if kind == "text":
+                            f = _text_rows(data, mt, charset)
+                        else:
+                            decode, as_rows = routes[kind]
+                            f = as_rows(decode(data))
+                    except Exception as ex:  # noqa: BLE001
+                        _warn_failed(src, ex)
+                        continue
+                    if f is not None:
+                        f["conv_id"] = src
+                        f["tool"] = "none"
+                        frames.append(f)
+            except Exception as ex:  # noqa: BLE001
+                _warn_failed(path, ex)
+        if frames:
+            yield pd.concat(frames, ignore_index=True)[_ROW_COLS]
 
-    import pandas as pd
 
-    bf = spark.read.format("binaryFile").load(
-        [hadoop_glob_escape(p) for p in tar_paths]
+def _load_files(spark: SparkSession, paths) -> DataFrame:
+    """One binaryFile scan of literal ``paths``, a whole file per row."""
+    if isinstance(paths, str):
+        paths = [paths]
+    return spark.read.format("binaryFile").load(
+        [hadoop_glob_escape(p) for p in paths]
     )
-    schema = "path string, modificationTime timestamp, content binary"
 
-    def explode(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                # per-archive fault isolation (same contract as the
-                # text decode): one unreadable archive warns + skips
-                try:
-                    with tarfile.open(
-                        fileobj=io.BytesIO(bytes(content)), mode="r:*"
-                    ) as tf:
-                        for m in tf.getmembers():
-                            if not m.isfile():
-                                continue
-                            if (
-                                types
-                                and path_to_filetype(m.name)
-                                not in types
-                            ):
-                                continue
-                            rows.append(
-                                (
-                                    f"{path}!{m.name}",
-                                    # pax headers can carry float
-                                    # mtimes — floor to µs, pin UTC
-                                    pd.Timestamp(
-                                        m.mtime, unit="s", tz="UTC"
-                                    ).floor("us"),
-                                    tf.extractfile(m).read(),
-                                )
-                            )
-                except Exception as ex:  # noqa: BLE001
-                    import sys as _sys
 
-                    print(
-                        f"WARNING: failed to read archive {path!r}: "
-                        f"{type(ex).__name__}: {ex}",
-                        file=_sys.stderr,
-                    )
-                    continue
-            yield pd.DataFrame(
-                rows, columns=["path", "modificationTime", "content"]
-            )
+def _routed_rows(spark: SparkSession, paths, decode) -> DataFrame:
+    """One binaryFile scan of ``paths`` and one mapInPandas ``decode``."""
+    return _load_files(spark, paths).select(
+        "path", "modificationTime", "content"
+    ).mapInPandas(decode, ROWS_SCHEMA)
 
-    return bf.select("path", "modificationTime", "content").mapInPandas(
-        explode, schema
-    )
+
+def _expand_paths(paths: list[str]) -> tuple[list[str], list[str]]:
+    """Input paths/globs → (files, invalid inputs).  s4 recursively
+    walks directory inputs (filepreprocessor.rs process_path) and
+    warns about unprocessable paths, continuing
+    (print_files_processpathresult)."""
+    files: list[str] = []
+    invalid: list[str] = []
+    for p in paths:
+        for g in _glob.glob(p) or [p]:
+            if os.path.isdir(g):
+                found = [
+                    os.path.join(root, fn)
+                    for root, _dirs, names in os.walk(g)
+                    for fn in sorted(names)
+                    if os.path.isfile(os.path.join(root, fn))
+                ]
+                files.extend(found)
+                if not found:
+                    invalid.append(g)
+            elif os.path.isfile(g):
+                files.append(g)
+            else:
+                invalid.append(g)
+    return files, invalid
 
 
 def assembled_from_paths(
@@ -484,264 +492,67 @@ def assembled_from_paths(
     tz_offset_min: int = 0,
     invalid_out: list | None = None,
 ) -> DataFrame:
-    """`s4 <paths>` parity: route each input file by type
-    (path_to_filetype), run the text pipeline (encoding-aware read →
-    pattern-bank parse with per-source mtime anchor years → repair →
-    sysline assembly) on the text group, and map the binary readers'
-    already-timestamped records (evtx / journal / fixedstruct)
-    straight onto the assembled schema — the reference's
-    per-LogMessageType processing fan-in (s4.rs processing_loop) as a
-    unionByName.  The result feeds dt_filter + merge_ordered
-    unchanged."""
-    from pyspark.sql import functions as F
+    """`s4 <paths>` parity: every input file, whatever its kind, in
+    one routed decode → the assembled schema; feeds dt_filter +
+    merge_ordered unchanged.
 
-    from .. import pipeline as P
+    * One scan: a single binaryFile scan reads every expanded path.
+    * One decoder: a single mapInPandas routes each file — and each
+      tar member, by its inner type — to its decoder by
+      path_to_filetype (the reference's per-LogMessageType reader
+      fan-in, s4.rs processing_loop).  Every decoder emits
+      ROWS_SCHEMA.
+    * One exchange: all rows take the ``xxhash64(conv_id, turn_idx)``
+      scatter exchange, then one lineage: text lines get the parse
+      with per-source mtime anchor years → repair → sysline assembly;
+      the binary readers' pre-stamped records (non-null sink) give
+      the parse a null line, and one final projection stamps their
+      own ts, sink and turn as the message's.  Every file is
+      decoded once, and the range sort downstream samples the
+      shuffled rows, not the files.
+
+    Binary records take the same lineage instead of a filtered
+    branch unioned back: a filter above the exchange is pushed below
+    it by the optimizer, which splits the exchange in two and runs
+    the scan and the decoder once per branch.  A source is one file,
+    so the per-conversation windows never mix text and binary rows.
+
+    An all-invalid input set raises ValueError; invalid inputs are
+    warned about and appended to ``invalid_out``."""
+    from ..operators.assemble import assemble_stage
+    from ..operators.parse import parse_stage
+    from ..operators.repair import repair_stage
 
     if isinstance(paths, str):
         paths = [paths]
-    groups: dict[str, list[str]] = {}
-    invalid: list[str] = []
-    for p in paths:
-        matches = _glob.glob(p) or [p]
-        for g in matches:
-            # s4 recursively walks directory inputs
-            # (filepreprocessor.rs process_path) and warns about
-            # unprocessable paths, continuing
-            # (print_files_processpathresult); an all-invalid input
-            # set is still an error
-            if os.path.isdir(g):
-                found = False
-                for root, _dirs, files in os.walk(g):
-                    for fn in sorted(files):
-                        fp = os.path.join(root, fn)
-                        if os.path.isfile(fp):
-                            found = True
-                            groups.setdefault(
-                                path_to_filetype(fp), []
-                            ).append(fp)
-                if not found:
-                    invalid.append(g)
-                continue
-            if not os.path.isfile(g):
-                invalid.append(g)
-                continue
-            groups.setdefault(path_to_filetype(g), []).append(g)
-    if invalid:
-        import sys as _sys
-
-        for g in invalid:
-            print(f"WARNING: not processed: {g!r}", file=_sys.stderr)
-        if invalid_out is not None:
-            invalid_out.extend(invalid)
-    # archives: scan headers driver-side, then fan each archive's
-    # members into the decode branch of their INNER type — a wtmp or
-    # .evtx member inside a .tar must reach its binary reader, not
-    # the text parser (filepreprocessor.rs:1205-1260 routes each tar
-    # entry by its own filetype)
-    tar_types: dict[str, set[str]] = {}
-    for tp in groups.pop("tar", []):
-        try:
-            tar_types[tp] = tar_member_types(tp)
-        except Exception as ex:  # noqa: BLE001
-            import sys as _sys
-
-            print(
-                f"WARNING: failed to read archive {tp!r}: "
-                f"{type(ex).__name__}: {ex}",
-                file=_sys.stderr,
-            )
-
-    def tars_with(t: str) -> list[str]:
-        return [p for p, ts in tar_types.items() if t in ts]
-
-    def members_of(t: str) -> DataFrame:
-        return read_tar_members(spark, tars_with(t), types={t})
-
-    if not groups and not any(tar_types.values()):
+    files, invalid = _expand_paths(paths)
+    for g in invalid:
+        print(f"WARNING: not processed: {g!r}", file=sys.stderr)
+    if invalid_out is not None:
+        invalid_out.extend(invalid)
+    if not files:
         raise ValueError(f"no readable inputs among {paths!r}")
-    parts: list[DataFrame] = []
-    sel = [
+    rows = (
+        _routed_rows(spark, files, _decode_routed)
+        .withColumnRenamed("sink", "_stamp")
+        .repartition(
+            spark.sparkContext.defaultParallelism,
+            F.xxhash64("conv_id", "turn_idx"),
+        )
+    )
+    stamped = F.col("_stamp").isNotNull()
+    parsed = parse_stage(
+        rows.withColumn("_line", F.when(~stamped, F.col("text"))),
+        text_col="_line",
+        scatter=False,
+        anchor_from_ts=True,
+        tz_offset_min=tz_offset_min,
+    )
+    return assemble_stage(repair_stage(parsed)).select(
         "conv_id", "turn_idx", "role", "tool", "text", "ts",
-        "ts_eff", "sink_eff", "msg_turn_idx",
-    ]
-    text_lines: list[DataFrame] = []
-    if "text" in groups:
-        text_lines.append(
-            read_log_files_decoded(spark, groups["text"])
-        )
-    if tars_with("text"):
-        text_lines.append(decode_text_binary_df(members_of("text")))
-    if text_lines:
-        lines = text_lines[0]
-        for x in text_lines[1:]:
-            lines = lines.unionByName(x)
-        asm = P.assembled_files(lines, tz_offset_min=tz_offset_min)
-        parts.append(asm.select(*sel))
-
-    def binary_records(t: str, reader, decode_batches, schema):
-        recs: list[DataFrame] = []
-        if t in groups:
-            recs.append(reader(spark, groups[t]))
-        if tars_with(t):
-            recs.append(
-                members_of(t)
-                .select("path", "content")
-                .mapInPandas(decode_batches, schema)
-            )
-        if not recs:
-            return None
-        out = recs[0]
-        for x in recs[1:]:
-            out = out.unionByName(x)
-        return out
-
-    from ..operators import evtx as _evtx
-    from ..operators import fixedstruct as _fx
-    from ..operators import journal as _jr
-
-    ev = binary_records(
-        "evtx", _evtx.read_evtx, _evtx._decode_batches,
-        _evtx.RECORDS_SCHEMA,
+        F.when(stamped, F.col("ts")).otherwise(F.col("ts_eff"))
+        .alias("ts_eff"),
+        F.coalesce("_stamp", "sink_eff").alias("sink_eff"),
+        F.when(stamped, F.col("turn_idx")).otherwise(F.col("msg_turn_idx"))
+        .alias("msg_turn_idx"),
     )
-    if ev is not None:
-        parts.append(
-            ev.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("evtx").alias("role"),
-                F.lit("none").alias("tool"),
-                F.col("payload").alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("evtx").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-    jr = binary_records(
-        "journal", _jr.read_journal, _jr._decode_batches,
-        _jr.RECORDS_SCHEMA,
-    )
-    if jr is not None:
-        parts.append(
-            jr.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.coalesce(
-                    F.nullif("identifier", F.lit("")), F.lit("journal")
-                ).alias("role"),
-                F.lit("none").alias("tool"),
-                F.col("message").alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("journal").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-    from ..operators import asl as _asl
-
-    al = binary_records(
-        "asl", _asl.read_asl, _asl._decode_batches,
-        _asl.RECORDS_SCHEMA,
-    )
-    if al is not None:
-        # text = the validated ASL rendering (UTC ISO ts + key=value
-        # fields), the line shape the reference emits for .asl
-        parts.append(
-            al.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("asl").alias("role"),
-                F.lit("none").alias("tool"),
-                F.col("line").alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("asl").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-
-    from ..operators import etl as _etl
-
-    et = binary_records(
-        "etl", _etl.read_etl, _etl._decode_batches,
-        _etl.RECORDS_SCHEMA,
-    )
-    if et is not None:
-        # text = the reference's rendered ETL record line
-        parts.append(
-            et.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("etl").alias("role"),
-                F.lit("none").alias("tool"),
-                F.col("line").alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("etl").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-
-    from ..operators import odl as _odl
-
-    od = binary_records(
-        "odl", _odl.read_odl, _odl._decode_batches,
-        _odl.RECORDS_SCHEMA,
-    )
-    if od is not None:
-        # text = the reference's rendered ODL line
-        # ('<epoch_ms> <file>:<function>; <params>', trailing params
-        # omitted when empty) so merge/prepend/summary treat ODL rows
-        # like any pre-stamped binary source
-        parts.append(
-            od.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("odl").alias("role"),
-                F.lit("none").alias("tool"),
-                F.concat(
-                    F.unix_millis("ts").cast("string"),
-                    F.lit(" "),
-                    F.col("code_file"),
-                    F.lit(":"),
-                    F.col("function"),
-                    F.lit(";"),
-                    F.when(
-                        F.col("params") != "",
-                        F.concat(F.lit(" "), F.col("params")),
-                    ).otherwise(F.lit("")),
-                ).alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("odl").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-    fx_dtype = _fx.LAYOUTS["utmpx_linux_x86_64"]
-    fx = binary_records(
-        "fixedstruct", _fx.read_fixedstruct,
-        lambda it: _fx._decode_batches(it, fx_dtype),
-        _fx.RECORDS_SCHEMA,
-    )
-    if fx is not None:
-        parts.append(
-            fx.select(
-                F.col("source").alias("conv_id"),
-                F.col("rec_idx").cast("int").alias("turn_idx"),
-                F.lit("utmpx").alias("role"),
-                F.lit("none").alias("tool"),
-                F.concat_ws(
-                    " ", "ut_user", "ut_line", "ut_host"
-                ).alias("text"),
-                F.col("ts"),
-                F.col("ts").alias("ts_eff"),
-                F.lit("utmpx").alias("sink_eff"),
-                F.col("rec_idx").cast("int").alias("msg_turn_idx"),
-            )
-        )
-    if not parts:
-        raise ValueError(f"no readable inputs among {paths!r}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

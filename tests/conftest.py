@@ -1,11 +1,20 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
 sys.path.insert(0, "/root/repo")
+
+# The suite shares one long-lived JVM (the session fixture).  Under the
+# package's 64g default driver heap it grows past the RAM of a small
+# host and is killed mid-suite, so cap it — and the CLI subprocesses,
+# which inherit the variable — at half the host's RAM.
+with open("/proc/meminfo") as _f:
+    _ram_kib = int(next(x for x in _f if x.startswith("MemTotal:")).split()[1])
+os.environ.setdefault("S4SPARK_DRIVER_MEM", f"{max(1, _ram_kib // 2 // 1024**2)}g")
 
 from super_speedy_syslog_searcher_spark.session import get_spark  # noqa: E402
 
