@@ -85,11 +85,9 @@ def run(spark, sf_dir: str, repl: int) -> dict:
     reps = int(os.environ.get("S4SPARK_BENCH_REPS", "3"))
 
     # headline: parse → repair → assemble → dt-filter → global merge
-    def _run_merge(freeze: bool = False):
+    def _run_merge():
         stg: list = []
-        _noop_write(
-            P.full_merge(t, DT_AFTER, DT_BEFORE, staging=stg, freeze=freeze)
-        )
+        _noop_write(P.full_merge(t, DT_AFTER, DT_BEFORE, staging=stg))
         for s in stg:
             s.unpersist(blocking=True)
 
@@ -97,12 +95,6 @@ def run(spark, sf_dir: str, repl: int) -> dict:
     suite = {
         "parse_merge": _run_merge,
         "parse_only": lambda: _noop_write(P.parse_repair(t)),
-        # s4's sample-then-freeze fast path, benched for the record:
-        # see BENCH/BASELINE.md (masks already give ~1 regex/row, so
-        # the frozen pre-pass is a measured slowdown on scattered
-        # batches — identical output, kept for conv-bucketed layouts)
-        "parse_frozen": lambda: _noop_write(P.parse_repair(t, freeze=True)),
-        "parse_merge_frozen": lambda: _run_merge(freeze=True),
         "sink_counts": lambda: stats.sink_counts(P.assembled(t, narrow=True)).collect(),
         "hourly_hist": lambda: stats.hourly_histogram(
             P.assembled(t, narrow=True)

@@ -16,7 +16,8 @@ as one pure-pandas function applied to Arrow batches:
    named-tz → offset, year fill (datetime.rs:1368-1890)
 
 The pure function ``parse_series`` is importable without Spark (unit
-tests); ``make_parse_udf`` wraps it as an Arrow-batched pandas UDF.
+tests); ``make_parse_udf`` wraps it as the one Arrow-batched pandas
+UDF, over (anchor year, text).
 """
 
 from __future__ import annotations
@@ -568,13 +569,9 @@ def _scan_masks(sub: pd.Series) -> dict[int, pd.Series]:
     return out
 
 
-PATTERN_BY_ID = {p.pid: p for p in PATTERNS}
-
-
 def parse_series(
     texts: pd.Series,
     anchor_year: int = ANCHOR_YEAR_DEFAULT,
-    winner_pids: pd.Series | None = None,
     tz_offset_min: int = 0,
     anchor_years: pd.Series | None = None,
 ) -> pd.DataFrame:
@@ -583,14 +580,6 @@ def parse_series(
     Rows matching no pattern are continuation lines
     (src/data/mod.rs:34-44): null ts, null pattern_id,
     sink='continuation'.
-
-    winner_pids (optional, index-aligned, NaN = unknown) is the frozen
-    per-source dominant pattern: those rows try their winner FIRST and
-    skip the bank walk on a hit — s4's learned single-DTPD fast path
-    (syslinereader.rs:920, dt_patterns freeze at :2090-2172).  Bank
-    entries are constructed pairwise-disjoint (lookaheads on the
-    catch-all families), so winner-first output equals strict
-    bank-order output; misses fall through to the normal walk.
     """
     idx = texts.index
     # per-row anchor years (index-aligned; NaN → the scalar default)
@@ -634,49 +623,44 @@ def parse_series(
     masks = _dispatch_masks(prefix)  # plain numpy bool arrays
     prefix_list = prefix.tolist()
 
-    def try_pattern(p, cand: np.ndarray) -> None:
+    def take(p, strs: list, labels, to_batch, cand: np.ndarray) -> None:
+        """Pattern p over the candidate positions ``cand`` of ``strs``
+        (whose rows sit at batch positions ``to_batch``, labelled
+        ``labels``): extract → canonicalize → drop invalid dates (the
+        row falls through to later patterns) → scatter the hits into
+        the result arrays and take them out of ``remaining``."""
         if not cand.any():
             return
-        res = _extract_matches(
-            prefix_list, np.flatnonzero(cand).tolist(), idx, p
-        )
+        res = _extract_matches(strs, np.flatnonzero(cand).tolist(), labels, p)
         if res is None:
             return
-        g, pre_len, dt_len, hit_pos = res
+        g, pre_len, dt_len, hit = res
         ts, up = _canonicalize(p, g, anchor_year, tz_offset_min)
         if up is None:
-            valid = ts.notna()
-            if not valid.all():  # invalid date → pattern didn't match;
-                vm = valid.to_numpy()
-                g = g[valid]     # row falls through to later patterns
-                ts = ts[valid]
-                dt_len = dt_len[vm]
-                hit_pos = hit_pos[vm]
+            vm = ts.notna().to_numpy()
+            if not vm.all():
+                ts, dt_len, hit = ts[vm], dt_len[vm], hit[vm]
                 if pre_len is not None:
                     pre_len = pre_len[vm]
-                if g.empty:
+                if not len(hit):
                     return
-        ts_arr[hit_pos] = ts.to_numpy(dtype="datetime64[ns]")
-        pid_arr[hit_pos] = p.pid
-        sink_arr[hit_pos] = p.name
+        pos = to_batch[hit]
+        ts_arr[pos] = ts.to_numpy(dtype="datetime64[ns]")
+        pid_arr[pos] = p.pid
+        sink_arr[pos] = p.name
         beg = pre_len if p.dt_beg is None else p.dt_beg
-        beg_arr[hit_pos] = beg
-        end_arr[hit_pos] = beg + dt_len
+        beg_arr[pos] = beg
+        end_arr[pos] = beg + dt_len
         if up is not None:
-            up_arr[hit_pos] = up.to_numpy(dtype="int64")
-            up_mask[hit_pos] = True
-        remaining[hit_pos] = False
+            up_arr[pos] = up.to_numpy(dtype="int64")
+            up_mask[pos] = True
+        remaining[pos] = False
 
-    if winner_pids is not None:
-        wnp = winner_pids.to_numpy(dtype="float64", na_value=np.nan)
-        for w in pd.unique(winner_pids.dropna()):
-            p = PATTERN_BY_ID.get(int(w))
-            if p is not None and not p.scan:
-                try_pattern(p, remaining & (wnp == w) & masks[p.pid])
+    all_pos = np.arange(n)
     for p in ANCHORED_PATTERNS:
         if not remaining.any():
             break
-        try_pattern(p, remaining & masks[p.pid])
+        take(p, prefix_list, idx, all_pos, remaining & masks[p.pid])
     # scan tier (ids 58+): bounded mid-line search over the leftovers
     # only — the hot path (anchored corpus shapes) never reaches here.
     # It inspects a wider region (SCAN_MAX) than the anchored tier,
@@ -684,46 +668,14 @@ def parse_series(
     if remaining.any():
         rem_pos = np.flatnonzero(remaining)
         scan_prefix = wide.iloc[rem_pos]
-        scan_idx = idx[rem_pos]
         smasks = _scan_masks(scan_prefix)
         scan_list = scan_prefix.tolist()
-        sub_remaining = np.ones(len(rem_pos), dtype=bool)
-
-        def try_scan(p, cand_sub: pd.Series) -> None:
-            sub = (
-                cand_sub.to_numpy(dtype=bool, na_value=False)
-                & sub_remaining
-            )
-            if not sub.any():
-                return
-            res = _extract_matches(
-                scan_list, np.flatnonzero(sub).tolist(), scan_idx, p
-            )
-            if res is None:
-                return
-            g, pre_len, dt_len, hit_sub = res
-            ts, up = _canonicalize(p, g, anchor_year, tz_offset_min)
-            valid = ts.notna() if up is None else pd.Series(
-                True, index=g.index
-            )
-            vm = valid.to_numpy()
-            g, ts = g[valid], ts[valid]
-            if g.empty:
-                return
-            hit_sub = hit_sub[vm]
-            ppos = rem_pos[hit_sub]
-            ts_arr[ppos] = ts.to_numpy(dtype="datetime64[ns]")
-            pid_arr[ppos] = p.pid
-            sink_arr[ppos] = p.name
-            beg = pre_len[vm]
-            beg_arr[ppos] = beg
-            end_arr[ppos] = beg + dt_len[vm]
-            sub_remaining[hit_sub] = False
-
+        scan_idx = idx[rem_pos]
         for p in SCAN_PATTERNS:
-            if not sub_remaining.any():
+            if not remaining.any():
                 break
-            try_scan(p, smasks[p.pid])
+            cand = smasks[p.pid].to_numpy(dtype=bool, na_value=False)
+            take(p, scan_list, scan_idx, rem_pos, cand & remaining[rem_pos])
     no_match = pid_arr < 0
     return pd.DataFrame(
         {
@@ -751,63 +703,31 @@ def parse_series(
 
 def make_parse_udf(
     anchor_year: int = ANCHOR_YEAR_DEFAULT,
-    frozen=False,
     tz_offset_min: int = 0,
-    anchor_from_ts: bool = False,
 ):
-    """Arrow-batched pandas UDF over the text column.
+    """Arrow-batched pandas UDF over (anchor_year, text) columns.
 
     The JVM ships Arrow batches to a long-lived Python worker — the
     same architecture the reference uses for its child-Python readers
     (src/readers/pyeventreader.rs:629, src/python/pyrunner.rs:653),
     but vectorized instead of line-protocol-per-record.
 
-    frozen=True switches the UDF to (winner_pid, text) input — the
-    winner pid arrives as a broadcast-joined COLUMN (operators/
-    parse.py), not a driver-collected dict — and enables the
-    winner-first fast path.
+    The int anchor-year column seeds each row's no-year formats (a
+    log file's mtime year, syslogprocessor.rs:628-734); a null falls
+    back to ``anchor_year``, so a caller without per-row years passes
+    a null literal (operators/parse.py decides which).
     """
     from pyspark.sql.functions import pandas_udf
 
-    if anchor_from_ts:
-        # (ts, text) variant: each row's no-year anchor comes from its
-        # source's mtime stand-in ts (syslogprocessor.rs:628-734)
-        assert not frozen, "anchor_from_ts + frozen not supported"
-
-        @pandas_udf(RESULT_FIELDS)
-        def parse_text_mtime(
-            ts: pd.Series, texts: pd.Series
-        ) -> pd.DataFrame:
-            return parse_series(
-                texts,
-                anchor_year=anchor_year,
-                tz_offset_min=tz_offset_min,
-                anchor_years=ts.dt.year,
-            )
-
-        return parse_text_mtime
-
-    if not frozen:
-
-        @pandas_udf(RESULT_FIELDS)
-        def parse_text(texts: pd.Series) -> pd.DataFrame:
-            return parse_series(
-                texts,
-                anchor_year=anchor_year,
-                tz_offset_min=tz_offset_min,
-            )
-
-        return parse_text
-
     @pandas_udf(RESULT_FIELDS)
-    def parse_text_frozen(
-        winner_pids: pd.Series, texts: pd.Series
+    def parse_text(
+        anchor_years: pd.Series, texts: pd.Series
     ) -> pd.DataFrame:
         return parse_series(
             texts,
             anchor_year=anchor_year,
-            winner_pids=winner_pids,
             tz_offset_min=tz_offset_min,
+            anchor_years=anchor_years,
         )
 
-    return parse_text_frozen
+    return parse_text

@@ -84,7 +84,7 @@ def with_global_seq(
     """Attach a 1-based global sequence number in total order.
 
     Single-lineage two-phase pattern: persist the range-sorted frame
-    (freezes the physical partitioning shared by both jobs), collect
+    (pins the physical partitioning shared by both jobs), collect
     one row-count per partition (metadata-sized driver traffic), then
     seq = broadcast partition offset + row position within the cached
     partition.  Position comes from monotonically_increasing_id(),

@@ -1,8 +1,10 @@
 """Parse stage: attach extracted datetime columns to the transcripts.
 
-One ArrowEvalPython node in the physical plan; everything before and
-after stays in WholeStageCodegen.  Column pruning matters: the UDF
-reads only ``text`` — Catalyst prunes the parquet scan accordingly.
+One pandas UDF over (anchor year, text), so one ArrowEvalPython node
+in the physical plan; everything before and after stays in
+WholeStageCodegen.  Column pruning matters: the UDF reads only
+``text`` (plus ``ts`` for log-file sources) — Catalyst prunes the
+parquet scan accordingly.
 """
 
 from __future__ import annotations
@@ -16,58 +18,11 @@ from ..patterns import ANCHOR_YEAR_DEFAULT
 PARSE_COLS = ["ts_parsed", "pattern_id", "sink", "dt_beg", "dt_end", "uptime_us"]
 
 
-def learn_winners(
-    df: DataFrame,
-    anchor_year: int = ANCHOR_YEAR_DEFAULT,
-    sample_turns: int = 8,
-) -> DataFrame:
-    """Per-conv dominant pattern from a bounded head sample — s4's
-    blockzero analysis that freezes one DTPD per file
-    (src/readers/syslinereader.rs:920, syslogprocessor.rs blockzero).
-
-    sample_turns=8 (was 32, round 6): the winner table only steers
-    ATTEMPT ORDER — bank entries are pairwise disjoint, so frozen
-    output is identical for ANY winner table (test-pinned) — and 8
-    head turns already pick each conv's dominant pattern; the smaller
-    sample cuts the learning job (the serial broadcast-build prefix of
-    every frozen run) ~4× on the parse side (guide §1.2: don't compute
-    things you throw away).
-
-    Samples turn_idx < sample_turns (the 'block zero'), parses with
-    the full bank, and keeps each conv's most-frequent pattern id
-    (ties → lowest id, matching conv_dominant_pattern).  Returns a
-    (conv_id, winner_pid) DataFrame — NO driver collect: parse_stage
-    broadcast-joins it onto the input, so at 10^9 conversations the
-    winners stay distributed (swap the broadcast for a bucketed join
-    when the winner table itself outgrows the broadcast threshold).
-    """
-    from pyspark.sql import Window
-
-    sample = df.filter(F.col("turn_idx") < sample_turns)
-    parsed = parse_stage(sample, anchor_year=anchor_year, winners=None)
-    counts = (
-        parsed.filter(F.col("pattern_id").isNotNull())
-        .groupBy("conv_id", "pattern_id")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("conv_id").orderBy(
-        F.desc("n"), F.asc("pattern_id")
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "conv_id", F.col("pattern_id").cast("int").alias("winner_pid")
-        )
-    )
-
-
 def parse_stage(
     df: DataFrame,
     text_col: str = "text",
     anchor_year: int = ANCHOR_YEAR_DEFAULT,
     scatter: bool = True,
-    winners: DataFrame | None = None,
     tz_offset_min: int = 0,
     anchor_from_ts: bool = False,
 ) -> DataFrame:
@@ -81,12 +36,19 @@ def parse_stage(
     scatter: parse is row-independent, but the input is often
     partitioned by conv_id (upstream windows / table layout) and a
     hot conversation then makes one straggler task own ~20% of the
-    rows.  A round-robin repartition to the cluster's parallelism
-    before the UDF removes the straggler — the Spark analogue of s4's
-    one-huge-file thread imbalance, and the skew fixture's reason to
-    exist.  At 10^12 rows the same is achieved by file-split-sized
-    input partitions (maxPartitionBytes), so the shuffle is skipped
-    when the input is already well-partitioned.
+    rows.  Hash-scattering the rows on their unique (conv_id,
+    turn_idx) key (round-robin when the input has no such key) to the
+    cluster's parallelism before the UDF removes the straggler — the
+    Spark analogue of s4's one-huge-file thread imbalance, and the
+    skew fixture's reason to exist.  At 10^12 rows the same is
+    achieved by file-split-sized input partitions (maxPartitionBytes),
+    so the shuffle is skipped when the input is already
+    well-partitioned.
+
+    anchor_from_ts: seed each row's no-year formats from the year of
+    its ``ts`` column (log-file sources' mtime stand-in,
+    syslogprocessor.rs:628-734); otherwise every row uses
+    anchor_year.
     """
     if scatter:
         sc = df.sparkSession.sparkContext
@@ -102,25 +64,8 @@ def parse_stage(
             df = df.repartition(n, F.xxhash64("conv_id", "turn_idx"))
         else:
             df = df.repartition(n)
-    if winners is not None:
-        # winners is a tiny (conv_id, winner_pid) dim: broadcast-join
-        # it in and hand the pid to the UDF as a COLUMN — no driver
-        # collect anywhere on this path (round-2 verdict item)
-        df = df.join(F.broadcast(winners), "conv_id", "left")
-        udf = make_parse_udf(
-            anchor_year, frozen=True, tz_offset_min=tz_offset_min
-        )
-        parsed = df.withColumn(
-            "_p", udf(F.col("winner_pid"), F.col(text_col))
-        ).drop("winner_pid")
-    elif anchor_from_ts:
-        # per-source anchor year from the mtime stand-in ts column
-        # (log-file sources; syslogprocessor.rs:628-734)
-        udf = make_parse_udf(
-            anchor_year, tz_offset_min=tz_offset_min, anchor_from_ts=True
-        )
-        parsed = df.withColumn("_p", udf(F.col("ts"), F.col(text_col)))
-    else:
-        udf = make_parse_udf(anchor_year, tz_offset_min=tz_offset_min)
-        parsed = df.withColumn("_p", udf(F.col(text_col)))
+    # the one parse UDF takes a per-row anchor year; null → anchor_year
+    anchor = F.year("ts") if anchor_from_ts else F.lit(None).cast("int")
+    udf = make_parse_udf(anchor_year, tz_offset_min)
+    parsed = df.withColumn("_p", udf(anchor, F.col(text_col)))
     return parsed.select("*", *[f"_p.{c}" for c in PARSE_COLS]).drop("_p")

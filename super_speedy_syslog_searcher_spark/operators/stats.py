@@ -51,9 +51,8 @@ def conv_dominant_pattern(parsed: DataFrame) -> DataFrame:
 
     Two built-in aggregations + a window argmax; at 10^12 rows the
     groupBy is partial+final so only (convs x patterns) rows shuffle.
-    The result is the per-group "learned schema" a second
-    winner-first parse pass would consume (schema-on-read inference,
-    SURVEY.md §1.3)."""
+    The result is the per-group "learned schema" (schema-on-read
+    inference, SURVEY.md §1.3)."""
     counts = (
         parsed.filter(F.col("pattern_id").isNotNull())
         .groupBy("conv_id", F.col("pattern_id").cast("int").alias("pattern_id"))

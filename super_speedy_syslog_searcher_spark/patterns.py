@@ -120,9 +120,9 @@ _MON_FULL_ALT = "|".join(
 _DOW_ALT = "Mon|Tue|Wed|Thu|Fri|Sat|Sun"
 _TZN_ALT = "|".join(sorted(TZ_OFFSET_MIN, key=len, reverse=True))
 # lowercase/UPPERCASE month spellings ONLY — exact Title-case is
-# pattern 3's; keeping 17 disjoint from 3 makes the winner-first
-# frozen parse (s4's per-file DTPD freeze, syslinereader.rs:920)
-# output-identical to strict bank order.
+# pattern 3's; keeping 17 disjoint from 3 means a line's family
+# follows from its shape alone, not from where 17 sits in the
+# first-match-wins bank order.
 _MON_CI_ALT = "|".join(
     [m.lower() for m in MONTHS] + [m.upper() for m in MONTHS]
 )
@@ -186,10 +186,11 @@ PATTERNS: list[Pattern] = [
     Pattern(
         1, "iso8601_notz",
         # frac 1-9 digits (%f parity, ere_datetimes_impl.rs:520-525);
-        # the trailing lookaheads keep this catch-all disjoint from
-        # space-separated numeric-tz (0), AM/PM 12-hour (25), Zulu
-        # (29) and named-tz (20) lines, so the frozen winner-first
-        # parse is equivalent to strict bank order.
+        # first match wins in bank order, so this catch-all must not
+        # take lines that belong to a later family: the trailing
+        # lookaheads keep it off AM/PM 12-hour (25), Zulu (29) and
+        # named-tz (20) lines, and disjoint from space-separated
+        # numeric-tz (0) lines too.
         r"^(?P<dt>(?P<Y>\d{4})-(?P<M>\d{2})-(?P<D>\d{2})[T ]"
         r"(?P<h>\d{2}):(?P<mi>\d{2}):(?P<s>\d{2})(?:\.(?P<f>\d{1,9}))?)"
         rf"(?![.\dZ+,\u2212-])(?! ?[-+\u2212]\d{{2}})(?! [AP]M\b)"
@@ -348,8 +349,8 @@ PATTERNS: list[Pattern] = [
     Pattern(
         14, "epoch_bare",
         # bare epoch seconds, frac 0-5 or 7-9 digits; exactly-6 is
-        # pattern 7's (strace) — excluding it keeps the two disjoint
-        # so the frozen winner-first pass is order-equivalent.
+        # pattern 7's (strace) — excluding it keeps the two disjoint,
+        # so a line's family follows from its shape, not bank order.
         # s4: squid/plain-epoch DTPDs, ere_datetimes_impl.rs:4661-4739.
         r"^(?P<dt>(?P<es>\d{9,11})(?:\.(?P<f>\d{7,9}|\d{1,5}))?)(?![\d.])",
         "epoch",

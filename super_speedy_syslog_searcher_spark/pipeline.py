@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from .operators.assemble import assemble_stage
 from .operators.enrich import enrich_stage
 from .operators.merge import dt_filter, merge_ordered
-from .operators.parse import learn_winners, parse_stage
+from .operators.parse import parse_stage
 from .operators.repair import repair_stage
 
 
@@ -22,32 +22,16 @@ def parse_repair(
     df: DataFrame,
     anchor_year: int = 2024,
     narrow: bool = False,
-    freeze: bool = False,
     scatter: bool = True,
     tz_offset_min: int = 0,
 ) -> DataFrame:
     """narrow=True drops the text payload right after the parse UDF
     (keeping text_len for the summary stats) so the window/shuffle
     stages move ~30% of the bytes; full_merge joins text back by the
-    (conv_id, turn_idx) key just before the final ordered output.
-
-    freeze=True runs s4's sample-then-freeze fast path
-    (syslinereader.rs:920): a bounded head sample learns each conv's
-    dominant pattern, which the main parse then tries before the bank
-    walk.  Output is identical either way (bank entries are pairwise
-    disjoint; differentially verified + tested).  Default OFF because
-    measured A/B at 3M turns shows the vectorized dispatch masks
-    already deliver the freeze's benefit (~1 regex/row): bank walk
-    5.5 s vs frozen 10.7 s (scattered batches mix ~all winners) /
-    6.3 s (conv-clustered batches) — see BENCH/BASELINE.md.  On a
-    conv-bucketed Iceberg layout where a batch holds one conversation
-    the frozen path degenerates to a single extract per batch and
-    becomes the right choice; the plumbing is here for that layout."""
-    winners = learn_winners(df, anchor_year=anchor_year) if freeze else None
+    (conv_id, turn_idx) key just before the final ordered output."""
     p = parse_stage(
         df,
         anchor_year=anchor_year,
-        winners=winners,
         scatter=scatter,
         tz_offset_min=tz_offset_min,
     )
@@ -62,7 +46,6 @@ def assembled(
     df: DataFrame,
     anchor_year: int = 2024,
     narrow: bool = False,
-    freeze: bool = False,
     scatter: bool = True,
     tz_offset_min: int = 0,
 ) -> DataFrame:
@@ -74,7 +57,7 @@ def assembled(
     tests/test_round3_ops.py::test_bucketed_layout_assembles_without_shuffle)."""
     return assemble_stage(
         parse_repair(
-            df, anchor_year, narrow, freeze, scatter=scatter,
+            df, anchor_year, narrow, scatter=scatter,
             tz_offset_min=tz_offset_min,
         )
     )
@@ -88,7 +71,6 @@ def full_merge(
     num_partitions: int | None = None,
     persist_before_sort: bool = True,
     staging: list | None = None,
-    freeze: bool = False,
     tz_offset_min: int = 0,
 ) -> DataFrame:
     """persist_before_sort: a global sort range-partitions by sampling
@@ -100,7 +82,7 @@ def full_merge(
     files) vs no-persist 11-17s.  At 10^12 rows the same role is
     played by the routed Iceberg sink staging table
     (route.write_routed) — sort from columnar storage, parse once."""
-    out = assembled(df, freeze=freeze, tz_offset_min=tz_offset_min)
+    out = assembled(df, tz_offset_min=tz_offset_min)
     if enrich:
         out = enrich_stage(out)
     else:

@@ -62,24 +62,30 @@ def test_scan_tier_position_mapping():
     assert out.loc[2, "ts_parsed"] == pd.Timestamp("2024-02-03 04:05:06")
 
 
-def test_winner_pids_any_table_is_output_invariant():
-    """Frozen dispatch with an arbitrary (even wrong) winner table is
-    bit-identical to bank order — on a non-default index."""
+def test_null_anchor_years_fall_back_to_scalar_default():
+    """The one parse UDF always passes a per-row anchor-year column and
+    the table path sends it all-null: a null year must mean the scalar
+    default, row by row, and an all-null column must equal the scalar
+    call exactly."""
     texts = pd.Series(
         [
-            "2024-01-05T03:04:05 -0800 a",
-            "Jan  5 03:04:05 b",
-            "1704423845.123456 c",
-            "no match",
+            "Jan  5 03:04:05 host app: a",   # no-year syslog
+            "Jan  6 03:04:05 host app: b",
+            "2024-01-05T03:04:05 -0800 c",   # carries its own year
+            "Jan  7 03:04:05 host app: d",
         ],
-        index=[5, 2, 8, 1],
+        index=[4, 9, 0, 2],
     )
-    base = parse_series(texts)
-    for pid in (0.0, 3.0, 7.0, np.nan):
-        frozen = parse_series(
-            texts, winner_pids=pd.Series([pid] * 4, index=texts.index)
-        )
-        pd.testing.assert_frame_equal(base, frozen)
+    years = pd.Series([2019, np.nan, 2019, np.nan], index=texts.index)
+    out = parse_series(texts, anchor_years=years)
+    assert out.loc[4, "ts_parsed"] == pd.Timestamp("2019-01-05 03:04:05")
+    assert out.loc[9, "ts_parsed"] == pd.Timestamp("2024-01-06 03:04:05")
+    assert out.loc[0, "ts_parsed"] == pd.Timestamp("2024-01-05 11:04:05")
+    assert out.loc[2, "ts_parsed"] == pd.Timestamp("2024-01-07 03:04:05")
+    pd.testing.assert_frame_equal(
+        parse_series(texts, anchor_years=pd.Series(np.nan, index=texts.index)),
+        parse_series(texts),
+    )
 
 
 def test_tz_memo_matches_spec():

@@ -1,6 +1,5 @@
-"""Round-3 additions: simhash single-shuffle plan, no-collect winner
-freeze, fixedstruct decode, BOM-less encodings, bz2/xz codecs,
-checkpoint n_buckets guard."""
+"""Round-3 additions: simhash single-shuffle plan, fixedstruct decode,
+BOM-less encodings, bz2/xz codecs, checkpoint n_buckets guard."""
 
 import contextlib
 import io
@@ -44,35 +43,6 @@ def test_simhash_single_explode_no_nibble_inflation(spark):
     vals = {r["doc_id"]: r["simhash_hex"] for r in df.collect()}
     assert vals[1] == vals[2] != vals[3]
     assert len(vals[1]) == 16
-
-
-def test_learn_winners_is_dataframe_no_collect(spark):
-    """Round-2 verdict: the freeze path must not collect a dict to
-    the driver — winners is a DataFrame broadcast-joined in, and the
-    frozen output equals the plain bank-order output."""
-    from super_speedy_syslog_searcher_spark.datagen import transcripts_df
-    from super_speedy_syslog_searcher_spark.operators.parse import (
-        learn_winners,
-        parse_stage,
-    )
-    from super_speedy_syslog_searcher_spark import session
-
-    session.prep(spark)
-    t = transcripts_df(spark, "/root/testdata/sf0.001")
-    winners = learn_winners(t)
-    from pyspark.sql import DataFrame
-
-    assert isinstance(winners, DataFrame)
-    assert winners.columns == ["conv_id", "winner_pid"]
-    plain = parse_stage(t).select(
-        "conv_id", "turn_idx", "ts_parsed", "pattern_id", "sink"
-    )
-    frozen = parse_stage(t, winners=winners).select(
-        "conv_id", "turn_idx", "ts_parsed", "pattern_id", "sink"
-    )
-    a = sorted(map(tuple, plain.collect()))
-    b = sorted(map(tuple, frozen.collect()))
-    assert a == b
 
 
 def test_fixedstruct_roundtrip_unit():

@@ -191,19 +191,6 @@ does evidence.
 """ + "".join(
         f"| {q} | {s:.3f} |\n" for q, s in suite["queries"].items()
     ) + f"""
-parse_frozen is s4's sample-then-freeze fast path (winner-first,
-syslinereader.rs:920) benched against the default masked bank walk
-(parse_only); parse_merge_frozen is the same A/B end-to-end.  With
-the second-level dispatch masks the two parse paths are comparable on
-scattered batches (either can win a given draw inside the ~2x ambient
-drift), while end-to-end the freeze's blockzero learning job
-consistently costs more than the faster UDF saves once the dt-filter
-has pruned the input — so freeze stays an opt-in knob
-(pipeline.full_merge(freeze=True)) for conv-bucketed layouts where a
-batch holds one conversation and the frozen path degenerates to a
-single extract per batch.  Output is identical either way
-(tests/test_patterns.py::test_winner_first_equals_bank_order + the
-differential oracle).
 
 ## 50M-turn N vs 4N record (north_rule evidence at scale)
 

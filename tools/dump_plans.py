@@ -6,10 +6,10 @@ Usage: python tools/dump_plans.py <outdir> [suffix]
             worktree of the round-start commit with suffix 'before'
             to capture the comparison plans.
 
-Covers the frozen bench.py suite shapes (parse_merge / parse_only /
-parse_frozen / sink_counts / hourly_hist / conv_summary /
-dt_window_count) built exactly as bench.py builds them, at repl=1 so
-no job runs — explain is plan-only.
+Covers the bench.py suite shapes (parse_merge / parse_only /
+sink_counts / hourly_hist / conv_summary / dt_window_count) built
+exactly as bench.py builds them, at repl=1 so no job runs — explain
+is plan-only.
 """
 
 from __future__ import annotations
@@ -45,7 +45,6 @@ def main() -> None:
             t, DT_AFTER, DT_BEFORE, persist_before_sort=False
         ),
         "parse_only": P.parse_repair(t),
-        "parse_frozen": P.parse_repair(t, freeze=True),
         "sink_counts": stats.sink_counts(P.assembled(t, narrow=True)),
         "hourly_hist": stats.hourly_histogram(P.assembled(t, narrow=True)),
         "conv_summary": stats.conv_summary(P.parse_repair(t, narrow=True)),
