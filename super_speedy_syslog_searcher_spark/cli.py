@@ -861,7 +861,7 @@ def main(argv: list[str] | None = None) -> int:
         # fixedstruct), text runs the full parse+repair+assemble
         # pipeline with per-source mtime anchor years, binary readers
         # arrive pre-timestamped; one dt-filtered global merge.
-        # --summary re-parses the text view of every source, so
+        # --summary reads this assembled frame (no second parse), so
         # binary sources show their records as pre-stamped rows (the
         # Parsers table covers regex-parsed sources only).
         from .operators.merge import dt_filter as _dtf

@@ -3,8 +3,10 @@
 One pandas UDF over (anchor year, text), so one ArrowEvalPython node
 in the physical plan; everything before and after stays in
 WholeStageCodegen.  Column pruning matters: the UDF reads only
-``text`` (plus ``ts`` for log-file sources) — Catalyst prunes the
-parquet scan accordingly.
+``text`` (plus ``ts`` with ``anchor_from_ts``) — Catalyst prunes the
+parquet scan accordingly.  Log-file searches
+(``sources.logfiles.assembled_from_paths``) do not come here: they
+parse each decoded batch inside the decoder's mapInPandas.
 """
 
 from __future__ import annotations
@@ -20,7 +22,6 @@ PARSE_COLS = ["ts_parsed", "pattern_id", "sink", "dt_beg", "dt_end", "uptime_us"
 
 def parse_stage(
     df: DataFrame,
-    text_col: str = "text",
     anchor_year: int = ANCHOR_YEAR_DEFAULT,
     scatter: bool = True,
     tz_offset_min: int = 0,
@@ -67,5 +68,5 @@ def parse_stage(
     # the one parse UDF takes a per-row anchor year; null → anchor_year
     anchor = F.year("ts") if anchor_from_ts else F.lit(None).cast("int")
     udf = make_parse_udf(anchor_year, tz_offset_min)
-    parsed = df.withColumn("_p", udf(anchor, F.col(text_col)))
+    parsed = df.withColumn("_p", udf(anchor, F.col("text")))
     return parsed.select("*", *[f"_p.{c}" for c in PARSE_COLS]).drop("_p")

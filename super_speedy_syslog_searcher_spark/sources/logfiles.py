@@ -11,8 +11,10 @@ file into one processing loop (s4.rs processing_loop).  Here:
    records of the evtx / journal / utmp / ASL / ETL / ODL readers.
    Every decoder emits one row shape (ROWS_SCHEMA: the transcripts
    columns plus ``sink``, null for text and the kind for pre-stamped
-   binary records).  All rows take one scatter exchange into parse →
-   repair → assemble, so each file is decoded once per search.
+   binary records), and the same mapInPandas parses each decoded
+   batch's text lines, so a search crosses into Python once per file.
+   Rows then go straight into the per-conversation windows (repair →
+   assemble).
  * ``read_log_files_decoded`` — the same decode with every file read
    as text (BOM / null-pattern encoding sniff, per-codec
    decompression).
@@ -45,6 +47,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..functions.datetime_parse import RESULT_FIELDS, parse_series
 
 # BOM sniff table, longest first (UTF-32LE's BOM starts with
 # UTF-16LE's) — detect_filetype_text_encoding parity
@@ -286,6 +290,11 @@ ROWS_SCHEMA = (
     "tool string, ts timestamp, sink string"
 )
 _ROW_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "sink"]
+# ROWS_SCHEMA with sink renamed _stamp, then the parse columns
+PARSED_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp, _stamp string, " + RESULT_FIELDS
+)
 
 
 def _warn_failed(path: str, ex: Exception) -> None:
@@ -333,6 +342,17 @@ def read_binary(
     )
 
 
+def _split_lines(s: str) -> list[str]:
+    """Lines of ``s`` split at ``\\r\\n``, ``\\r`` and ``\\n`` only — the
+    terminators of the Spark text source (Hadoop LineReader) — with
+    no trailing empty line.  ``str.splitlines`` also breaks at form
+    feeds, RS/GS/FS, NEL and U+2028/9, which log lines may hold."""
+    lines = s.replace("\r\n", "\n").replace("\r", "\n").split("\n")
+    if not lines[-1]:
+        lines.pop()
+    return lines
+
+
 def _text_rows(
     data: bytes, mtime, charset: str | None = None
 ) -> pd.DataFrame | None:
@@ -345,7 +365,7 @@ def _text_rows(
         if e == enc and data.startswith(bom):
             data = data[len(bom):]
             break
-    lines = data.decode(enc, errors="replace").splitlines()
+    lines = _split_lines(data.decode(enc, errors="replace"))
     if not lines:
         return None
     # bulk per-file frame: one list→Series for the lines, np.arange
@@ -444,6 +464,28 @@ def _decode_routed(
             yield pd.concat(frames, ignore_index=True)[_ROW_COLS]
 
 
+def _decode_parsed(
+    batches: Iterator[pd.DataFrame], tz_offset_min: int = 0
+) -> Iterator[pd.DataFrame]:
+    """``_decode_routed``'s rows, sink renamed ``_stamp``, with the
+    parse columns of each decoded batch alongside (PARSED_SCHEMA).
+
+    Text rows parse with their own source's mtime year as the anchor
+    of no-year formats (syslogprocessor.rs:628-734); pre-stamped
+    binary rows parse a null line.  One ``parse_series`` call per
+    batch, outside the per-file fault isolation: the kernel has a
+    fixed per-call cost and never raises."""
+    for rows in _decode_routed(batches):
+        rows = rows.rename(columns={"sink": "_stamp"})
+        text = rows["text"].where(rows["_stamp"].isna(), None)
+        parsed = parse_series(
+            text,
+            tz_offset_min=tz_offset_min,
+            anchor_years=rows["ts"].dt.year,
+        )
+        yield pd.concat([rows, parsed], axis=1)
+
+
 def _load_files(spark: SparkSession, paths) -> DataFrame:
     """One binaryFile scan of literal ``paths``, a whole file per row."""
     if isinstance(paths, str):
@@ -453,11 +495,13 @@ def _load_files(spark: SparkSession, paths) -> DataFrame:
     )
 
 
-def _routed_rows(spark: SparkSession, paths, decode) -> DataFrame:
+def _routed_rows(
+    spark: SparkSession, paths, decode, schema: str = ROWS_SCHEMA
+) -> DataFrame:
     """One binaryFile scan of ``paths`` and one mapInPandas ``decode``."""
     return _load_files(spark, paths).select(
         "path", "modificationTime", "content"
-    ).mapInPandas(decode, ROWS_SCHEMA)
+    ).mapInPandas(decode, schema)
 
 
 def _expand_paths(paths: list[str]) -> tuple[list[str], list[str]]:
@@ -493,34 +537,35 @@ def assembled_from_paths(
     invalid_out: list | None = None,
 ) -> DataFrame:
     """`s4 <paths>` parity: every input file, whatever its kind, in
-    one routed decode → the assembled schema; feeds dt_filter +
-    merge_ordered unchanged.
+    one routed decode + parse → the assembled schema; feeds dt_filter
+    + merge_ordered unchanged.
 
     * One scan: a single binaryFile scan reads every expanded path.
-    * One decoder: a single mapInPandas routes each file — and each
-      tar member, by its inner type — to its decoder by
+    * One Python pass: a single mapInPandas routes each file — and
+      each tar member, by its inner type — to its decoder by
       path_to_filetype (the reference's per-LogMessageType reader
-      fan-in, s4.rs processing_loop).  Every decoder emits
-      ROWS_SCHEMA.
-    * One exchange: all rows take the ``xxhash64(conv_id, turn_idx)``
-      scatter exchange, then one lineage: text lines get the parse
-      with per-source mtime anchor years → repair → sysline assembly;
-      the binary readers' pre-stamped records (non-null sink) give
-      the parse a null line, and one final projection stamps their
-      own ts, sink and turn as the message's.  Every file is
-      decoded once, and the range sort downstream samples the
-      shuffled rows, not the files.
+      fan-in, s4.rs processing_loop), then parses the batch's text
+      lines with per-source mtime anchor years and the job's
+      ``tz_offset_min``.  The binary readers' pre-stamped records
+      (non-null sink) parse a null line.
+    * One exchange: the rows go straight into the conv_id window
+      exchange → repair → sysline assembly, and one final projection
+      stamps the binary records' own ts, sink and turn as the
+      message's.  A source is one file, so the per-conversation
+      windows never mix text and binary rows.  Binary records share
+      the lineage instead of a branch split off and unioned back:
+      each branch would run the scan and the decoder again.
 
-    Binary records take the same lineage instead of a filtered
-    branch unioned back: a filter above the exchange is pushed below
-    it by the optimizer, which splits the exchange in two and runs
-    the scan and the decoder once per branch.  A source is one file,
-    so the per-conversation windows never mix text and binary rows.
+    Trade-off: a file's lines parse in the task that decodes it, like
+    s4's one reader thread per file, so one very large file parses on
+    one core instead of being scattered across all of them.  Measured
+    on one 108k-line file on 4 cores, per search: wall 3.0 → 3.4 s,
+    CPU 6.7 → 4.9 s.  Files too big for one task belong in the table
+    path (see ``read_log_files``).
 
     An all-invalid input set raises ValueError; invalid inputs are
     warned about and appended to ``invalid_out``."""
     from ..operators.assemble import assemble_stage
-    from ..operators.parse import parse_stage
     from ..operators.repair import repair_stage
 
     if isinstance(paths, str):
@@ -532,22 +577,12 @@ def assembled_from_paths(
         invalid_out.extend(invalid)
     if not files:
         raise ValueError(f"no readable inputs among {paths!r}")
-    rows = (
-        _routed_rows(spark, files, _decode_routed)
-        .withColumnRenamed("sink", "_stamp")
-        .repartition(
-            spark.sparkContext.defaultParallelism,
-            F.xxhash64("conv_id", "turn_idx"),
-        )
+    parsed = _routed_rows(
+        spark, files,
+        functools.partial(_decode_parsed, tz_offset_min=tz_offset_min),
+        PARSED_SCHEMA,
     )
     stamped = F.col("_stamp").isNotNull()
-    parsed = parse_stage(
-        rows.withColumn("_line", F.when(~stamped, F.col("text"))),
-        text_col="_line",
-        scatter=False,
-        anchor_from_ts=True,
-        tz_offset_min=tz_offset_min,
-    )
     return assemble_stage(repair_stage(parsed)).select(
         "conv_id", "turn_idx", "role", "tool", "text", "ts",
         F.when(stamped, F.col("ts")).otherwise(F.col("ts_eff"))

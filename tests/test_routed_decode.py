@@ -299,6 +299,30 @@ def test_one_scan_one_decoder_in_search_plan(spark, mixed_dir):
     plan = _executed_plan(out)
     assert plan.count("FileScan binaryFile") == 1, plan
     assert plan.count("MapInPandas") == 1, plan
+    # lines parse inside the decoder: no second Python pass and no
+    # scatter exchange ahead of one
+    assert "ArrowEvalPython" not in plan, plan
+    assert "xxhash64(conv_id" not in plan, plan
+
+
+def test_text_readers_split_lines_alike(spark, tmp_path):
+    """Lines end at \\n, \\r\\n and \\r only, as in the Spark text
+    source: a form feed, an RS and a U+2028 inside a line do not split
+    it, and all three text readers number the same lines."""
+    p = tmp_path / "ctl.log"
+    p.write_bytes(
+        "2024-01-05T03:00:10 page\x0cbreak\n"
+        "2024-01-05T03:00:20 record\x1eseparator\r\n"
+        "2024-01-05T03:00:30 line\u2028separator\rlast line\n".encode()
+    )
+
+    def lines(df):
+        return sorted((r.turn_idx, r.text) for r in df.collect())
+
+    want = lines(L.read_log_files(spark, [str(p)]))
+    assert len(want) == 4
+    assert lines(L.read_log_files_decoded(spark, [str(p)])) == want
+    assert lines(L.assembled_from_paths(spark, [str(p)])) == want
 
 
 # -- fault isolation -------------------------------------------------------

@@ -143,6 +143,44 @@ def test_anchor_year_from_source_mtime(spark, tmp_path):
     assert got["y2023.log"] == dt.datetime(2023, 1, 5, 3, 4, 5)
 
 
+def test_anchor_year_from_source_mtime_in_routed_decode(spark, tmp_path):
+    """assembled_from_paths anchors each source's no-year lines in its
+    own mtime year: two files set to 2023 and 2025 with os.utime, and
+    a tar member whose member mtime is in 2021."""
+    import datetime as dt
+    import io
+    import os
+    import tarfile
+
+    from super_speedy_syslog_searcher_spark.sources.logfiles import (
+        assembled_from_paths,
+    )
+
+    line = b"<14>Jan  5 03:04:05 HOST app: no year\n"
+
+    def epoch(year):
+        return dt.datetime(year, 6, 1, tzinfo=dt.timezone.utc).timestamp()
+
+    for name, year in (("y2023.log", 2023), ("y2025.log", 2025)):
+        f = tmp_path / name
+        f.write_bytes(line)
+        os.utime(f, (epoch(year), epoch(year)))
+    member = tarfile.TarInfo("y2021.log")
+    member.size = len(line)
+    member.mtime = epoch(2021)
+    with tarfile.open(tmp_path / "bundle.tar", "w") as tf:
+        tf.addfile(member, io.BytesIO(line))
+    got = {
+        r["conv_id"].rsplit("/", 1)[-1]: r["ts_eff"]
+        for r in assembled_from_paths(spark, [str(tmp_path)]).collect()
+    }
+    assert got == {
+        "y2023.log": dt.datetime(2023, 1, 5, 3, 4, 5),
+        "y2025.log": dt.datetime(2025, 1, 5, 3, 4, 5),
+        "bundle.tar!y2021.log": dt.datetime(2021, 1, 5, 3, 4, 5),
+    }
+
+
 def test_filter_grammar_tz_invariants():
     """Property sweep: values carrying their OWN tz are invariant to
     the default offset; naive values shift by exactly the default;
