@@ -5,7 +5,7 @@ derivation at $SPARK_GRAFT_SF_DIR (default sf0.1), local[$SPARK_GRAFT_CPUS].
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     cores (default 32)
+  SPARK_GRAFT_CPUS     cores (default: the CPUs this process may use)
   S4SPARK_BENCH_REPL   deterministic input replication factor (default 10)
 """
 
@@ -59,14 +59,15 @@ def run(spark, sf_dir: str, repl: int) -> dict:
     n_turns = t.count()  # materialize input so timings measure the pipeline
     # warm the Python UDF workers (one-time fork cost, ~5-15s for 32
     # workers; hyperfine-style warmup, not part of steady-state cost).
-    # Must touch every core → a 32-partition range, not a limit().
+    # Must touch every core → a one-partition-per-core range, not a
+    # limit().
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def _warm(s):  # noqa: ANN001
         return s
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = spark.sparkContext.defaultParallelism
     _noop_write(
         spark.range(0, cores * 10, 1, cores).select(_warm("id"))
     )

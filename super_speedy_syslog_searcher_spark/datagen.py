@@ -535,11 +535,3 @@ def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return spark.sql(transcripts_sql("spark"))
 
-
-def expected_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transcripts + expected-parse columns (for tests; the pipeline
-    itself never reads the _-prefixed columns)."""
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "events"
-    )
-    return spark.sql(expected_sql("spark"))

@@ -701,10 +701,7 @@ def parse_series(
     )
 
 
-def make_parse_udf(
-    anchor_year: int = ANCHOR_YEAR_DEFAULT,
-    tz_offset_min: int = 0,
-):
+def make_parse_udf(tz_offset_min: int = 0):
     """Arrow-batched pandas UDF over (anchor_year, text) columns.
 
     The JVM ships Arrow batches to a long-lived Python worker — the
@@ -714,8 +711,8 @@ def make_parse_udf(
 
     The int anchor-year column seeds each row's no-year formats (a
     log file's mtime year, syslogprocessor.rs:628-734); a null falls
-    back to ``anchor_year``, so a caller without per-row years passes
-    a null literal (operators/parse.py decides which).
+    back to ANCHOR_YEAR_DEFAULT, so a caller without per-row years
+    passes a null literal (operators/parse.py decides which).
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -724,10 +721,7 @@ def make_parse_udf(
         anchor_years: pd.Series, texts: pd.Series
     ) -> pd.DataFrame:
         return parse_series(
-            texts,
-            anchor_year=anchor_year,
-            tz_offset_min=tz_offset_min,
-            anchor_years=anchor_years,
+            texts, tz_offset_min=tz_offset_min, anchor_years=anchor_years
         )
 
     return parse_text

@@ -30,16 +30,13 @@ from .repair import repair_stage
 
 
 def write_parsed_bucketed(
-    df: DataFrame,
-    table: str,
-    n_buckets: int = 32,
-    anchor_year: int = 2024,
+    df: DataFrame, table: str, n_buckets: int = 32
 ) -> None:
     """Parse-at-ingest: run the pattern-bank UDF once and store the
     result bucketed+sorted by conversation.  n_buckets should equal
     spark.sql.shuffle.partitions (or a divisor the session sets) so
     reads line up with window requirements shuffle-free."""
-    parsed = parse_stage(df, anchor_year=anchor_year)
+    parsed = parse_stage(df)
     (
         parsed.write.mode("overwrite")
         .bucketBy(n_buckets, "conv_id")

@@ -15,17 +15,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.datetime_parse import make_parse_udf
-from ..patterns import ANCHOR_YEAR_DEFAULT
 
 PARSE_COLS = ["ts_parsed", "pattern_id", "sink", "dt_beg", "dt_end", "uptime_us"]
 
 
 def parse_stage(
-    df: DataFrame,
-    anchor_year: int = ANCHOR_YEAR_DEFAULT,
-    scatter: bool = True,
-    tz_offset_min: int = 0,
-    anchor_from_ts: bool = False,
+    df: DataFrame, tz_offset_min: int = 0, anchor_from_ts: bool = False
 ) -> DataFrame:
     """transcripts → transcripts + (ts_parsed, pattern_id, sink,
     dt_beg, dt_end, uptime_us).
@@ -34,24 +29,23 @@ def parse_stage(
     bytes_to_regex_to_datetime (syslinereader.rs:1733,
     datetime.rs:1892) executed per line; here one vectorized pass.
 
-    scatter: parse is row-independent, but the input is often
+    Scatter: parse is row-independent, but the input is often
     partitioned by conv_id (upstream windows / table layout) and a
     hot conversation then makes one straggler task own ~20% of the
-    rows.  Hash-scattering the rows on their unique (conv_id,
+    rows.  Batch inputs are hash-scattered on their unique (conv_id,
     turn_idx) key (round-robin when the input has no such key) to the
-    cluster's parallelism before the UDF removes the straggler — the
-    Spark analogue of s4's one-huge-file thread imbalance, and the
-    skew fixture's reason to exist.  At 10^12 rows the same is
-    achieved by file-split-sized input partitions (maxPartitionBytes),
-    so the shuffle is skipped when the input is already
-    well-partitioned.
+    cluster's parallelism before the UDF, which removes the straggler
+    — the Spark analogue of s4's one-huge-file thread imbalance, and
+    the skew fixture's reason to exist.  Streaming inputs are not
+    scattered: their micro-batches are already small and a
+    repartition would add a per-batch shuffle.
 
     anchor_from_ts: seed each row's no-year formats from the year of
     its ``ts`` column (log-file sources' mtime stand-in,
     syslogprocessor.rs:628-734); otherwise every row uses
-    anchor_year.
+    ANCHOR_YEAR_DEFAULT.
     """
-    if scatter:
+    if not df.isStreaming:
         sc = df.sparkSession.sparkContext
         n = sc.defaultParallelism
         if "conv_id" in df.columns and "turn_idx" in df.columns:
@@ -65,8 +59,8 @@ def parse_stage(
             df = df.repartition(n, F.xxhash64("conv_id", "turn_idx"))
         else:
             df = df.repartition(n)
-    # the one parse UDF takes a per-row anchor year; null → anchor_year
+    # the one parse UDF takes a per-row anchor year; null → the default
     anchor = F.year("ts") if anchor_from_ts else F.lit(None).cast("int")
-    udf = make_parse_udf(anchor_year, tz_offset_min)
+    udf = make_parse_udf(tz_offset_min)
     parsed = df.withColumn("_p", udf(anchor, F.col("text")))
     return parsed.select("*", *[f"_p.{c}" for c in PARSE_COLS]).drop("_p")

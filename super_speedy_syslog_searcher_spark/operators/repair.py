@@ -30,6 +30,10 @@ ROLLOVER_HOURS = 25  # syslogprocessor.rs:213
 # so new noyear families are repaired automatically)
 NOYEAR_PATTERN_IDS = tuple(p.pid for p in PATTERNS if p.noyear)
 UPTIME_PATTERN_IDS = tuple(p.pid for p in PATTERNS if p.kind == "uptime")
+# repair_stage reads the ORIGINAL ts_parsed for both fixups
+assert not set(UPTIME_PATTERN_IDS) & set(NOYEAR_PATTERN_IDS), (
+    "fused repair requires uptime/noyear pattern sets disjoint"
+)
 
 
 def anchor_uptime(df: DataFrame) -> DataFrame:
@@ -51,14 +55,14 @@ def anchor_uptime(df: DataFrame) -> DataFrame:
     )
 
 
-def repair_stage_fused(
-    df: DataFrame, noyear_pattern_ids: tuple = NOYEAR_PATTERN_IDS
-) -> DataFrame:
-    """Single-exchange fused repair: identical output to
-    ``repair_noyear_rollover(anchor_uptime(df))`` (the two fixups act
-    on DISJOINT row sets — uptime pattern ids are never in the noyear
-    set, asserted below — so each window family can read the ORIGINAL
-    ts_parsed and both fixups compose in one final CASE).
+def repair_stage(df: DataFrame) -> DataFrame:
+    """Full repair, uptime anchoring then year rollover, in one
+    exchange: identical output to the chained reference expression
+    ``repair_noyear_rollover(anchor_uptime(df))`` (tests/test_repair.py
+    pins the equivalence).  The two fixups act on DISJOINT row sets —
+    uptime pattern ids are never in the noyear set, asserted at import
+    — so each window family can read the ORIGINAL ts_parsed and both
+    fixups compose in one final CASE.
 
     Plan win vs the chained form (guide §2.4: two operations keyed
     the same way share one exchange; fewer Window nodes = fewer
@@ -84,9 +88,6 @@ def repair_stage_fused(
     needed 4 Window nodes + 2 Sorts
     (plans/r06/parse_only_{before,after}.txt).
     """
-    assert not set(UPTIME_PATTERN_IDS) & set(noyear_pattern_ids), (
-        "fused repair requires uptime/noyear pattern sets disjoint"
-    )
     w_ord = Window.partitionBy("conv_id").orderBy("turn_idx")
     w_full = w_ord.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -94,7 +95,7 @@ def repair_stage_fused(
     w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     has_up = F.col("uptime_us").isNotNull()
-    is_ny = F.col("pattern_id").isin(*noyear_pattern_ids)
+    is_ny = F.col("pattern_id").isin(*NOYEAR_PATTERN_IDS)
     ny_ts = F.when(is_ny, F.col("ts_parsed"))
     anchor_us = F.max(
         F.when(has_up, F.unix_micros(F.col("ts")))
@@ -140,13 +141,11 @@ def repair_stage_fused(
     )
 
 
-def repair_noyear_rollover(
-    df: DataFrame, noyear_pattern_ids: tuple = NOYEAR_PATTERN_IDS
-) -> DataFrame:
+def repair_noyear_rollover(df: DataFrame) -> DataFrame:
     """Subtract k years where k = # of >25h-backwards jumps after the
     row among the conv's no-year rows (all such rows were parsed with
     the anchor year, so a backwards jump marks a year boundary)."""
-    is_ny = F.col("pattern_id").isin(*noyear_pattern_ids)
+    is_ny = F.col("pattern_id").isin(*NOYEAR_PATTERN_IDS)
     ny_ts = F.when(is_ny, F.col("ts_parsed"))
     w_ord = Window.partitionBy("conv_id").orderBy("turn_idx")
     prev = F.last(ny_ts, ignorenulls=True).over(
@@ -176,10 +175,3 @@ def repair_noyear_rollover(
         ).drop("_b")
     )
 
-
-def repair_stage(df: DataFrame) -> DataFrame:
-    """Full repair: uptime anchoring then year rollover (fused
-    single-pass form; ``repair_noyear_rollover(anchor_uptime(df))``
-    is the reference chained expression it provably equals —
-    tests/test_repair.py pins the equivalence)."""
-    return repair_stage_fused(df)

@@ -13,14 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def routed_counts(assembled: DataFrame) -> DataFrame:
-    """Per-(sink, role) routed-row counts — the per-sink tally the
-    north_rule requires to match the oracle."""
-    return assembled.groupBy(
-        F.col("sink_eff").alias("sink"), F.col("role")
-    ).agg(F.count("*").alias("rows"))
-
-
 def write_routed(
     assembled: DataFrame, path: str, mode: str = "overwrite"
 ) -> None:
@@ -39,16 +31,14 @@ def write_routed(
 def write_routed_iceberg(assembled: DataFrame, table: str) -> None:
     """Iceberg fan-out sink: the DataFrameWriterV2 path the cluster
     deployment uses (SURVEY §1.4) — createOrReplace on first write,
-    dynamic partition overwrite on re-runs keeps checkpoint resume
-    idempotent.  The sandbox ships no Iceberg jars, so this raises the
-    underlying catalog error there; the code path is the real one and
-    runs unchanged once `spark.sql.catalog.<name>` is configured
-    (tests assert the clean failure mode).
+    dynamic partition overwrite (``overwritePartitions``, dynamic by
+    definition, so no session conf is touched) on re-runs keeps
+    checkpoint resume idempotent.  Without an Iceberg catalog this
+    raises the underlying catalog error; the code path is the real one
+    and runs unchanged once `spark.sql.catalog.<name>` is configured
+    (tests/test_checkpoint.py asserts the clean failure mode).
     """
     spark = assembled.sparkSession
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    )
     writer = assembled.writeTo(table).partitionedBy(F.col("sink_eff"))
     if spark.catalog.tableExists(table):
         writer.overwritePartitions()

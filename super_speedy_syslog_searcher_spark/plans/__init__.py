@@ -31,15 +31,3 @@ def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df)
 
-
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    """Count WholeStageCodegen regions — wider is better (fewer
-    interpreter/exchange breaks).  NOTE: with AQE enabled (our
-    default) codegen is decided per query stage at runtime, so this
-    returns 0 on un-executed adaptive plans; build the DataFrame
-    under spark.sql.adaptive.enabled=false to inspect statically."""
-    import re
-
-    plan = explain_str(df, "codegen")
-    m = re.search(r"Found (\d+) WholeStageCodegen subtrees", plan)
-    return int(m.group(1)) if m else 0

@@ -1,9 +1,11 @@
 """SparkSession factory + per-query session hygiene.
 
-Local-mode defaults tuned for the sandbox (single JVM, 32 threads);
-on a real cluster the same code runs unchanged — only master/memory
-change.  All timestamp semantics are pinned to UTC so results are
-engine-portable (DuckDB oracle timestamps are UTC-naive).
+Local-mode defaults fit the host: one JVM with one task thread and
+one shuffle partition per CPU this process may run on
+(``$SPARK_GRAFT_CPUS`` overrides the count); on a real cluster the
+same code runs unchanged — only master/memory change.  All timestamp
+semantics are pinned to UTC so results are engine-portable (DuckDB
+oracle timestamps are UTC-naive).
 """
 
 from __future__ import annotations
@@ -16,7 +18,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     master: str | None = None,
     app_name: str = "s4spark",
-    shuffle_partitions: str | int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession with pipeline defaults.
@@ -24,14 +25,11 @@ def get_spark(
     AQE is on (runtime coalesce + skew-split), Arrow is on (all our
     UDFs are pandas/Arrow-vectorized), session tz is UTC.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or cpus),
-        )
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -18,8 +18,6 @@ file into one processing loop (s4.rs processing_loop).  Here:
  * ``read_log_files_decoded`` — the same decode with every file read
    as text (BOM / null-pattern encoding sniff, per-codec
    decompression).
- * ``read_log_files`` — the Spark text source (UTF-8 only; line
-   numbers from a per-file window over its preserved order).
  * ``read_binary`` / ``decode_file_batches`` — the body of the
    per-kind binary readers (read_evtx, read_journal, …).
 
@@ -41,11 +39,10 @@ import os
 import sys
 import tarfile
 from collections.abc import Callable, Iterator
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.datetime_parse import RESULT_FIELDS, parse_series
@@ -88,78 +85,6 @@ def sniff_encoding(head: bytes) -> str:
         if sum(p[0] == 0 and p[1] != 0 for p in pairs) > 0.8 * len(pairs):
             return "utf-16-be"
     return "utf-8"
-
-
-def read_log_files(
-    spark: SparkSession, paths: list[str] | str, mtime_map: dict | None = None
-) -> DataFrame:
-    """paths (files/globs; .gz/.bz2 transparently decompressed) →
-    DataFrame(conv_id, turn_idx, role, text, tool, ts).
-
-    ts carries the file mtime (s4 seeds no-year formats and uptime
-    anchors from mtime, src/readers/syslogprocessor.rs:628,740); pass
-    mtime_map={path: datetime} to override (tests / object stores).
-
-    Line numbering: the text source emits rows in file order within
-    each split; for exact global per-file numbering we order by the
-    block-offset-monotonic ``monotonically_increasing_id()`` inside
-    the per-file window — correct while each file maps to one split
-    (true for gz — non-splittable — and for text files below
-    maxPartitionBytes; larger splittable files should come in via the
-    transcripts table instead).
-    """
-    if isinstance(paths, str):
-        paths = [paths]
-    df = (
-        spark.read.text(paths)
-        .withColumn("conv_id", F.input_file_name())
-        .withColumn("_mid", F.monotonically_increasing_id())
-    )
-    w = Window.partitionBy("conv_id").orderBy("_mid")
-    out = (
-        df.withColumn("turn_idx", (F.row_number().over(w) - 1).cast("int"))
-        .withColumnRenamed("value", "text")
-        .drop("_mid")
-    )
-    if mtime_map:
-        mt = F.create_map(
-            *[
-                x
-                for path, ts in mtime_map.items()
-                for x in (F.lit(path), F.lit(ts))
-            ]
-        )
-        ts_col = mt[F.col("conv_id")].cast("timestamp")
-    else:
-        local = {}
-        # expand globs and build keys exactly as input_file_name()
-        # prints them (percent-encoded file:// URIs via Path.as_uri),
-        # so paths with spaces/unicode still resolve their mtime
-        for p in paths:
-            for g in _glob.glob(p) or ([p] if os.path.isfile(p) else []):
-                if os.path.isfile(g):
-                    local[Path(g).resolve().as_uri()] = int(
-                        os.path.getmtime(g)
-                    )
-        if local:
-            mt = F.create_map(
-                *[
-                    x
-                    for path, ts in local.items()
-                    for x in (F.lit(path), F.lit(ts))
-                ]
-            )
-            ts_col = F.timestamp_seconds(mt[F.col("conv_id")])
-        else:
-            ts_col = F.lit(None).cast("timestamp")
-    return out.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("log").alias("role"),
-        "text",
-        F.lit("none").alias("tool"),
-        ts_col.alias("ts"),
-    )
 
 
 def _decompress(path: str, data: bytes) -> bytes:
@@ -206,17 +131,16 @@ def hadoop_glob_escape(path: str) -> str:
 
 
 def read_log_files_decoded(
-    spark: SparkSession,
-    paths: list[str] | str,
-    charset: str | None = None,
+    spark: SparkSession, paths: list[str] | str
 ) -> DataFrame:
-    """Encoding-aware log-file source: UTF-8/16/32 ± BOM.
+    """paths (literal files) → DataFrame(conv_id, turn_idx, role,
+    text, tool, ts): every file read as text, UTF-8/16/32 ± BOM.
 
-    The Spark text source is UTF-8-only, so non-UTF-8 files take the
+    The Spark text source is UTF-8-only, so every file takes the
     reference's own route (filepreprocessor.rs:278-360 detects BOM and
     transcodes the file): whole files via the binaryFile source, then
-    an Arrow-batched mapInPandas decodes (BOM sniff unless charset is
-    forced), splits lines, and numbers turns.  A file is the unit of
+    an Arrow-batched mapInPandas decodes (BOM / null-pattern sniff),
+    splits lines, and numbers turns.  A file is the unit of
     parallelism — identical to s4's one-reader-per-file model; the
     binaryFile source never splits a file, so line numbering is exact.
     Compressed payloads are decompressed before the sniff (BlockReader
@@ -224,13 +148,12 @@ def read_log_files_decoded(
     carries the file's modificationTime, the same mtime seed s4 uses
     for no-year/uptime anchoring.
 
-    Output shape == read_log_files == transcripts: the whole pipeline
-    runs unchanged on the result.  Every file is read as text here;
+    Output shape == transcripts: the whole pipeline runs unchanged on
+    the result.  Every file is read as text here;
     ``assembled_from_paths`` is the routed form of the same decode.
     """
     return _routed_rows(
-        spark, paths, functools.partial(_decode_routed, charset=charset,
-                                        route=False)
+        spark, paths, functools.partial(_decode_routed, route=False)
     ).drop("sink")
 
 
@@ -353,12 +276,10 @@ def _split_lines(s: str) -> list[str]:
     return lines
 
 
-def _text_rows(
-    data: bytes, mtime, charset: str | None = None
-) -> pd.DataFrame | None:
+def _text_rows(data: bytes, mtime) -> pd.DataFrame | None:
     """One text file's (decompressed) bytes → its lines in the row
     shape minus conv_id/tool; None when it has no lines."""
-    enc = charset or sniff_encoding(data[:64])
+    enc = sniff_encoding(data[:64])
     # the explicit-endian codecs keep U+FEFF; drop the BOM bytes so
     # line 0 starts at the real text
     for bom, e in _BOM_ENCODINGS:
@@ -418,9 +339,7 @@ def _sources(path: str, mtime, content: bytes):
 
 
 def _decode_routed(
-    batches: Iterator[pd.DataFrame],
-    charset: str | None = None,
-    route: bool = True,
+    batches: Iterator[pd.DataFrame], route: bool = True
 ) -> Iterator[pd.DataFrame]:
     """(path, modificationTime, content) batches → ROWS_SCHEMA frames.
 
@@ -447,7 +366,7 @@ def _decode_routed(
                     try:
                         data = _decompress(name, raw)
                         if kind == "text":
-                            f = _text_rows(data, mt, charset)
+                            f = _text_rows(data, mt)
                         else:
                             decode, as_rows = routes[kind]
                             f = as_rows(decode(data))
@@ -561,7 +480,7 @@ def assembled_from_paths(
     one core instead of being scattered across all of them.  Measured
     on one 108k-line file on 4 cores, per search: wall 3.0 → 3.4 s,
     CPU 6.7 → 4.9 s.  Files too big for one task belong in the table
-    path (see ``read_log_files``).
+    path (a transcripts-shaped table through ``pipeline.assembled``).
 
     An all-invalid input set raises ValueError; invalid inputs are
     warned about and appended to ``invalid_out``."""

@@ -13,10 +13,11 @@ Maps the reference's streaming-shaped behaviors (SURVEY.md §2.10):
  * `is_last` end-of-stream flag (src/s4/s4.rs:4538) →
    Trigger.AvailableNow (drain what exists, then stop)
 
-The ordered-window stages (year repair, sysline assembly) are batch
-concerns — in streaming they would be ``applyInPandasWithState`` per
-conv_id; the parse + route + windowed-agg path here is fully
-incremental and restartable from the checkpoint dir.
+The parse + route + windowed-agg path here is fully incremental and
+restartable from the checkpoint dir.  The ordered per-conversation
+stages (uptime anchoring, sysline assembly) run as
+``applyInPandasWithState`` per conv_id in ``streaming/stateful.py``;
+year-rollover repair stays batch-only.
 """
 
 from __future__ import annotations
@@ -44,16 +45,10 @@ def stream_source(
     )
 
 
-def parsed_stream(stream: DataFrame) -> DataFrame:
-    """Parse stage on the stream (scatter off: streaming micro-batches
-    are already small and repartition would add a per-batch shuffle)."""
-    return parse_stage(stream, scatter=False)
-
-
 def hourly_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Watermarked tumbling-window per-sink hourly counts — the
     streaming form of stats.hourly_histogram + sink routing."""
-    parsed = parsed_stream(stream)
+    parsed = parse_stage(stream)
     return (
         parsed.filter(F.col("ts_parsed").isNotNull())
         .withWatermark("ts_parsed", watermark)
@@ -74,7 +69,7 @@ def run_routed_available_now(
     checkpoint dir → only new files are processed (exactly-once file
     tracking via the stream checkpoint)."""
     q = (
-        parsed_stream(stream_source(spark, in_dir))
+        parse_stage(stream_source(spark, in_dir))
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)

@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .pipeline import parsed_stream
+from ..operators.parse import parse_stage
 
 OUTPUT_SCHEMA = (
     "conv_id string, turn_idx int, text string, ts_parsed timestamp, "
@@ -152,7 +152,7 @@ def assembled_stream(
     continuation rows always pass (the watermark predicate keeps
     nulls).
     """
-    parsed = parsed_stream(stream).select(
+    parsed = parse_stage(stream).select(
         "conv_id", "turn_idx", "text", "ts_parsed", "sink",
         "ts", "uptime_us",
     )

@@ -74,3 +74,25 @@ def test_resume_noop_when_complete(spark, tmp_path):
     t = _small(transcripts_df(spark, SF_SMOKE))
     cp.run_partitioned(t, out, run_id="a")
     assert cp.run_partitioned(t, out, run_id="b") == []
+
+
+def test_write_routed_iceberg_fails_cleanly_without_catalog(spark):
+    """Without an Iceberg catalog the V2 write raises the catalog's
+    error, and the failed call leaves the session's partition
+    overwrite mode as it was (a later write_routed overwrite in the
+    same session must not turn dynamic)."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from super_speedy_syslog_searcher_spark.operators.route import (
+        write_routed_iceberg,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    df = spark.createDataFrame([("iso8601_tz", 1)], "sink_eff string, n int")
+    with pytest.raises(
+        AnalysisException, match="UNSUPPORTED_FEATURE.TABLE_OPERATION"
+    ):
+        write_routed_iceberg(df, "routed_no_catalog")
+    assert spark.conf.get(key) == before

@@ -28,7 +28,7 @@ def test_year_rollover(spark):
         ("c1", 3, "user", "Jan  2 08:00:00 d", "none", _ts("2024-01-02T08:00:00")),
     ]
     df = spark.createDataFrame(rows, SCHEMA)
-    out = repair_stage(parse_stage(df, anchor_year=2024))
+    out = repair_stage(parse_stage(df))
     got = {r["turn_idx"]: r["ts_parsed"] for r in out.collect()}
     assert got[0] == _ts("2023-12-30T10:00:00")
     assert got[1] == _ts("2023-12-31T23:59:59")
@@ -45,7 +45,7 @@ def test_no_false_rollover_within_year(spark):
         ("c1", 2, "user", "Mar 11 11:00:00 c", "none", _ts("2024-03-11T11:00:00")),
     ]
     df = spark.createDataFrame(rows, SCHEMA)
-    out = repair_stage(parse_stage(df, anchor_year=2024))
+    out = repair_stage(parse_stage(df))
     years = [r["ts_parsed"].year for r in out.collect()]
     assert years == [2024, 2024, 2024]
 
@@ -93,13 +93,12 @@ def test_repair_leaves_absolute_patterns_alone(spark):
     assert iso["ts_parsed"] == _ts("2024-03-01T10:00:00")
 
 def test_fused_repair_equals_chained_reference(spark):
-    """repair_stage_fused must be row-identical to the chained
-    reference expression anchor→rollover on a frame exercising BOTH
-    fixups plus interleaved continuations and multi-year rollovers."""
+    """repair_stage must be row-identical to the chained reference
+    expression anchor→rollover on a frame exercising BOTH fixups plus
+    interleaved continuations and multi-year rollovers."""
     from super_speedy_syslog_searcher_spark.operators.repair import (
         anchor_uptime,
         repair_noyear_rollover,
-        repair_stage_fused,
     )
 
     rows = [
@@ -117,9 +116,9 @@ def test_fused_repair_equals_chained_reference(spark):
         ("c3", 0, "user", "2024-02-02T02:02:02 f", "none", _ts("2024-02-02T02:02:02")),
     ]
     df = spark.createDataFrame(rows, SCHEMA)
-    parsed = parse_stage(df, anchor_year=2024, scatter=False)
+    parsed = parse_stage(df)
     ref = repair_noyear_rollover(anchor_uptime(parsed))
-    fused = repair_stage_fused(parsed)
+    fused = repair_stage(parsed)
     key = ["conv_id", "turn_idx"]
     a = {tuple(r[k] for k in key): r.asDict() for r in ref.collect()}
     b = {tuple(r[k] for k in key): r.asDict() for r in fused.collect()}

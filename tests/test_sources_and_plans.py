@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import gzip
+import os
 
 from pyspark.sql import functions as F
 
@@ -12,7 +13,7 @@ from super_speedy_syslog_searcher_spark import pipeline as P
 from super_speedy_syslog_searcher_spark import plans
 from super_speedy_syslog_searcher_spark.operators.enrich import enrich_stage
 from super_speedy_syslog_searcher_spark.sources.logfiles import (
-    read_log_files,
+    read_log_files_decoded,
 )
 
 LOG_A = """2024-01-05T10:00:00 -0800 app start
@@ -32,14 +33,13 @@ def test_logfile_source_end_to_end(spark, tmp_path):
     with gzip.open(bgz, "wt") as f:
         f.write(LOG_B)
 
-    mtimes = {
-        f"file://{a}": dt.datetime(2024, 1, 5, 19, 0, 0),
-        f"file://{bgz}": dt.datetime(2024, 1, 5, 19, 0, 0),
-    }
-    src = read_log_files(spark, [str(a), str(bgz)], mtime_map=mtimes)
+    mtime = dt.datetime(2024, 1, 5, 19, 0, 0, tzinfo=dt.timezone.utc)
+    for f in (a, bgz):
+        os.utime(f, (mtime.timestamp(), mtime.timestamp()))
+    src = read_log_files_decoded(spark, [str(a), str(bgz)])
     assert src.count() == 6
 
-    merged = P.full_merge(src, persist_before_sort=False)
+    merged = P.full_merge(src)
     rows = merged.select("conv_id", "turn_idx", "text", "ts_eff").collect()
     # global datetime order across the two files, tz-normalized:
     # 17:59:59 UTC (b) < 18:00:00 UTC (a, -0800) < ... < 18:00:30 (b)
@@ -81,9 +81,9 @@ def test_parse_prunes_columns(spark):
         parse_stage,
     )
 
-    df = parse_stage(
-        transcripts_df(spark, "/root/testdata/sf0.001"), scatter=False
-    ).select("sink")
+    df = parse_stage(transcripts_df(spark, "/root/testdata/sf0.001")).select(
+        "sink"
+    )
     import re
 
     plan = plans.explain_str(df)
@@ -143,7 +143,7 @@ def test_utf16_roundtrip_full_pipeline(spark, tmp_path):
         )
     )
     df = read_log_files_decoded(spark, [str(p), str(q)])
-    out = assemble_stage(repair_stage(parse_stage(df, scatter=False)))
+    out = assemble_stage(repair_stage(parse_stage(df)))
     rows = sorted(
         out.collect(), key=lambda r: (r["conv_id"], r["turn_idx"])
     )

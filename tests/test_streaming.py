@@ -30,7 +30,7 @@ def test_streaming_routed_and_incremental(spark, tmp_path):
 
     sp.run_routed_available_now(spark, in_dir, out_dir, ckpt)
     got1 = spark.read.parquet(out_dir)
-    batch = parse_stage(spark.read.parquet(in_dir), scatter=False)
+    batch = parse_stage(spark.read.parquet(in_dir))
     assert got1.count() == batch.count()
     # routing fan-out: sink=... partition dirs exist
     sinks = {r["sink"] for r in got1.select("sink").distinct().collect()}
@@ -57,7 +57,7 @@ def test_streaming_hourly_matches_batch(spark, tmp_path):
         for r in spark.sql("SELECT * FROM hourly_t").collect()
     }
     batch = (
-        parse_stage(spark.read.parquet(in_dir), scatter=False)
+        parse_stage(spark.read.parquet(in_dir))
         .filter(F.col("ts_parsed").isNotNull())
         .groupBy(
             F.date_trunc("hour", "ts_parsed").alias("hour"), "sink"
@@ -94,9 +94,7 @@ def test_stateful_assembly_equals_batch(spark, tmp_path):
     stateful.run_assembled_available_now(spark, in_dir, out_dir, ckpt)
 
     got = spark.read.parquet(out_dir).select(*cols)
-    want = assemble_stage(
-        anchor_uptime(parse_stage(t, scatter=False))
-    ).select(*cols)
+    want = assemble_stage(anchor_uptime(parse_stage(t))).select(*cols)
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0

@@ -117,23 +117,23 @@ def test_anchor_year_from_source_mtime(spark, tmp_path):
     (syslogprocessor.rs:628-734 seeds no-year formats from the file's
     mtime) threaded as a column into the parse UDF."""
     import datetime as dt
+    import os
 
     from super_speedy_syslog_searcher_spark.operators.parse import (
         parse_stage,
     )
     from super_speedy_syslog_searcher_spark.sources.logfiles import (
-        read_log_files,
+        read_log_files_decoded,
     )
 
     a = tmp_path / "y2025.log"
     a.write_text("<14>Jan  5 03:04:05 HOST app: new year\n")
     b = tmp_path / "y2023.log"
     b.write_text("<14>Jan  5 03:04:05 HOST app: old year\n")
-    mtimes = {
-        f"file://{a}": dt.datetime(2025, 1, 6, 0, 0, 0),
-        f"file://{b}": dt.datetime(2023, 1, 6, 0, 0, 0),
-    }
-    src = read_log_files(spark, [str(a), str(b)], mtime_map=mtimes)
+    for f, year in ((a, 2025), (b, 2023)):
+        mtime = dt.datetime(year, 1, 6, tzinfo=dt.timezone.utc).timestamp()
+        os.utime(f, (mtime, mtime))
+    src = read_log_files_decoded(spark, [str(a), str(b)])
     parsed = parse_stage(src, anchor_from_ts=True)
     got = {
         r["conv_id"].rsplit("/", 1)[-1]: r["ts_parsed"]

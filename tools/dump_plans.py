@@ -41,9 +41,7 @@ def main() -> None:
     spark = get_spark(app_name="s4spark-plans")
     t = transcripts_df(spark, sf_dir)
     plans = {
-        "parse_merge": P.full_merge(
-            t, DT_AFTER, DT_BEFORE, persist_before_sort=False
-        ),
+        "parse_merge": P.full_merge(t, DT_AFTER, DT_BEFORE),
         "parse_only": P.parse_repair(t),
         "sink_counts": stats.sink_counts(P.assembled(t, narrow=True)),
         "hourly_hist": stats.hourly_histogram(P.assembled(t, narrow=True)),

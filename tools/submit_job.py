@@ -46,10 +46,7 @@ def main() -> int:
             "conv_id", F.concat("conv_id", F.lit("-r"), F.col("_r"))
         ).drop("_r")
     t0 = time.perf_counter()
-    merged = P.full_merge(
-        t, "2024-01-10 00:00:00", "2024-01-20 00:00:00",
-        persist_before_sort=False,
-    )
+    merged = P.full_merge(t, "2024-01-10 00:00:00", "2024-01-20 00:00:00")
     n = merged.count()
     wall = time.perf_counter() - t0
     print(
