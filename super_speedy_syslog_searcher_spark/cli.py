@@ -857,10 +857,11 @@ def main(argv: list[str] | None = None) -> int:
         t = transcripts_df(spark, args.inputs[0])
         merged = P.full_merge(t, a_str, b_str, tz_offset_min=tzmin)
     else:
-        # s4 <paths> mode: route by file type (text / evtx / journal /
-        # fixedstruct), text runs the full parse+repair+assemble
-        # pipeline with per-source mtime anchor years, binary readers
-        # arrive pre-timestamped; one dt-filtered global merge.
+        # s4 <paths> mode: one Python pass per file decodes it by file
+        # type, parses text lines with per-source mtime anchor years,
+        # and repairs and assembles each source; binary records arrive
+        # pre-timestamped.  Then one dt filter and a one-partition
+        # merge (drained serially, like s4's single merge thread).
         # --summary reads this assembled frame (no second parse), so
         # binary sources show their records as pre-stamped rows (the
         # Parsers table covers regex-parsed sources only).

@@ -49,14 +49,18 @@ RESULT_FIELDS = (
 
 
 _TZ_NUM_MEMO: dict[str, int] = {}
+# distinct offset strings a worker keeps; cleared when full, so a
+# long-lived worker's memo stays bounded whatever its inputs
+_TZ_NUM_MEMO_MAX = 4096
 
 
-def _tz_num_one(v: str) -> int:
+def _tz_num_one(v: str, default_offmin: int) -> int:
     """Scalar form of the numeric-tz conversion, memoized: a batch
     carries a handful of DISTINCT offset strings, so the six chained
     object-dtype str passes the vector form paid (replace/where/pad/
     slice×3) collapse to one dict hit per row (pure value→value memo —
-    no corpus state)."""
+    no corpus state).  A string that is no offset falls back to the
+    job's default offset, as an unknown named zone does."""
     m = _TZ_NUM_MEMO.get(v)
     if m is None:
         s = v.replace(":", "").replace("−", "-")
@@ -64,17 +68,22 @@ def _tz_num_one(v: str) -> int:
             s = "+0000"
         # bare-hours offsets (pattern 39 '+08') zero-fill the minutes
         s = s.ljust(5, "0")
-        m = (-1 if s[0] == "-" else 1) * (int(s[1:3]) * 60 + int(s[3:5]))
+        try:
+            m = (-1 if s[0] == "-" else 1) * (int(s[1:3]) * 60 + int(s[3:5]))
+        except ValueError:
+            return default_offmin
+        if len(_TZ_NUM_MEMO) >= _TZ_NUM_MEMO_MAX:
+            _TZ_NUM_MEMO.clear()
         _TZ_NUM_MEMO[v] = m
     return m
 
 
-def _tz_minutes_numeric(tz: pd.Series) -> pd.Series:
+def _tz_minutes_numeric(tz: pd.Series, default_offmin: int = 0) -> pd.Series:
     """'+0530' / '-08:00' / '+08' / 'Z' → signed minutes.  The U+2212
     minus sign is accepted like the reference's [+-−] classes
     (ere_datetimes_impl.rs:1798)."""
     return pd.Series(
-        [_tz_num_one(v) for v in tz.to_numpy()],
+        [_tz_num_one(v, default_offmin) for v in tz.to_numpy()],
         index=tz.index,
         dtype="int64",
     )
@@ -401,7 +410,9 @@ def _canonicalize(
         if not has.any():
             continue
         if numeric:
-            offmin[has] = _tz_minutes_numeric(g[col][has]).astype("int64")
+            offmin[has] = _tz_minutes_numeric(
+                g[col][has], default_offmin
+            ).astype("int64")
         else:
             offmin[has] = (
                 g[col][has]

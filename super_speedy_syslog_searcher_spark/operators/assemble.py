@@ -10,12 +10,145 @@ Spark form: the canonical sessionize-by-flag pattern — a running
 ``last(..., ignorenulls=True)`` over (conv_id, turn_idx) propagates
 the anchor turn's identity forward.  Rows before the first anchor in
 a conv keep null msg (s4: data before the first sysline datetime).
+
+pandas form: ``repair_assemble`` runs repair (operators/repair.py)
+and this assembly over a frame that holds whole sources, as s4's one
+reader thread per file does — the log-file search calls it inside its
+decoder, so its rows need no conv_id exchange.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .repair import NOYEAR_PATTERN_IDS, ROLLOVER_HOURS
+
+_NAT = np.iinfo(np.int64).min  # NaT's int64 view
+_ROLLOVER_US = ROLLOVER_HOURS * 3600 * 10**6
+
+
+def _last_where(mask: np.ndarray, start_of: np.ndarray) -> tuple:
+    """(position of the last ``mask`` row at or before each row,
+    whether it lies in the row's group).  Rows are grouped contiguously
+    and ``start_of`` is each row's group start, so a running max of the
+    masked positions falls before the group start exactly when the
+    group has no ``mask`` row yet."""
+    last = np.maximum.accumulate(np.where(mask, np.arange(len(mask)), -1))
+    return last, last >= start_of
+
+
+def _minus_years(us: np.ndarray, years: np.ndarray) -> np.ndarray:
+    """µs timestamps minus whole calendar years, Feb 29 → Feb 28 in a
+    common year, time of day kept: Spark's ``ts - make_ym_interval(k,
+    0)``.  µs, not ns: many year boundaries can move a row before
+    1677, which datetime64[ns] cannot hold."""
+    t = us.view("datetime64[us]")
+    day = t.astype("datetime64[D]")
+    month = day.astype("datetime64[M]")
+    year = month.astype("datetime64[Y]").astype("int64") - years  # since 1970
+    moy = month.astype("int64") % 12
+    dom = (day - month).astype("int64")
+    y = year + 1970
+    common = (y % 4 != 0) | ((y % 100 == 0) & (y % 400 != 0))
+    dom[(moy == 1) & (dom == 28) & common] = 27
+    moved = (year * 12 + moy).astype("datetime64[M]").astype("datetime64[D]")
+    moved += dom
+    return (moved.astype("datetime64[us]") + (t - day)).view("int64")
+
+
+def repair_assemble(frame: pd.DataFrame) -> pd.DataFrame:
+    """Parsed rows → (conv_id, turn_idx, role, tool, text, ts, ts_eff,
+    sink_eff, msg_turn_idx): ``repair_stage`` then
+    ``assemble_stage`` plus the search's stamped-row projection, in
+    numpy over group boundaries.  ``frame`` holds every row of each of
+    its sources (``conv_id``) with the parse columns and ``_stamp``
+    (the binary readers' kind, null for text lines), in any order:
+    rows are ordered by (source, turn_idx) here.
+
+    Per source:
+
+    * uptime rows → max(ts of uptime rows) − max(uptime_us) + their
+      uptime (syslogprocessor.rs:740-810);
+    * a >25 h backwards jump among no-year rows is a year boundary,
+      and each no-year row moves back one calendar year per boundary
+      after it (syslogprocessor.rs:628-734);
+    * msg_turn_idx / ts_eff / sink_eff carry forward from the last
+      anchored (non-null ts) row; rows before the first anchor keep
+      null msg and ts and sink 'continuation';
+    * stamped rows keep their own ts, sink (``_stamp``) and turn.
+
+    tests/test_repair_assemble.py pins it column by column against the
+    Spark forms."""
+    codes = pd.factorize(frame["conv_id"])[0]
+    turn = frame["turn_idx"].to_numpy("int64")
+    order = np.lexsort((turn, codes))
+    if (order[1:] < order[:-1]).any():
+        frame, codes, turn = frame.iloc[order], codes[order], turn[order]
+    n = len(frame)
+    new = np.ones(n, dtype=bool)
+    new[1:] = codes[1:] != codes[:-1]
+    starts = np.flatnonzero(new)
+    grp = np.cumsum(new) - 1
+    start_of = starts[grp]
+    ends = np.append(starts[1:], n) - 1
+
+    # µs int64 views of the timestamps, NaT = _NAT
+    parsed = frame["ts_parsed"].to_numpy("datetime64[us]").view("int64")
+    ts = frame["ts"].to_numpy("datetime64[us]").view("int64")
+    fixed = parsed.copy()
+    # uptime anchor: reads the source's trusted ts (the file mtime)
+    has_up = frame["uptime_us"].notna().to_numpy()
+    if has_up.any():
+        up = frame["uptime_us"].to_numpy("int64", na_value=0)
+        max_ts = np.maximum.reduceat(
+            np.where(has_up & (ts != _NAT), ts, _NAT), starts
+        )[grp[has_up]]
+        max_up = np.maximum.reduceat(np.where(has_up, up, _NAT), starts)
+        fixed[has_up] = np.where(
+            max_ts == _NAT, _NAT, max_ts - max_up[grp[has_up]] + up[has_up]
+        )
+    # no-year rollover over the original ts_parsed (uptime and no-year
+    # rows are disjoint, asserted in operators/repair.py)
+    is_ny = (
+        frame["pattern_id"].isin(NOYEAR_PATTERN_IDS)
+        .to_numpy(dtype=bool, na_value=False)
+    )
+    ny = is_ny & (parsed != _NAT)
+    if ny.any():
+        # the source's previous no-year row, strictly before this one
+        prev = np.concatenate(([-1], _last_where(ny, start_of)[0][:-1]))
+        boundary = ny & (prev >= start_of) & (
+            parsed < parsed[prev] - _ROLLOVER_US
+        )
+        run = np.cumsum(boundary)
+        after = run[ends][grp] - run
+        move = ny & (after > 0)
+        if move.any():
+            fixed[move] = _minus_years(parsed[move], after[move])
+
+    anchored = fixed != _NAT
+    last, has = _last_where(anchored, start_of)
+    sink = frame["sink"].to_numpy(dtype=object)
+    last_s, has_s = _last_where(anchored & pd.notna(sink), start_of)
+    stamp = frame["_stamp"].to_numpy(dtype=object)
+    stamped = pd.notna(stamp)
+    ts_eff = np.where(has, fixed[last], _NAT)
+    ts_eff[stamped] = ts[stamped]
+    sink_eff = np.where(has_s, sink[last_s], "continuation")
+    sink_eff[stamped] = stamp[stamped]
+    msg = turn[last]
+    msg[stamped] = turn[stamped]
+    out = frame[["conv_id", "turn_idx", "role", "tool", "text", "ts"]]
+    return out.assign(
+        ts_eff=ts_eff.view("datetime64[us]"),
+        sink_eff=sink_eff,
+        msg_turn_idx=pd.arrays.IntegerArray(
+            msg.astype("int32"), mask=~(has | stamped)
+        ),
+    ).reset_index(drop=True)
 
 
 def assemble_stage(df: DataFrame) -> DataFrame:

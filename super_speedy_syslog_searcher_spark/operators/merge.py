@@ -7,7 +7,11 @@ sort**: repartitionByRange on the total-order key distributes ordered
 key ranges across partitions (the shuffle), sortWithinPartitions
 finishes each range locally — no single-node bottleneck, which is
 what makes this hold at 10^12 rows where a thread-per-file merge
-cannot.
+cannot.  That parallel sort is the table path's (``pipeline.full_merge``
+passes the cluster's parallelism).  A log-file search is drained row
+by row (toLocalIterator), so ``merge_ordered`` defaults to one
+partition, s4's single merge thread, and skips the range sampling job
+that would re-run the search's decoder.
 
 Total order: (ts_eff, conv_id, turn_idx) — the deterministic analogue
 of s4's (datetime, PathId, fileoffset).
@@ -63,16 +67,25 @@ def dt_filter(
     return df
 
 
-def merge_ordered(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def merge_ordered(df: DataFrame, num_partitions: int = 1) -> DataFrame:
     """Globally (ts_eff, conv_id, turn_idx)-ordered rows.
 
-    Range-partitioning on the full (unique) key handles hot-key skew
-    by construction: equal-(ts, conv) runs split across partitions on
-    turn_idx boundaries (see module docstring).
+    One partition by default: s4's single merge thread.  A search is
+    drained one row at a time (toLocalIterator), so a parallel sort
+    buys it nothing, while a range exchange over n > 1 partitions first
+    runs a sampling job over its child to pick the range bounds —
+    which re-runs everything upstream of an unpersisted child.  A
+    one-partition exchange needs no bounds, so no sampling job.
+
+    ``pipeline.full_merge`` and ``with_global_seq`` sort table-sized
+    input on every core and pass the cluster's parallelism;
+    full_merge persists its input first, so its sampling job reads
+    the cache.  Range-partitioning on the full (unique) key handles
+    hot-key skew by construction: equal-(ts, conv) runs split across
+    partitions on turn_idx boundaries (see module docstring).
     """
     keys = [F.col(k) for k in ORDER_KEYS]
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
+    return df.repartitionByRange(num_partitions, *keys).sortWithinPartitions(*keys)
 
 
 def with_global_seq(
@@ -101,8 +114,9 @@ def with_global_seq(
     """
     from pyspark import StorageLevel
 
-    out = df if ordered else merge_ordered(df)
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
+    if not ordered:
+        df = merge_ordered(df, df.sparkSession.sparkContext.defaultParallelism)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     if staging is not None:
         staging.append(out)
     with_pos = out.withColumn("_pid", F.spark_partition_id()).withColumn(

@@ -72,4 +72,6 @@ def full_merge(
     out = dt_filter(out, after, before).persist(StorageLevel.MEMORY_AND_DISK)
     if staging is not None:
         staging.append(out)  # caller unpersists after its action
-    return merge_ordered(out)
+    # a table-sized sort on every core (merge_ordered's one-partition
+    # default is the drained search's)
+    return merge_ordered(out, out.sparkSession.sparkContext.defaultParallelism)

@@ -11,10 +11,9 @@ file into one processing loop (s4.rs processing_loop).  Here:
    records of the evtx / journal / utmp / ASL / ETL / ODL readers.
    Every decoder emits one row shape (ROWS_SCHEMA: the transcripts
    columns plus ``sink``, null for text and the kind for pre-stamped
-   binary records), and the same mapInPandas parses each decoded
-   batch's text lines, so a search crosses into Python once per file.
-   Rows then go straight into the per-conversation windows (repair →
-   assemble).
+   binary records), and the same mapInPandas parses, repairs and
+   assembles each decoded batch, so a search crosses into Python once
+   per file and needs no window exchange.
  * ``read_log_files_decoded`` — the same decode with every file read
    as text (BOM / null-pattern encoding sniff, per-codec
    decompression).
@@ -43,9 +42,9 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.datetime_parse import RESULT_FIELDS, parse_series
+from ..functions.datetime_parse import parse_series
+from ..operators.assemble import repair_assemble
 
 # BOM sniff table, longest first (UTF-32LE's BOM starts with
 # UTF-16LE's) — detect_filetype_text_encoding parity
@@ -213,10 +212,11 @@ ROWS_SCHEMA = (
     "tool string, ts timestamp, sink string"
 )
 _ROW_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "sink"]
-# ROWS_SCHEMA with sink renamed _stamp, then the parse columns
-PARSED_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, "
-    "tool string, ts timestamp, _stamp string, " + RESULT_FIELDS
+# the columns operators.assemble.repair_assemble returns
+ASSEMBLED_SCHEMA = (
+    "conv_id string, turn_idx int, role string, tool string, "
+    "text string, ts timestamp, ts_eff timestamp, sink_eff string, "
+    "msg_turn_idx int"
 )
 
 
@@ -383,17 +383,20 @@ def _decode_routed(
             yield pd.concat(frames, ignore_index=True)[_ROW_COLS]
 
 
-def _decode_parsed(
+def _decode_assembled(
     batches: Iterator[pd.DataFrame], tz_offset_min: int = 0
 ) -> Iterator[pd.DataFrame]:
-    """``_decode_routed``'s rows, sink renamed ``_stamp``, with the
-    parse columns of each decoded batch alongside (PARSED_SCHEMA).
+    """``_decode_routed``'s rows parsed, repaired and assembled per
+    decoded batch (ASSEMBLED_SCHEMA).
 
     Text rows parse with their own source's mtime year as the anchor
     of no-year formats (syslogprocessor.rs:628-734); pre-stamped
-    binary rows parse a null line.  One ``parse_series`` call per
-    batch, outside the per-file fault isolation: the kernel has a
-    fixed per-call cost and never raises."""
+    binary rows (sink renamed ``_stamp``) parse a null line.  One
+    ``parse_series`` and one ``repair_assemble`` call per batch,
+    outside the per-file fault isolation: both kernels have a fixed
+    per-call cost and never raise.  A source is one binaryFile row
+    (or a member of one), so every batch holds whole sources and no
+    state carries over between batches."""
     for rows in _decode_routed(batches):
         rows = rows.rename(columns={"sink": "_stamp"})
         text = rows["text"].where(rows["_stamp"].isna(), None)
@@ -402,7 +405,7 @@ def _decode_parsed(
             tz_offset_min=tz_offset_min,
             anchor_years=rows["ts"].dt.year,
         )
-        yield pd.concat([rows, parsed], axis=1)
+        yield repair_assemble(pd.concat([rows, parsed], axis=1))
 
 
 def _load_files(spark: SparkSession, paths) -> DataFrame:
@@ -456,37 +459,37 @@ def assembled_from_paths(
     invalid_out: list | None = None,
 ) -> DataFrame:
     """`s4 <paths>` parity: every input file, whatever its kind, in
-    one routed decode + parse → the assembled schema; feeds dt_filter
-    + merge_ordered unchanged.
+    one routed decode → the assembled schema; feeds dt_filter +
+    merge_ordered unchanged.
 
     * One scan: a single binaryFile scan reads every expanded path.
-    * One Python pass: a single mapInPandas routes each file — and
-      each tar member, by its inner type — to its decoder by
-      path_to_filetype (the reference's per-LogMessageType reader
-      fan-in, s4.rs processing_loop), then parses the batch's text
+    * One Python pass, no window exchange: a single mapInPandas routes
+      each file — and each tar member, by its inner type — to its
+      decoder by path_to_filetype (the reference's per-LogMessageType
+      reader fan-in, s4.rs processing_loop), parses the batch's text
       lines with per-source mtime anchor years and the job's
-      ``tz_offset_min``.  The binary readers' pre-stamped records
-      (non-null sink) parse a null line.
-    * One exchange: the rows go straight into the conv_id window
-      exchange → repair → sysline assembly, and one final projection
-      stamps the binary records' own ts, sink and turn as the
-      message's.  A source is one file, so the per-conversation
-      windows never mix text and binary rows.  Binary records share
-      the lineage instead of a branch split off and unioned back:
-      each branch would run the scan and the decoder again.
+      ``tz_offset_min``, then repairs and assembles each source in
+      the same frame (``operators.assemble.repair_assemble``), as s4's
+      reader thread per file does.  The binary readers' pre-stamped
+      records keep their own ts, sink and turn as the message's.
+      Every source is one whole binaryFile row, so it never spans two
+      tasks and its rows need no conv_id exchange, sort or window.
 
     Trade-off: a file's lines parse in the task that decodes it, like
     s4's one reader thread per file, so one very large file parses on
     one core instead of being scattered across all of them.  Measured
-    on one 108k-line file on 4 cores, per search: wall 3.0 → 3.4 s,
-    CPU 6.7 → 4.9 s.  Files too big for one task belong in the table
-    path (a transcripts-shaped table through ``pipeline.assembled``).
+    on one 108k-line file on 4 cores, per drained search: a parse
+    scattered across the cores took wall 3.0 s and CPU 6.7 s, the
+    per-file parse with the repair/assembly windows behind a conv_id
+    exchange 3.4 s and 4.9 s.  With repair and assembly in the
+    decoding task and a one-partition merge, on a 108k-line 7.9 MB
+    file (medians of 2 runs × 5 ops, windowed form → this): wall
+    3.2–3.8 → 2.4–2.6 s, process-tree CPU 4.7–5.1 → 3.3–3.7 s.
+    Files too big for one task belong in the table path (a
+    transcripts-shaped table through ``pipeline.assembled``).
 
     An all-invalid input set raises ValueError; invalid inputs are
     warned about and appended to ``invalid_out``."""
-    from ..operators.assemble import assemble_stage
-    from ..operators.repair import repair_stage
-
     if isinstance(paths, str):
         paths = [paths]
     files, invalid = _expand_paths(paths)
@@ -496,17 +499,8 @@ def assembled_from_paths(
         invalid_out.extend(invalid)
     if not files:
         raise ValueError(f"no readable inputs among {paths!r}")
-    parsed = _routed_rows(
+    return _routed_rows(
         spark, files,
-        functools.partial(_decode_parsed, tz_offset_min=tz_offset_min),
-        PARSED_SCHEMA,
-    )
-    stamped = F.col("_stamp").isNotNull()
-    return assemble_stage(repair_stage(parsed)).select(
-        "conv_id", "turn_idx", "role", "tool", "text", "ts",
-        F.when(stamped, F.col("ts")).otherwise(F.col("ts_eff"))
-        .alias("ts_eff"),
-        F.coalesce("_stamp", "sink_eff").alias("sink_eff"),
-        F.when(stamped, F.col("turn_idx")).otherwise(F.col("msg_turn_idx"))
-        .alias("msg_turn_idx"),
+        functools.partial(_decode_assembled, tz_offset_min=tz_offset_min),
+        ASSEMBLED_SCHEMA,
     )

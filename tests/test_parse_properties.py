@@ -60,3 +60,25 @@ def test_iso_roundtrip_property(year, sod):
         assert str(row["ts_parsed"]) == f"{year:04d}-06-15 {h:02d}:{mi:02d}:{s:02d}"
     else:
         assert row["sink"] == "continuation"
+
+
+def test_malformed_numeric_tz_falls_back_to_default_offset():
+    """A numeric-tz capture that is no offset takes the job's default
+    offset, as an unknown named zone does, instead of raising out of
+    the whole batch; it is not memoized, and the memo stays bounded."""
+    from super_speedy_syslog_searcher_spark.functions import (
+        datetime_parse as D,
+    )
+
+    vals = pd.Series(["+0x:00", "+05:30", "+1x", "-08:00"])
+    assert D._tz_minutes_numeric(vals, -300).tolist() == [-300, 330, -300, -480]
+    assert "+0x:00" not in D._TZ_NUM_MEMO and "+1x" not in D._TZ_NUM_MEMO
+    # 8640 distinct offset strings, more than the memo keeps
+    many = pd.Series(
+        [f"{sign}{h:02d}{sep}{m:02d}" for sign in "+-−" for sep in ("", ":")
+         for h in range(24) for m in range(60)]
+    )
+    want = [(-1 if v[0] != "+" else 1) * (int(v[1:3]) * 60 + int(v[-2:]))
+            for v in many]
+    assert D._tz_minutes_numeric(many).tolist() == want
+    assert len(D._TZ_NUM_MEMO) <= D._TZ_NUM_MEMO_MAX

@@ -287,22 +287,46 @@ def _executed_plan(df) -> str:
     return plan.split("== Initial Plan ==")[0]
 
 
-def test_one_scan_one_decoder_in_search_plan(spark, mixed_dir):
-    """assembled_from_paths → dt_filter → merge_ordered decodes every
-    file once: one binaryFile scan, one MapInPandas."""
-    out = merge_ordered(
+def _search(spark, mixed_dir):
+    return merge_ordered(
         dt_filter(
             L.assembled_from_paths(spark, [mixed_dir]),
             "2024-01-05 03:00:00", "2024-01-05 03:02:00",
         )
     )
-    plan = _executed_plan(out)
+
+
+def test_one_scan_one_decoder_in_search_plan(spark, mixed_dir):
+    """assembled_from_paths → dt_filter → merge_ordered decodes every
+    file once: one binaryFile scan, one MapInPandas."""
+    plan = _executed_plan(_search(spark, mixed_dir))
     assert plan.count("FileScan binaryFile") == 1, plan
     assert plan.count("MapInPandas") == 1, plan
     # lines parse inside the decoder: no second Python pass and no
     # scatter exchange ahead of one
     assert "ArrowEvalPython" not in plan, plan
     assert "xxhash64(conv_id" not in plan, plan
+    # sources repair and assemble inside the decoder too: no window,
+    # and the merge's exchange is the only one
+    assert "Window" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+
+
+def test_drained_search_runs_two_jobs(spark, mixed_dir):
+    """Draining a search as the CLI does runs the merge's shuffle map
+    job and one result job: no range-sampling job re-runs the decoder,
+    and one merged partition is one toLocalIterator job."""
+    sc = spark.sparkContext
+    group = "drained-search"
+    sc.setJobGroup(group, group)
+    try:
+        rows = list(_search(spark, mixed_dir).toLocalIterator())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 2, jobs
 
 
 def test_text_readers_split_lines_alike(spark, tmp_path):

@@ -73,20 +73,28 @@ def test_enrich_is_broadcast(spark, duck):
     assert plans.has_broadcast_join(df)
 
 
-def test_parse_prunes_columns(spark):
-    """Selecting only parse outputs must prune the cached/scan columns
-    to text (+passthrough keys) — column pruning through the UDF."""
-    from super_speedy_syslog_searcher_spark.datagen import transcripts_df
+def test_parse_prunes_columns(spark, tmp_path):
+    """Selecting only parse outputs prunes the scan to the parse's
+    input and its scatter keys — column pruning through the UDF: the
+    parquet scan reads conv_id, turn_idx and text, never role, tool
+    or ts."""
+    import re
+
     from super_speedy_syslog_searcher_spark.operators.parse import (
         parse_stage,
     )
 
-    df = parse_stage(transcripts_df(spark, "/root/testdata/sf0.001")).select(
-        "sink"
-    )
-    import re
-
+    p = str(tmp_path / "transcripts.parquet")
+    spark.createDataFrame(
+        [("c1", 0, "user", "2024-01-05T10:00:00 start", "none",
+          dt.datetime(2024, 1, 5, 10))],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    ).write.parquet(p)
+    df = parse_stage(spark.read.parquet(p)).select("sink")
     plan = plans.explain_str(df)
+    schemas = re.findall(r"ReadSchema: (struct<.*>)", plan)
+    assert schemas == ["struct<conv_id:string,turn_idx:int,text:string>"], plan
     # one ArrowEvalPython node (formatted explain prints each node in
     # the tree and again in the details section)
     nodes = re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)
