@@ -841,16 +841,12 @@ def main(argv: list[str] | None = None) -> int:
         app_name="s4spark-cli",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    import os as _os
-
     a_str = after.isoformat(sep=" ") if after else None
     b_str = before.isoformat(sep=" ") if before else None
     table_mode = (
         len(args.inputs) == 1
-        and _os.path.isdir(args.inputs[0])
-        and _os.path.exists(
-            _os.path.join(args.inputs[0], "events.parquet")
-        )
+        and os.path.isdir(args.inputs[0])
+        and os.path.exists(os.path.join(args.inputs[0], "events.parquet"))
     )
     asm_summary = None
     if table_mode:
@@ -908,77 +904,70 @@ def main(argv: list[str] | None = None) -> int:
             "ts_eff",
             "conv_id",
         )
-        st = _drain(_maybe_color(args, lines), args.limit)
-        # --summary works with jsonl too
-        _maybe_summary(args, t, st, after, before, t0, asm_summary, tzmin=tzmin)
-        spark.stop()
-        return 0
-    if args.out_format in _JOURNAL_FORMATS:
+    elif args.out_format in _JOURNAL_FORMATS:
         lines = merged.select(
             _JOURNAL_FORMATS[args.out_format](merged).alias("line"),
             "ts_eff",
             "conv_id",
         )
-        st = _drain(_maybe_color(args, lines), args.limit)
-        _maybe_summary(args, t, st, after, before, t0, asm_summary, tzmin=tzmin)
-        spark.stop()
-        return 0
-    out = F.col("text")
-    if args.out_format == "cat":
-        # journalctl -o cat analogue: message text only, no prepends
-        args.prepend_conv = False
-        args.prepend_filename = False
-        args.prepend_filepath = False
-        args.prepend_utc = False
-        args.prepend_tz = None
-    psep = (
-        decode_separator(args.prepend_separator)
-        if args.prepend_separator is not None
-        else sep
-    )
-    if args.prepend_conv or args.prepend_filename or args.prepend_filepath:
-        # -l conv label; -n basename of the source (last path segment);
-        # -p full path (s4 -n/-p distinction, s4.rs:3064,3076)
-        base = (
-            F.element_at(F.split(F.col("conv_id"), "/"), -1)
-            if args.prepend_filename and not args.prepend_filepath
-            else F.col("conv_id")
+    else:
+        out = F.col("text")
+        if args.out_format == "cat":
+            # journalctl -o cat analogue: message text only, no prepends
+            args.prepend_conv = False
+            args.prepend_filename = False
+            args.prepend_filepath = False
+            args.prepend_utc = False
+            args.prepend_tz = None
+        psep = (
+            decode_separator(args.prepend_separator)
+            if args.prepend_separator is not None
+            else sep
         )
-        conv = F.concat(base, F.lit(":"))
-        if args.prepend_align:
-            # s4 -w: pad every source label to the widest (s4.rs:
-            # 6282-6299 computes prepended-name width before printing).
-            # One metadata-sized agg on the cheap transcripts frame.
-            width = t.agg(
-                F.max(F.length("conv_id")).alias("w")
-            ).collect()[0]["w"] or 0
-            conv = F.rpad(conv, width + 1, " ")
-        out = F.concat(conv, F.lit(sep), out)
-    stamp = None
-    if args.prepend_tz:
-        # arbitrary-offset stamp: shift then format, suffix = ±hhmm
-        suffix = "{}{:02d}{:02d}".format(
-            "+" if z_offmin >= 0 else "-",
-            abs(z_offmin) // 60,
-            abs(z_offmin) % 60,
-        )
-        stamp = F.concat(
-            F.date_format(
-                F.col("ts_eff") + F.expr(f"INTERVAL {z_offmin} MINUTES"),
-                dt_fmt or "yyyyMMdd'T'HHmmss",
-            ),
-            F.lit("" if dt_fmt else suffix),
-        )
-    elif args.prepend_utc:
-        stamp = F.concat(
-            F.date_format(
-                "ts_eff", dt_fmt or "yyyyMMdd'T'HHmmss'Z'"
+        if args.prepend_conv or args.prepend_filename or args.prepend_filepath:
+            # -l conv label; -n basename of the source (last path segment);
+            # -p full path (s4 -n/-p distinction, s4.rs:3064,3076)
+            base = (
+                F.element_at(F.split(F.col("conv_id"), "/"), -1)
+                if args.prepend_filename and not args.prepend_filepath
+                else F.col("conv_id")
             )
-        )
-    if stamp is not None:
-        out = F.concat(stamp, F.lit(psep), out)
-    lines = merged.select(out.alias("line"), "ts_eff", "conv_id")
+            conv = F.concat(base, F.lit(":"))
+            if args.prepend_align:
+                # s4 -w: pad every source label to the widest (s4.rs:
+                # 6282-6299 computes prepended-name width before printing).
+                # One metadata-sized agg on the cheap transcripts frame.
+                width = t.agg(
+                    F.max(F.length("conv_id")).alias("w")
+                ).collect()[0]["w"] or 0
+                conv = F.rpad(conv, width + 1, " ")
+            out = F.concat(conv, F.lit(sep), out)
+        stamp = None
+        if args.prepend_tz:
+            # arbitrary-offset stamp: shift then format, suffix = ±hhmm
+            suffix = "{}{:02d}{:02d}".format(
+                "+" if z_offmin >= 0 else "-",
+                abs(z_offmin) // 60,
+                abs(z_offmin) % 60,
+            )
+            stamp = F.concat(
+                F.date_format(
+                    F.col("ts_eff") + F.expr(f"INTERVAL {z_offmin} MINUTES"),
+                    dt_fmt or "yyyyMMdd'T'HHmmss",
+                ),
+                F.lit("" if dt_fmt else suffix),
+            )
+        elif args.prepend_utc:
+            stamp = F.concat(
+                F.date_format(
+                    "ts_eff", dt_fmt or "yyyyMMdd'T'HHmmss'Z'"
+                )
+            )
+        if stamp is not None:
+            out = F.concat(stamp, F.lit(psep), out)
+        lines = merged.select(out.alias("line"), "ts_eff", "conv_id")
     st = _drain(_maybe_color(args, lines), args.limit)
+    # --summary works with every output format
     _maybe_summary(args, t, st, after, before, t0, asm_summary, tzmin=tzmin)
     spark.stop()
     return 0

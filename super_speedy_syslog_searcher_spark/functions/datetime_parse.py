@@ -263,9 +263,10 @@ def _canonicalize(
     """Captured groups → (utc timestamps, uptime_us or None).
 
     Vectorized equivalent of captures_to_buffer_bytes
-    (src/data/datetime.rs:1368-1890).  Timestamps are assembled from
-    integer components (pd.to_datetime on a component frame — numeric
-    fast path), never by string formatting + strptime.
+    (src/data/datetime.rs:1368-1890).  Calendar timestamps are
+    assembled from integer components by ``_assemble_ts``, never by
+    string formatting + strptime; epoch kinds convert their integer
+    µs directly.
     """
     if p.kind == "uptime":
         # _frac_us right-pads sub-6-digit fractions (gc_uptime_s has
@@ -456,7 +457,6 @@ def _dispatch_masks(prefix: pd.Series) -> dict[int, "np.ndarray"]:
     digit0 = b(c0.str.isdigit())
     iso = digit4 & b(s45 == "-")
     bracket = b(c0 == "[")
-    from ..patterns import MONTHS as _M, TZ_OFFSET_MIN as _T  # noqa: F401
 
     dows = {"Mon", "Tue", "Wed", "Thu", "Fri", "Sat", "Sun"}
     mons_ci = {m.lower() for m in MONTHS} | {m.upper() for m in MONTHS}

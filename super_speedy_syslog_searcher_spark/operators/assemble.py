@@ -13,8 +13,11 @@ a conv keep null msg (s4: data before the first sysline datetime).
 
 pandas form: ``repair_assemble`` runs repair (operators/repair.py)
 and this assembly over a frame that holds whole sources, as s4's one
-reader thread per file does — the log-file search calls it inside its
-decoder, so its rows need no conv_id exchange.
+reader thread per file does; ``parse_assemble`` parses the frame
+first.  The batch pipeline (``pipeline.assembled``, over
+conv-sorted partitions) and the log-file search (inside its decoder)
+both run it; the window form stays the reference and the bucketed
+read's (``layout.assembled_from_bucketed``).
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.datetime_parse import parse_series
 from .repair import NOYEAR_PATTERN_IDS, ROLLOVER_HOURS
 
 _NAT = np.iinfo(np.int64).min  # NaT's int64 view
@@ -60,13 +64,14 @@ def _minus_years(us: np.ndarray, years: np.ndarray) -> np.ndarray:
 
 
 def repair_assemble(frame: pd.DataFrame) -> pd.DataFrame:
-    """Parsed rows → (conv_id, turn_idx, role, tool, text, ts, ts_eff,
-    sink_eff, msg_turn_idx): ``repair_stage`` then
-    ``assemble_stage`` plus the search's stamped-row projection, in
-    numpy over group boundaries.  ``frame`` holds every row of each of
-    its sources (``conv_id``) with the parse columns and ``_stamp``
-    (the binary readers' kind, null for text lines), in any order:
-    rows are ordered by (source, turn_idx) here.
+    """Parsed rows → the same rows with ``ts_parsed`` repaired, plus
+    msg_turn_idx, ts_eff and sink_eff: ``repair_stage`` then
+    ``assemble_stage`` (and, given ``_stamp``, the search's
+    stamped-row projection), in numpy over group boundaries.
+    ``frame`` holds every row of each of its sources (``conv_id``)
+    with the parse columns and optionally ``_stamp`` (the binary
+    readers' kind, null for text lines; no column means no stamped
+    rows), in any order: rows are ordered by (source, turn_idx) here.
 
     Per source:
 
@@ -133,22 +138,38 @@ def repair_assemble(frame: pd.DataFrame) -> pd.DataFrame:
     last, has = _last_where(anchored, start_of)
     sink = frame["sink"].to_numpy(dtype=object)
     last_s, has_s = _last_where(anchored & pd.notna(sink), start_of)
-    stamp = frame["_stamp"].to_numpy(dtype=object)
-    stamped = pd.notna(stamp)
     ts_eff = np.where(has, fixed[last], _NAT)
-    ts_eff[stamped] = ts[stamped]
     sink_eff = np.where(has_s, sink[last_s], "continuation")
-    sink_eff[stamped] = stamp[stamped]
     msg = turn[last]
-    msg[stamped] = turn[stamped]
-    out = frame[["conv_id", "turn_idx", "role", "tool", "text", "ts"]]
-    return out.assign(
+    if "_stamp" in frame:
+        stamp = frame["_stamp"].to_numpy(dtype=object)
+        stamped = pd.notna(stamp)
+        ts_eff[stamped] = ts[stamped]
+        sink_eff[stamped] = stamp[stamped]
+        msg[stamped] = turn[stamped]
+        has = has | stamped
+    return frame.assign(
+        ts_parsed=fixed.view("datetime64[us]"),
+        msg_turn_idx=pd.arrays.IntegerArray(msg.astype("int32"), mask=~has),
         ts_eff=ts_eff.view("datetime64[us]"),
         sink_eff=sink_eff,
-        msg_turn_idx=pd.arrays.IntegerArray(
-            msg.astype("int32"), mask=~(has | stamped)
-        ),
     ).reset_index(drop=True)
+
+
+def parse_assemble(
+    rows: pd.DataFrame,
+    tz_offset_min: int = 0,
+    anchor_years: pd.Series | None = None,
+) -> pd.DataFrame:
+    """Unparsed rows of whole sources → ``parse_series`` over their
+    text (stamped rows parse a null line) → ``repair_assemble``."""
+    text = rows["text"]
+    if "_stamp" in rows:
+        text = text.where(rows["_stamp"].isna(), None)
+    parsed = parse_series(
+        text, tz_offset_min=tz_offset_min, anchor_years=anchor_years
+    )
+    return repair_assemble(pd.concat([rows, parsed], axis=1))
 
 
 def assemble_stage(df: DataFrame) -> DataFrame:

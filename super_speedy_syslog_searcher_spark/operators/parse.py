@@ -1,12 +1,21 @@
-"""Parse stage: attach extracted datetime columns to the transcripts.
+"""Parse stage: attach extracted datetime columns to rows, with no
+repair or assembly.
 
 One pandas UDF over (anchor year, text), so one ArrowEvalPython node
 in the physical plan; everything before and after stays in
 WholeStageCodegen.  Column pruning matters: the UDF reads only
 ``text`` (plus ``ts`` with ``anchor_from_ts``) — Catalyst prunes the
-parquet scan accordingly.  Log-file searches
+parquet scan accordingly.
+
+Its callers need parsed rows without the conversation-ordered pass:
+the streaming queries (``streaming/``, where a micro-batch does not
+hold whole conversations), parse-at-ingest into the bucketed layout
+(``layout.write_parsed_bucketed``, which repairs on read), and
+``q_logfile_merge``'s raw-parse check.  The batch pipeline
+(``pipeline.assembled``) and the log-file search
 (``sources.logfiles.assembled_from_paths``) do not come here: they
-parse each decoded batch inside the decoder's mapInPandas.
+parse inside the one mapInPandas that also repairs and assembles
+(``operators.assemble.parse_assemble``).
 """
 
 from __future__ import annotations

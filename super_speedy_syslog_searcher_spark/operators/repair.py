@@ -15,6 +15,10 @@ Both are per-conversation ordered fixups the reference runs per file:
   src/readers/syslogprocessor.rs:628-734, :213).  Window form: count
   boundaries after each row (total − running) and subtract that many
   years.
+
+The batch pipeline and the log-file search run both fixups in numpy
+(``operators.assemble.repair_assemble``); the window forms here are
+the reference it is tested against and the bucketed read's repair.
 """
 
 from __future__ import annotations
@@ -30,9 +34,9 @@ ROLLOVER_HOURS = 25  # syslogprocessor.rs:213
 # so new noyear families are repaired automatically)
 NOYEAR_PATTERN_IDS = tuple(p.pid for p in PATTERNS if p.noyear)
 UPTIME_PATTERN_IDS = tuple(p.pid for p in PATTERNS if p.kind == "uptime")
-# repair_stage reads the ORIGINAL ts_parsed for both fixups
+# repair_assemble reads the ORIGINAL ts_parsed for both fixups
 assert not set(UPTIME_PATTERN_IDS) & set(NOYEAR_PATTERN_IDS), (
-    "fused repair requires uptime/noyear pattern sets disjoint"
+    "one-pass repair requires uptime/noyear pattern sets disjoint"
 )
 
 
@@ -52,92 +56,6 @@ def anchor_uptime(df: DataFrame) -> DataFrame:
         F.when(
             has_up, F.timestamp_micros(anchor_us + F.col("uptime_us"))
         ).otherwise(F.col("ts_parsed")),
-    )
-
-
-def repair_stage(df: DataFrame) -> DataFrame:
-    """Full repair, uptime anchoring then year rollover, in one
-    exchange: identical output to the chained reference expression
-    ``repair_noyear_rollover(anchor_uptime(df))`` (tests/test_repair.py
-    pins the equivalence).  The two fixups act on DISJOINT row sets —
-    uptime pattern ids are never in the noyear set, asserted at import
-    — so each window family can read the ORIGINAL ts_parsed and both
-    fixups compose in one final CASE.
-
-    Plan win vs the chained form (guide §2.4: two operations keyed
-    the same way share one exchange; fewer Window nodes = fewer
-    full-group buffer passes of the wide rows):
-
-    * the uptime anchor maxes move from an UNORDERED conv window
-      (which forced its own conv_id-only Sort + Window node) into the
-      ordered (conv_id, turn_idx) spec with an unbounded frame — same
-      values, but now they share one Window NODE with the rollover's
-      running ``prev`` frame, and the conv_id-only Sort disappears;
-    * boundaries-after-row stays ``whole-group sum − running sum``
-      (each an O(n)-per-group frame: UnboundedWindowFunctionFrame
-      computes once per group, the running frame streams), but both
-      sums now share ONE ordered-spec Window node.  A tail frame
-      ``sum over (1, unboundedFollowing)`` would be one frame instead
-      of two — but Spark's UnboundedFollowingWindowFunctionFrame
-      re-aggregates from scratch per row, O(n²) on the hot conv group
-      (measured 6x END-TO-END slowdown at 5M turns; rejected).
-
-    Physical shape: Exchange(conv_id) → Sort(conv_id, turn_idx) →
-    Window[anchor maxes + prev] → Window[group-sum + running-sum] →
-    Project, i.e. 2 Window nodes + 1 Sort where the chained form
-    needed 4 Window nodes + 2 Sorts
-    (plans/r06/parse_only_{before,after}.txt).
-    """
-    w_ord = Window.partitionBy("conv_id").orderBy("turn_idx")
-    w_full = w_ord.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
-    has_up = F.col("uptime_us").isNotNull()
-    is_ny = F.col("pattern_id").isin(*NOYEAR_PATTERN_IDS)
-    ny_ts = F.when(is_ny, F.col("ts_parsed"))
-    anchor_us = F.max(
-        F.when(has_up, F.unix_micros(F.col("ts")))
-    ).over(w_full) - F.max("uptime_us").over(w_full)
-    # one select, not chained withColumns: the analyzer extracts
-    # window expressions per Project, so chaining would split these
-    # same-spec frames into two Window nodes (two buffer passes)
-    d1 = df.select(
-        "*",
-        anchor_us.alias("_anchor_us"),
-        F.last(ny_ts, ignorenulls=True).over(w_prev).alias("_prev_ny"),
-    )
-    boundary = F.when(
-        is_ny
-        & F.col("_prev_ny").isNotNull()
-        & (
-            F.col("ts_parsed")
-            < F.col("_prev_ny")
-            - F.expr(f"INTERVAL {ROLLOVER_HOURS} HOURS")
-        ),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    d2 = d1.withColumn("_b", boundary).select(
-        "*",
-        (
-            F.sum("_b").over(w_full) - F.sum("_b").over(w_run)
-        ).alias("_after"),
-    )
-    fixed = (
-        F.when(
-            has_up,
-            F.timestamp_micros(F.col("_anchor_us") + F.col("uptime_us")),
-        )
-        .when(
-            is_ny & (F.col("_after") > 0),
-            F.col("ts_parsed")
-            - F.make_ym_interval(F.col("_after").cast("int"), F.lit(0)),
-        )
-        .otherwise(F.col("ts_parsed"))
-    )
-    return d2.withColumn("ts_parsed", fixed).drop(
-        "_anchor_us", "_prev_ny", "_b", "_after"
     )
 
 
@@ -175,3 +93,10 @@ def repair_noyear_rollover(df: DataFrame) -> DataFrame:
         ).drop("_b")
     )
 
+
+def repair_stage(df: DataFrame) -> DataFrame:
+    """Full repair in the window form, uptime anchoring then year
+    rollover: the reference that tests pin
+    ``operators.assemble.repair_assemble`` against, and the bucketed
+    read's repair (``layout.assembled_from_bucketed``)."""
+    return repair_noyear_rollover(anchor_uptime(df))

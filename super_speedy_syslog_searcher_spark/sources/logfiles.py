@@ -43,8 +43,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.datetime_parse import parse_series
-from ..operators.assemble import repair_assemble
+from ..operators.assemble import parse_assemble
 
 # BOM sniff table, longest first (UTF-32LE's BOM starts with
 # UTF-16LE's) — detect_filetype_text_encoding parity
@@ -212,12 +211,13 @@ ROWS_SCHEMA = (
     "tool string, ts timestamp, sink string"
 )
 _ROW_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "sink"]
-# the columns operators.assemble.repair_assemble returns
+# the search's columns of operators.assemble.parse_assemble's output
 ASSEMBLED_SCHEMA = (
     "conv_id string, turn_idx int, role string, tool string, "
     "text string, ts timestamp, ts_eff timestamp, sink_eff string, "
     "msg_turn_idx int"
 )
+_ASSEMBLED_COLS = [f.split()[0] for f in ASSEMBLED_SCHEMA.split(", ")]
 
 
 def _warn_failed(path: str, ex: Exception) -> None:
@@ -392,20 +392,16 @@ def _decode_assembled(
     Text rows parse with their own source's mtime year as the anchor
     of no-year formats (syslogprocessor.rs:628-734); pre-stamped
     binary rows (sink renamed ``_stamp``) parse a null line.  One
-    ``parse_series`` and one ``repair_assemble`` call per batch,
-    outside the per-file fault isolation: both kernels have a fixed
-    per-call cost and never raise.  A source is one binaryFile row
-    (or a member of one), so every batch holds whole sources and no
-    state carries over between batches."""
+    ``parse_assemble`` call per batch, outside the per-file fault
+    isolation: its kernels have a fixed per-call cost and never
+    raise.  A source is one binaryFile row (or a member of one), so
+    every batch holds whole sources and no state carries over between
+    batches."""
     for rows in _decode_routed(batches):
         rows = rows.rename(columns={"sink": "_stamp"})
-        text = rows["text"].where(rows["_stamp"].isna(), None)
-        parsed = parse_series(
-            text,
-            tz_offset_min=tz_offset_min,
-            anchor_years=rows["ts"].dt.year,
-        )
-        yield repair_assemble(pd.concat([rows, parsed], axis=1))
+        yield parse_assemble(
+            rows, tz_offset_min, anchor_years=rows["ts"].dt.year
+        )[_ASSEMBLED_COLS]
 
 
 def _load_files(spark: SparkSession, paths) -> DataFrame:
@@ -469,7 +465,7 @@ def assembled_from_paths(
       reader fan-in, s4.rs processing_loop), parses the batch's text
       lines with per-source mtime anchor years and the job's
       ``tz_offset_min``, then repairs and assembles each source in
-      the same frame (``operators.assemble.repair_assemble``), as s4's
+      the same frame (``operators.assemble.parse_assemble``), as s4's
       reader thread per file does.  The binary readers' pre-stamped
       records keep their own ts, sink and turn as the message's.
       Every source is one whole binaryFile row, so it never spans two

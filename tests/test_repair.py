@@ -91,35 +91,3 @@ def test_repair_leaves_absolute_patterns_alone(spark):
     out = repair_stage(parse_stage(df))
     iso = out.filter(F.col("pattern_id") == 1).collect()[0]
     assert iso["ts_parsed"] == _ts("2024-03-01T10:00:00")
-
-def test_fused_repair_equals_chained_reference(spark):
-    """repair_stage must be row-identical to the chained reference
-    expression anchor→rollover on a frame exercising BOTH fixups plus
-    interleaved continuations and multi-year rollovers."""
-    from super_speedy_syslog_searcher_spark.operators.repair import (
-        anchor_uptime,
-        repair_noyear_rollover,
-    )
-
-    rows = [
-        # conv with two rollovers + noise + continuation
-        ("c1", 0, "user", "Dec 31 23:00:00 a", "none", _ts("2022-12-31T23:00:00")),
-        ("c1", 1, "user", "Jan  1 01:00:00 b", "none", _ts("2023-01-01T01:00:00")),
-        ("c1", 2, "user", "no datetime here", "none", _ts("2023-01-01T02:00:00")),
-        ("c1", 3, "user", "Dec 31 22:00:00 c", "none", _ts("2023-12-31T22:00:00")),
-        ("c1", 4, "user", "Jan  2 03:00:00 d", "none", _ts("2024-01-02T03:00:00")),
-        # conv mixing uptime rows with noyear rows
-        ("c2", 0, "user", "[10.000000] boot", "none", _ts("2024-01-01T00:00:10")),
-        ("c2", 1, "user", "Jan  5 09:00:00 e", "none", _ts("2024-01-05T09:00:00")),
-        ("c2", 2, "user", "[99.250000] disk", "none", _ts("2024-01-01T00:01:39.25")),
-        # conv with only absolute stamps (must pass through untouched)
-        ("c3", 0, "user", "2024-02-02T02:02:02 f", "none", _ts("2024-02-02T02:02:02")),
-    ]
-    df = spark.createDataFrame(rows, SCHEMA)
-    parsed = parse_stage(df)
-    ref = repair_noyear_rollover(anchor_uptime(parsed))
-    fused = repair_stage(parsed)
-    key = ["conv_id", "turn_idx"]
-    a = {tuple(r[k] for k in key): r.asDict() for r in ref.collect()}
-    b = {tuple(r[k] for k in key): r.asDict() for r in fused.collect()}
-    assert a == b

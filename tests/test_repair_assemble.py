@@ -1,8 +1,9 @@
-"""``operators.assemble.repair_assemble`` — the log-file search's
-pandas repair + assembly — against the Spark forms it replaces in the
-search: ``assemble_stage(repair_stage(df))`` and the chained reference
-``assemble_stage(repair_noyear_rollover(anchor_uptime(df)))``, plus
-the stamped-row projection, over the same parsed rows."""
+"""``operators.assemble.repair_assemble`` — the pandas repair +
+assembly of the batch pipeline and the log-file search — against the
+window forms it replaces, ``assemble_stage(repair_stage(df))`` plus
+the search's stamped-row projection, over the same parsed rows; and
+the batch pipeline's one Python pass (``pipeline.assembled``) against
+the same window forms over a table."""
 
 from __future__ import annotations
 
@@ -22,11 +23,8 @@ from super_speedy_syslog_searcher_spark.operators.assemble import (
     assemble_stage,
     repair_assemble,
 )
-from super_speedy_syslog_searcher_spark.operators.repair import (
-    anchor_uptime,
-    repair_noyear_rollover,
-    repair_stage,
-)
+from super_speedy_syslog_searcher_spark.operators.parse import parse_stage
+from super_speedy_syslog_searcher_spark.operators.repair import repair_stage
 
 COLS = ["conv_id", "turn_idx", "role", "tool", "text", "ts",
         "ts_eff", "sink_eff", "msg_turn_idx"]
@@ -128,7 +126,9 @@ def _columns(records: list[tuple]) -> dict[str, list]:
 
 def _kernel(frame: pd.DataFrame) -> dict[str, list]:
     out = repair_assemble(frame)
-    assert list(out.columns) == COLS
+    assert list(out.columns) == list(frame.columns) + [
+        "msg_turn_idx", "ts_eff", "sink_eff"]
+    out = out[COLS]
     return _columns(
         [tuple(_py(v) for v in r)
          for r in out.astype(object).itertuples(index=False)]
@@ -151,10 +151,7 @@ def _spark(spark, frame: pd.DataFrame, repair) -> dict[str, list]:
     return _columns([tuple(r) for r in out.collect()])
 
 
-REPAIRS = {
-    "fused": repair_stage,
-    "chained": lambda df: repair_noyear_rollover(anchor_uptime(df)),
-}
+REPAIRS = {"chained": repair_stage}
 
 
 @pytest.mark.parametrize("repair", sorted(REPAIRS))
@@ -224,5 +221,108 @@ def test_search_takes_centuries_of_rollover(spark, tmp_path):
 
 
 def test_kernel_takes_an_empty_frame():
-    out = repair_assemble(_parsed(["pre.log"]).iloc[:0])
-    assert list(out.columns) == COLS and len(out) == 0
+    frame = _parsed(["pre.log"]).iloc[:0]
+    out = repair_assemble(frame)
+    assert list(out.columns) == list(frame.columns) + [
+        "msg_turn_idx", "ts_eff", "sink_eff"] and len(out) == 0
+
+
+TABLE = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
+
+
+def _table(spark, extra: dict[str, list]):
+    """The unstamped fixture sources plus ``extra``, as a transcripts
+    table."""
+    sources = {n: v for n, v in SOURCES.items() if n != "events.evtx"}
+    return spark.createDataFrame(
+        [
+            (name, i, "log", text, "none", _ts(ts))
+            for name, lines in {**sources, **extra}.items()
+            for i, (text, ts, _) in enumerate(lines)
+        ],
+        TABLE,
+    )
+
+
+def _sorted_columns(df) -> dict[str, list]:
+    rows = sorted(map(tuple, df.collect()), key=lambda r: (r[0], r[1]))
+    return {c: [r[i] for r in rows] for i, c in enumerate(df.columns)}
+
+
+def test_table_pass_carries_conversations_across_batches(spark):
+    """Five-row Arrow batches split every multi-row conversation: the
+    uptime anchor, the rollover count and the forward fill each need
+    the whole conversation, so ``pipeline.assembled`` must hold a
+    batch's last conversation back for the next batch."""
+    from super_speedy_syslog_searcher_spark import pipeline as P
+
+    extra = {
+        # an anchor, then continuations: batch boundaries fall inside,
+        # so some batch starts with a continuation
+        "tail.log": [("2024-01-05T03:00:00 app start",
+                      "2024-01-06T00:00:00", None)]
+        + [(f"    frame {i}", "2024-01-06T00:00:00", None)
+           for i in range(11)],
+        # uptime and no-year rows in one conversation, two rollovers
+        "mixed.log": [
+            ("[10.000000] boot", "2024-01-01T00:00:10", None),
+            ("Dec 31 23:00:00 a", "2024-01-01T00:00:10", None),
+            ("Jan  1 01:00:00 b", "2024-01-01T00:00:10", None),
+            ("no datetime here", "2024-01-01T00:00:10", None),
+            ("Dec 31 22:00:00 c", "2024-01-01T00:00:10", None),
+            ("Jan  2 03:00:00 d", "2024-01-01T00:00:10", None),
+            ("[99.250000] disk", "2024-01-01T00:01:39.25", None),
+        ],
+    }
+    t = _table(spark, extra)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        got = _sorted_columns(P.assembled(t))
+    finally:
+        spark.conf.set(key, saved)
+    want = _sorted_columns(assemble_stage(repair_stage(parse_stage(t))))
+    assert list(got) == list(want)
+    for c in want:
+        assert got[c] == want[c], c
+    eff = dict(zip(zip(got["conv_id"], got["turn_idx"]), got["ts_eff"]))
+    assert eff["tail.log", 11] == _ts("2024-01-05T03:00:00")
+    assert eff["ancient.log", 0] == _ts("1624-12-31T12:00:00")
+
+
+def test_full_merge_runs_one_python_pass(spark, tmp_path):
+    """The table path's executed plan: conv_id exchange → sort → one
+    MapInPandas that parses, repairs and assembles — no parse UDF, no
+    scatter exchange and no window."""
+    from super_speedy_syslog_searcher_spark import pipeline as P
+
+    p = str(tmp_path / "t.parquet")
+    _table(spark, {}).write.parquet(p)
+    merged = P.full_merge(spark.read.parquet(p))
+    merged.collect()
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    # the cached child prints its final and initial plans; count one
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, plan
+    assert "Exchange hashpartitioning(conv_id" in final, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "Window" not in plan, plan
+    assert "xxhash64(conv_id" not in plan, plan
+
+
+def test_narrow_text_len_counts_utf8_bytes(spark):
+    """narrow=True keeps the dropped text's length in UTF-8 octets, as
+    the summary stats expect, not in characters."""
+    from super_speedy_syslog_searcher_spark import pipeline as P
+
+    line = "2024-01-05T03:00:00 deploy ok \U0001f680 caf\u00e9"
+    t = spark.createDataFrame(
+        [("c", 0, "user", line, "none", _ts("2024-01-05T03:00:00"))], TABLE
+    )
+    row = P.parse_repair(t, narrow=True).first()
+    assert "text" not in row.asDict()
+    assert row["text_len"] == len(line.encode()) != len(line)
