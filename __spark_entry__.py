@@ -432,7 +432,7 @@ def q_streaming_evtx(spark, sf_dir):
     """Structured-Streaming EVTX ingestion under the driver oracle:
     the same deterministic two-file corpus as q_evtx_records — with
     f1 written as .evtx.xz to prove the compressed variant streams
-    too — decoded through read_evtx_stream (binaryFile file stream →
+    too — decoded through read_binary_stream (binaryFile file stream →
     per-file chunk walk in mapInPandas), drained with
     Trigger.AvailableNow to parquet, and compared against the
     events-derived oracle.  Raw enumeration-order records (the
@@ -440,8 +440,12 @@ def q_streaming_evtx(spark, sf_dir):
     global window a file stream cannot produce mid-flight)."""
     import tempfile
 
-    from super_speedy_syslog_searcher_spark.operators.evtx import (
-        run_evtx_stream_available_now,
+    from super_speedy_syslog_searcher_spark.operators import evtx
+    from super_speedy_syslog_searcher_spark.sources.logfiles import (
+        read_binary_stream,
+    )
+    from super_speedy_syslog_searcher_spark.streaming.pipeline import (
+        drain_to_parquet,
     )
 
     session.prep(spark)
@@ -449,7 +453,10 @@ def q_streaming_evtx(spark, sf_dir):
     out_dir = tempfile.mkdtemp(prefix="s4sevtx_out_")
     ck = tempfile.mkdtemp(prefix="s4sevtx_ck_")
     _write_evtx_fixtures(spark, sf_dir, in_dir, compress_f1=True)
-    run_evtx_stream_available_now(spark, in_dir, out_dir, ck)
+    stream = read_binary_stream(
+        spark, in_dir, ".evtx", evtx.decode_evtx_file, evtx.RECORDS_SCHEMA
+    )
+    drain_to_parquet(stream, out_dir, ck)
     out = spark.read.parquet(out_dir)
     return out.select(
         F.regexp_extract("source", r"(f\d)\.evtx", 1).alias(
@@ -466,11 +473,15 @@ def q_streaming_evtx(spark, sf_dir):
 def q_streaming_journal(spark, sf_dir):
     """Structured-Streaming journal ingestion under the driver
     oracle — q_journal_records' corpus (f1 as .journal.gz) through
-    read_journal_stream + AvailableNow drain; see q_streaming_evtx."""
+    read_binary_stream + AvailableNow drain; see q_streaming_evtx."""
     import tempfile
 
-    from super_speedy_syslog_searcher_spark.operators.journal import (
-        run_journal_stream_available_now,
+    from super_speedy_syslog_searcher_spark.operators import journal
+    from super_speedy_syslog_searcher_spark.sources.logfiles import (
+        read_binary_stream,
+    )
+    from super_speedy_syslog_searcher_spark.streaming.pipeline import (
+        drain_to_parquet,
     )
 
     session.prep(spark)
@@ -478,7 +489,11 @@ def q_streaming_journal(spark, sf_dir):
     out_dir = tempfile.mkdtemp(prefix="s4sjrnl_out_")
     ck = tempfile.mkdtemp(prefix="s4sjrnl_ck_")
     _write_journal_fixtures(spark, sf_dir, in_dir, compress_f1=True)
-    run_journal_stream_available_now(spark, in_dir, out_dir, ck)
+    stream = read_binary_stream(
+        spark, in_dir, ".journal", journal.decode_journal_file,
+        journal.RECORDS_SCHEMA,
+    )
+    drain_to_parquet(stream, out_dir, ck)
     out = spark.read.parquet(out_dir)
     return out.select(
         F.regexp_extract("source", r"(f\d)\.journal", 1).alias(
@@ -871,7 +886,9 @@ def q_streaming_hourly(spark, sf_dir):
         spark.catalog.dropTempView(name)
     except Exception:
         pass
-    SP.run_hourly_to_memory(spark, in_dir, name)
+    SP.drain_to_memory(
+        SP.hourly_counts(SP.stream_source(spark, in_dir)), name, "complete"
+    )
     return spark.table(name).select(
         "hour", "sink", F.col("rows").cast("bigint").alias("rows")
     )
@@ -903,7 +920,9 @@ def q_streaming_dedup(spark, sf_dir):
         spark.catalog.dropTempView(name)
     except Exception:
         pass
-    SP.run_dedup_to_memory(spark, in_dir, name)
+    SP.drain_to_memory(
+        SP.dedup_keys(SP.stream_source(spark, in_dir)), name, "append"
+    )
     return spark.table(name).select("digest", "text")
 
 
@@ -918,8 +937,12 @@ def q_streaming_assembly(spark, sf_dir):
     now equals batch parse+repair(uptime)+assemble exactly."""
     import tempfile
 
+    from super_speedy_syslog_searcher_spark.streaming.pipeline import (
+        drain_to_parquet,
+        stream_source,
+    )
     from super_speedy_syslog_searcher_spark.streaming.stateful import (
-        run_assembled_available_now,
+        assembled_stream,
     )
 
     session.prep(spark)
@@ -928,7 +951,9 @@ def q_streaming_assembly(spark, sf_dir):
     out_dir = tempfile.mkdtemp(prefix="s4sasm_out_")
     ck = tempfile.mkdtemp(prefix="s4sasm_ck_")
     t.write.mode("overwrite").parquet(in_dir)
-    run_assembled_available_now(spark, in_dir, out_dir, ck)
+    drain_to_parquet(
+        assembled_stream(stream_source(spark, in_dir)), out_dir, ck
+    )
     out = spark.read.parquet(out_dir)
     return out.select(
         "conv_id",
@@ -952,8 +977,12 @@ def q_streaming_scores(spark, sf_dir):
     rollout corpus so shared-prompt groups are real."""
     import tempfile
 
+    from super_speedy_syslog_searcher_spark.streaming.pipeline import (
+        drain_to_parquet,
+        stream_source,
+    )
     from super_speedy_syslog_searcher_spark.streaming.stateful import (
-        run_scored_available_now,
+        scored_stream,
     )
 
     session.prep(spark)
@@ -962,9 +991,8 @@ def q_streaming_scores(spark, sf_dir):
     out_dir = tempfile.mkdtemp(prefix="s4score_out_")
     ck = tempfile.mkdtemp(prefix="s4score_ck_")
     r.write.mode("overwrite").parquet(in_dir)
-    run_scored_available_now(
-        spark, in_dir, out_dir, ck, max_files_per_trigger=4
-    )
+    feed = stream_source(spark, in_dir, max_files_per_trigger=4)
+    drain_to_parquet(scored_stream(feed), out_dir, ck)
     out = spark.read.parquet(out_dir)
     return out.groupBy("conv_id").agg(
         F.expr("max_by(prompt_key, upd_seq)").alias("prompt_key"),
@@ -1672,8 +1700,13 @@ def q_streaming_sessions(spark, sf_dir):
     layout for per-key streaming state."""
     import tempfile
 
+    from super_speedy_syslog_searcher_spark.streaming.pipeline import (
+        drain_to_parquet,
+        stream_source,
+    )
     from super_speedy_syslog_searcher_spark.streaming.stateful import (
-        run_sessions_available_now,
+        EVENTS_SCHEMA,
+        sessionized_stream,
     )
 
     session.prep(spark)
@@ -1687,9 +1720,10 @@ def q_streaming_sessions(spark, sf_dir):
     out_dir = tempfile.mkdtemp(prefix="s4sess_out_")
     ck = tempfile.mkdtemp(prefix="s4sess_ck_")
     ev.repartition(8, "user_id").write.mode("overwrite").parquet(in_dir)
-    run_sessions_available_now(
-        spark, in_dir, out_dir, ck, max_files_per_trigger=2
+    feed = stream_source(
+        spark, in_dir, max_files_per_trigger=2, schema=EVENTS_SCHEMA
     )
+    drain_to_parquet(sessionized_stream(feed), out_dir, ck)
     out = spark.read.parquet(out_dir)
     return out.groupBy("session_id", "user_id").agg(
         F.min("ts").alias("session_start"),
@@ -1857,6 +1891,9 @@ def q_streaming_hll(spark, sf_dir):
     subset)."""
     import tempfile
 
+    from super_speedy_syslog_searcher_spark.operators.sketch import (
+        hll_registers,
+    )
     from super_speedy_syslog_searcher_spark.streaming import (
         pipeline as SP,
     )
@@ -1873,7 +1910,11 @@ def q_streaming_hll(spark, sf_dir):
         spark.catalog.dropTempView(name)
     except Exception:
         pass
-    SP.run_hll_to_memory(spark, in_dir, name, col="text")
+    SP.drain_to_memory(
+        hll_registers(SP.stream_source(spark, in_dir), "text"),
+        name,
+        "complete",
+    )
     return spark.table(name).select(
         F.col("bucket").cast("int").alias("bucket"),
         F.col("maxrho").cast("int").alias("maxrho"),
@@ -1900,7 +1941,11 @@ def q_streaming_cms(spark, sf_dir):
         spark.catalog.dropTempView(name)
     except Exception:
         pass
-    SP.run_cms_to_memory(spark, in_dir, name, col="text")
+    SP.drain_to_memory(
+        SP.cms_cell_stream(SP.stream_source(spark, in_dir), "text"),
+        name,
+        "complete",
+    )
     return spark.table(name).select(
         F.col("j").cast("int").alias("j"),
         F.col("cell").cast("int").alias("cell"),

@@ -458,6 +458,7 @@ def _maybe_summary(args, t, printed: dict, after=None, before=None,
     from . import pipeline as P
     from .patterns import PATTERNS
     from .operators.repair import NOYEAR_PATTERN_IDS
+    from .sources.logfiles import path_to_filetype
 
     err = sys.stderr
 
@@ -554,7 +555,11 @@ def _maybe_summary(args, t, printed: dict, after=None, before=None,
     for r in per_conv:
         err.write(f"File: {r['conv_id']}\n")
         err.write(f"{ind1}About:\n")
-        err.write(f"{ind2}FileType      : transcripts table source\n")
+        kind = (
+            path_to_filetype(r["conv_id"]) if asm is not None
+            else "transcripts table source"
+        )
+        err.write(f"{ind2}FileType      : {kind}\n")
         if r["mtime"] is not None:
             err.write(f"{ind2}Modified time : {r['mtime']} (UTC)\n")
         err.write(f"{ind1}Processed:\n")

@@ -16,8 +16,7 @@ and this assembly over a frame that holds whole sources, as s4's one
 reader thread per file does; ``parse_assemble`` parses the frame
 first.  The batch pipeline (``pipeline.assembled``, over
 conv-sorted partitions) and the log-file search (inside its decoder)
-both run it; the window form stays the reference and the bucketed
-read's (``layout.assembled_from_bucketed``).
+both run it; the window form stays the reference.
 """
 
 from __future__ import annotations

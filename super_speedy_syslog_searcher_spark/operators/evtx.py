@@ -33,7 +33,6 @@ failing the file, matching the crate's lenient chunk recovery.
 
 from __future__ import annotations
 
-import functools
 import struct
 import zlib
 
@@ -42,7 +41,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.logfiles import decode_file_batches, read_binary
+from ..sources.logfiles import read_binary
 
 FILE_MAGIC = b"ElfFile\x00"
 CHUNK_MAGIC = b"ElfChnk\x00"
@@ -150,23 +149,6 @@ def read_evtx(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     return read_binary(spark, paths, decode_evtx_file, RECORDS_SCHEMA)
 
 
-def run_evtx_stream_available_now(
-    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain the EVTX file stream with Trigger.AvailableNow to a
-    parquet sink — the batch-equivalence harness shape (process every
-    file currently present, checkpoint, stop)."""
-    q = (
-        read_evtx_stream(spark, in_dir)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def resort_with_ooo(records: DataFrame) -> DataFrame:
     """The EvtxReader re-sort: records ordered (ts, rec_idx) per
     source — the BTreeMap<(DateTimeL, usize)> key — plus ``ooo``
@@ -253,34 +235,3 @@ def encode_evtx(records: list[dict]) -> bytes:
     struct.pack_into("<HH", hdr, 40, FILE_HEADER_SIZE, len(chunks))
     struct.pack_into("<I", hdr, 124, zlib.crc32(bytes(hdr[0:120])))
     return bytes(hdr) + b"".join(chunks)
-
-
-BINARYFILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, "
-    "content binary"
-)
-
-
-def read_evtx_stream(spark: SparkSession, in_dir: str) -> DataFrame:
-    """Structured-Streaming EVTX ingestion: new .evtx files appearing
-    under ``in_dir`` decode incrementally (binaryFile file-stream →
-    the same per-file chunk walk in mapInPandas).  The stream
-    checkpoint tracks processed FILES, so a restart decodes only new
-    arrivals — the streaming analogue of EvtxReader's one-shot file
-    processing, with exactly-once file accounting for free."""
-    bf = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARYFILE_SCHEMA)
-        # batch routing accepts compressed variants (.evtx.xz etc.;
-        # decode_file_batches decompresses by extension) — the stream
-        # glob must match them too
-        .option(
-            "pathGlobFilter",
-            "*.evtx{,.gz,.bz2,.xz,.lzma,.lz4}",
-        )
-        .load(in_dir)
-    )
-    return bf.select("path", "content").mapInPandas(
-        functools.partial(decode_file_batches, decode=decode_evtx_file),
-        RECORDS_SCHEMA,
-    )

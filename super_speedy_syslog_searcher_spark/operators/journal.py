@@ -34,7 +34,6 @@ tables).
 
 from __future__ import annotations
 
-import functools
 import struct
 
 import numpy as np
@@ -42,7 +41,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.logfiles import decode_file_batches, read_binary
+from ..sources.logfiles import read_binary
 
 SIGNATURE = b"LPKSHHRH"
 HEADER_SIZE_V187 = 240  # through n_entry_arrays (systemd 187+ layout)
@@ -217,22 +216,6 @@ def read_journal(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     return read_binary(spark, paths, decode_journal_file, RECORDS_SCHEMA)
 
 
-def run_journal_stream_available_now(
-    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain the journal file stream with Trigger.AvailableNow to a
-    parquet sink — see evtx.run_evtx_stream_available_now."""
-    q = (
-        read_journal_stream(spark, in_dir)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def encode_journal(records: list[dict]) -> bytes:
     """Inverse encoder (fixtures/tests): dict rows with ``seqnum``,
     ``ts_us``, ``monotonic_us`` and a ``fields`` dict → a
@@ -301,25 +284,3 @@ def encode_journal(records: list[dict]) -> bytes:
         struct.pack_into("<Q", hdr, 184, int(records[0]["ts_us"]))
         struct.pack_into("<Q", hdr, 192, int(records[-1]["ts_us"]))
     return bytes(hdr) + body
-
-
-def read_journal_stream(spark: SparkSession, in_dir: str) -> DataFrame:
-    """Structured-Streaming journal ingestion — see
-    evtx.read_evtx_stream; same shape over the journal object walk."""
-    from .evtx import BINARYFILE_SCHEMA
-
-    bf = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARYFILE_SCHEMA)
-        # match compressed variants like batch routing does
-        # (.journal.gz decompresses inside decode_file_batches)
-        .option(
-            "pathGlobFilter",
-            "*.journal{,.gz,.bz2,.xz,.lzma,.lz4}",
-        )
-        .load(in_dir)
-    )
-    return bf.select("path", "content").mapInPandas(
-        functools.partial(decode_file_batches, decode=decode_journal_file),
-        RECORDS_SCHEMA,
-    )

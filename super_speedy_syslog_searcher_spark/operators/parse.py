@@ -9,9 +9,8 @@ parquet scan accordingly.
 
 Its callers need parsed rows without the conversation-ordered pass:
 the streaming queries (``streaming/``, where a micro-batch does not
-hold whole conversations), parse-at-ingest into the bucketed layout
-(``layout.write_parsed_bucketed``, which repairs on read), and
-``q_logfile_merge``'s raw-parse check.  The batch pipeline
+hold whole conversations) and ``q_logfile_merge``'s raw-parse
+check.  The batch pipeline
 (``pipeline.assembled``) and the log-file search
 (``sources.logfiles.assembled_from_paths``) do not come here: they
 parse inside the one mapInPandas that also repairs and assembles

@@ -18,7 +18,7 @@ Both are per-conversation ordered fixups the reference runs per file:
 
 The batch pipeline and the log-file search run both fixups in numpy
 (``operators.assemble.repair_assemble``); the window forms here are
-the reference it is tested against and the bucketed read's repair.
+the reference it is tested against.
 """
 
 from __future__ import annotations
@@ -97,6 +97,5 @@ def repair_noyear_rollover(df: DataFrame) -> DataFrame:
 def repair_stage(df: DataFrame) -> DataFrame:
     """Full repair in the window form, uptime anchoring then year
     rollover: the reference that tests pin
-    ``operators.assemble.repair_assemble`` against, and the bucketed
-    read's repair (``layout.assembled_from_bucketed``)."""
+    ``operators.assemble.repair_assemble`` against."""
     return repair_noyear_rollover(anchor_uptime(df))

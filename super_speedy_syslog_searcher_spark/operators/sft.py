@@ -5,9 +5,7 @@ fine-tuning examples.
 Both operators are pure window functions over (conv_id, turn_idx) —
 one shuffle keyed on conv_id, sortWithinPartitions on turn_idx, no
 self-join against the corpus, so they hold their shape unchanged at
-10^12 turns (the conv_id hash-partitioning is the same layout
-operators/layout.py's bucketed table already provides, making these
-zero-Exchange on a bucketed read).
+10^12 turns.
 
 Reference parity: s4 has no SFT stage; these are training-data ops
 (SURVEY.md LLM-pipeline section) over the transcript payload.
@@ -297,8 +295,7 @@ def loss_mask_spans(turns: DataFrame) -> DataFrame:
 
     Pure integer window math: line length = len(role) + 2 + len(text)
     + 1; span_start = Σ previous line lengths + len(role) + 2.  One
-    conv_id-keyed Exchange, a single cumulative-sum frame on it —
-    zero-Exchange on the bucketed layout table."""
+    conv_id-keyed Exchange, a single cumulative-sum frame on it."""
     line_len = (
         F.length("role") + F.lit(2) + F.length("text") + F.lit(1)
     )

@@ -448,7 +448,10 @@ def hll_registers(df: DataFrame, col: str, p: int = 8) -> DataFrame:
     a 100 TB corpus computes one distinct estimate with a
     2^p-row reduce instead of a corpus-wide distinct shuffle.  Unlike
     Spark's built-in approx_count_distinct (HLL++, JVM-internal
-    hashing), every bit here is reproducible in any engine."""
+    hashing), every bit here is reproducible in any engine.  Over a
+    stream the aggregate runs in complete/update mode with state
+    bounded at 2^p rows; max is order- and redelivery-insensitive, so
+    the registers equal the batch sketch of everything ingested."""
     m = 1 << p
     rbits = 52 - p
     h = _h13(F.col(col))

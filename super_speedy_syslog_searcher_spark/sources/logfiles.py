@@ -18,7 +18,8 @@ file into one processing loop (s4.rs processing_loop).  Here:
    as text (BOM / null-pattern encoding sniff, per-codec
    decompression).
  * ``read_binary`` / ``decode_file_batches`` — the body of the
-   per-kind binary readers (read_evtx, read_journal, …).
+   per-kind binary readers (read_evtx, read_journal, …);
+   ``read_binary_stream`` is the same decode over a file stream.
 
 Text rows have exactly the transcripts shape (conv_id=file,
 turn_idx=line number, text=line, ts=file mtime stand-in), so the
@@ -261,6 +262,40 @@ def read_binary(
     file inside an Arrow-batched mapInPandas (binaryFile never splits
     a file — the one-reader-per-file model)."""
     return _load_files(spark, paths).select("path", "content").mapInPandas(
+        functools.partial(decode_file_batches, decode=decode), schema
+    )
+
+
+# the binaryFile source's fixed schema (a file stream must declare it)
+BINARYFILE_SCHEMA = (
+    "path string, modificationTime timestamp, length long, "
+    "content binary"
+)
+
+
+def read_binary_stream(
+    spark: SparkSession,
+    in_dir: str,
+    suffix: str,
+    decode: Callable[[bytes], pd.DataFrame],
+    schema: str,
+) -> DataFrame:
+    """``read_binary`` as a file stream: new ``*suffix`` files under
+    ``in_dir`` (plus their compressed variants, which batch routing
+    accepts too) decode incrementally.  The stream checkpoint tracks
+    processed FILES, so a restart decodes only new arrivals —
+    exactly-once file accounting for the reference's one-shot
+    per-file readers."""
+    files = (
+        spark.readStream.format("binaryFile")
+        .schema(BINARYFILE_SCHEMA)
+        .option(
+            "pathGlobFilter",
+            f"*{suffix}{{,{','.join(_COMPRESSION_EXTS)}}}",
+        )
+        .load(in_dir)
+    )
+    return files.select("path", "content").mapInPandas(
         functools.partial(decode_file_batches, decode=decode), schema
     )
 

@@ -13,17 +13,23 @@ Maps the reference's streaming-shaped behaviors (SURVEY.md §2.10):
  * `is_last` end-of-stream flag (src/s4/s4.rs:4538) →
    Trigger.AvailableNow (drain what exists, then stop)
 
-The parse + route + windowed-agg path here is fully incremental and
-restartable from the checkpoint dir.  The ordered per-conversation
-stages (uptime anchoring, sysline assembly) run as
-``applyInPandasWithState`` per conv_id in ``streaming/stateful.py``;
-year-rollover repair stays batch-only.
+A streaming job is a transform over a source (``stream_source``, or
+``sources.logfiles.read_binary_stream`` for binary log files) handed
+to one of two drains: ``drain_to_parquet`` (append, restartable from
+its checkpoint dir — a restart processes only new files) or
+``drain_to_memory`` (an in-memory table; ``mode`` is 'append' for
+row-level transforms, 'complete' for the aggregates).  Both run the
+query with Trigger.AvailableNow and return once it has stopped.  The
+ordered per-conversation stages (uptime anchoring, sysline assembly)
+run as ``applyInPandasWithState`` per conv_id in
+``streaming/stateful.py``; year-rollover repair stays batch-only.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.parse import parse_stage
 
@@ -34,15 +40,49 @@ TRANSCRIPT_SCHEMA = (
 
 
 def stream_source(
-    spark: SparkSession, in_dir: str, max_files_per_trigger: int | None = None
+    spark: SparkSession,
+    in_dir: str,
+    max_files_per_trigger: int | None = None,
+    schema: str = TRANSCRIPT_SCHEMA,
 ) -> DataFrame:
-    """File-stream of transcript parquet files (new files = new data;
-    the Iceberg streaming read is the cluster-scale equivalent)."""
+    """File-stream of parquet files with ``schema`` (new files = new
+    data; the Iceberg streaming read is the cluster-scale
+    equivalent)."""
     return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger or 8)
         .parquet(in_dir)
     )
+
+
+def drain(writer: DataStreamWriter) -> None:
+    """Start ``writer`` with Trigger.AvailableNow and wait until the
+    query stops: it processes every file present at start, commits
+    its checkpoint, and ends.  The ``finally`` also stops it when the
+    wait is interrupted, so no query outlives the call."""
+    query = writer.trigger(availableNow=True).start()
+    try:
+        query.awaitTermination()
+    finally:
+        query.stop()
+
+
+def drain_to_parquet(stream: DataFrame, path: str, checkpoint: str) -> None:
+    """Append ``stream`` to parquet under ``path``.  A restart with the
+    same checkpoint dir processes only files that arrived since
+    (exactly-once file tracking via the stream checkpoint)."""
+    drain(
+        stream.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+    )
+
+
+def drain_to_memory(stream: DataFrame, name: str, mode: str) -> None:
+    """Drain ``stream`` into the in-memory table ``name`` in output
+    ``mode`` — for tests and the driver queries; on a cluster the
+    aggregates go to an Iceberg/Kafka sink in update mode."""
+    drain(stream.writeStream.format("memory").queryName(name).outputMode(mode))
 
 
 def hourly_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -59,25 +99,6 @@ def hourly_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
         .agg(F.count("*").alias("rows"))
         .select(F.col("win.start").alias("hour"), "sink", "rows")
     )
-
-
-def run_routed_available_now(
-    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain the source and fan-out-write parsed rows partitioned by
-    sink (append mode — row-level, no state).  Restart with the same
-    checkpoint dir → only new files are processed (exactly-once file
-    tracking via the stream checkpoint)."""
-    q = (
-        parse_stage(stream_source(spark, in_dir))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def dedup_keys(stream: DataFrame, watermark: str = "3650 days") -> DataFrame:
@@ -98,71 +119,6 @@ def dedup_keys(stream: DataFrame, watermark: str = "3650 days") -> DataFrame:
     )
 
 
-def run_dedup_to_memory(
-    spark: SparkSession, in_dir: str, query_name: str
-) -> None:
-    """Drain the source through the streaming dedup into a memory
-    sink (append mode — dedup emits each key's first arrival)."""
-    q = (
-        dedup_keys(stream_source(spark, in_dir))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_hourly_to_memory(
-    spark: SparkSession, in_dir: str, query_name: str
-) -> None:
-    """Windowed aggregate to an in-memory sink (complete mode) for
-    tests/demo; on a cluster this is an Iceberg/Kafka sink in update
-    mode."""
-    q = (
-        hourly_counts(stream_source(spark, in_dir))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def hll_register_stream(stream: DataFrame, col: str = "text") -> DataFrame:
-    """HLL registers maintained over a stream: the groupBy(bucket)
-    max(rho) aggregate is streaming-legal (complete/update mode), so
-    the 2^p-row register table stays current as micro-batches arrive
-    — a running distinct-count sketch over an unbounded feed, with
-    state bounded at 2^p rows regardless of stream volume.  Registers
-    equal the batch sketch over everything ingested so far
-    (max is order- and redelivery-insensitive)."""
-    from ..operators.sketch import hll_registers
-
-    return hll_registers(stream, col)
-
-
-def run_hll_to_memory(
-    spark: SparkSession,
-    in_dir: str,
-    query_name: str,
-    col: str = "text",
-) -> None:
-    """Drain the register stream to an in-memory sink (complete
-    mode); on a cluster this is an update-mode sink keyed on bucket."""
-    q = (
-        hll_register_stream(stream_source(spark, in_dir), col)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def cms_cell_stream(
     stream: DataFrame, col: str = "text", d: int = 4, w: int = 1024
 ) -> DataFrame:
@@ -173,7 +129,7 @@ def cms_cell_stream(
     token feed.  Unlike the HLL registers (max — redelivery-proof),
     COUNT is additive, so this assumes an exactly-once source
     (redelivered files would double-count; dedup upstream with
-    streaming_dedup's digest state if the source is at-least-once).
+    ``dedup_keys`` if the source is at-least-once).
     Equals the batch cms_cells over everything ingested so far."""
     from ..operators.sketch import _h13
 
@@ -195,23 +151,3 @@ def cms_cell_stream(
         .groupBy("j", "cell")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-
-
-def run_cms_to_memory(
-    spark: SparkSession,
-    in_dir: str,
-    query_name: str,
-    col: str = "text",
-) -> None:
-    """Drain the CMS cell stream to an in-memory sink (complete
-    mode); on a cluster this is an update-mode sink keyed on
-    (j, cell)."""
-    q = (
-        cms_cell_stream(stream_source(spark, in_dir), col)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -30,6 +30,12 @@ the first-row anchor — what the reference's own single-pass
 accretion does (syslogprocessor.rs:740-810) — is the semantics
 here.  Year-rollover repair remains batch-only (it needs the
 conversation's full ordered span).
+
+The same module holds the rollout-scoring and sessionization streams.
+Each ``*_stream`` function is a transform over a source from
+``streaming.pipeline.stream_source`` (sessions: ``schema=EVENTS_SCHEMA``);
+callers drain it with ``streaming.pipeline.drain_to_parquet`` (or
+``drain_to_memory`` in 'append' mode — every stream here appends).
 """
 
 from __future__ import annotations
@@ -173,30 +179,6 @@ def assembled_stream(
     )
 
 
-def run_assembled_available_now(
-    spark,
-    in_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    state_ttl_ms: int | None = None,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    from .pipeline import stream_source
-
-    q = (
-        assembled_stream(
-            stream_source(spark, in_dir, max_files_per_trigger),
-            state_ttl_ms=state_ttl_ms,
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 # ------------------------------------------------------------------
 # Streaming rollout scoring (RL / best-of-n over a live rollout feed)
 
@@ -270,30 +252,6 @@ def scored_stream(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_scored_available_now(
-    spark,
-    in_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drain the rollout feed with Trigger.AvailableNow into parquet.
-    Downstream, each conv's max-upd_seq row is its final score and
-    best-of-n reduces to the batch argmax — the driver oracle checks
-    the drained result against batch sft.best_of_n exactly."""
-    from .pipeline import stream_source
-
-    q = (
-        scored_stream(stream_source(spark, in_dir, max_files_per_trigger))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 # ------------------------------------------------------------------
 # Streaming sessionization (gap-based sessions over a live event feed)
 
@@ -360,41 +318,8 @@ def sessionized_stream(stream: DataFrame) -> DataFrame:
     )
 
 
+# the events parquet (clickstream feed) that sessionized_stream reads
 EVENTS_SCHEMA = (
     "event_id long, user_id long, ts timestamp, event_type string, "
     "value double, props string"
 )
-
-
-def events_stream_source(
-    spark, in_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-stream of events parquet (the clickstream feed; the
-    Iceberg streaming read is the cluster-scale equivalent)."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger or 8)
-        .parquet(in_dir)
-    )
-
-
-def run_sessions_available_now(
-    spark,
-    in_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drain the event feed with Trigger.AvailableNow into parquet
-    session-labeled events."""
-    q = (
-        sessionized_stream(
-            events_stream_source(spark, in_dir, max_files_per_trigger)
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

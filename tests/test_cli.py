@@ -418,8 +418,8 @@ def test_cli_file_paths_mode_multi_format(tmp_path):
 
 def test_cli_file_mode_summary_counts_binary_syslines(tmp_path):
     """File-mode --summary consumes the assembled frame: binary
-    sources (pre-timestamped) report their records as syslines, and
-    the Parsers block lists the sink."""
+    sources (pre-timestamped) report their records as syslines, the
+    Parsers block lists the sink, and FileType is the routed kind."""
     from super_speedy_syslog_searcher_spark.operators.evtx import (
         encode_evtx,
     )
@@ -467,6 +467,15 @@ def test_cli_file_mode_summary_counts_binary_syslines(tmp_path):
     assert blocks.get("e.evtx") == "3"
     assert blocks.get("a.log") == "2"
     assert "@[evtx] (uses 3)" in err
+    # file mode names each source's routed kind
+    kinds = dict(
+        _re.findall(
+            r"File: \S*/(\S+)\n.*?FileType      : ([^\n]+)",
+            err,
+            _re.S,
+        )
+    )
+    assert kinds == {"a.log": "text", "e.evtx": "evtx"}
 
 
 def test_cli_tz_offset_end_to_end(tmp_path):

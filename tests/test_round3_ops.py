@@ -204,28 +204,3 @@ def test_tar_member_sources(spark, tmp_path):
     assert by_src["sub/b.log.gz"] == [(0, "1704112402.123456 strace")]
     assert all("logs.tar!" in r["conv_id"] for r in rows)
     assert all(str(r["ts"]).startswith("2024-01-01") for r in rows)
-
-
-def test_bucketed_layout_assembles_without_shuffle(spark, tmp_path):
-    """Parse-at-ingest into a conv-bucketed+sorted table, then repair
-    + assembly on read with ZERO Exchange in the plan — the 100 TB
-    Iceberg bucket(conv_id) layout (operators/layout.py).  Output is
-    value-identical to the ordinary scattered batch path."""
-    from super_speedy_syslog_searcher_spark import pipeline as P, session
-    from super_speedy_syslog_searcher_spark.datagen import transcripts_df
-    from super_speedy_syslog_searcher_spark.operators import layout
-
-    session.prep(spark)
-    t = transcripts_df(spark, "/root/testdata/sf0.001")
-    layout.write_parsed_bucketed(t, "t_bucketed_r3", n_buckets=32)
-    try:
-        asm = layout.assembled_from_bucketed(spark, "t_bucketed_r3")
-        plan = _plan(asm)
-        n_ex = len(set(re.findall(r"\((\d+)\) Exchange", plan)))
-        assert n_ex == 0, f"expected shuffle-free assembly, plan:\n{plan}"
-        cols = ["conv_id", "turn_idx", "ts_eff", "sink_eff", "msg_turn_idx"]
-        a = sorted(map(tuple, asm.select(*cols).collect()))
-        b = sorted(map(tuple, P.assembled(t).select(*cols).collect()))
-        assert a == b
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_r3")

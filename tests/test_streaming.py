@@ -28,7 +28,17 @@ def test_streaming_routed_and_incremental(spark, tmp_path):
     t = transcripts_df(spark, SF_SMOKE)
     _write_input(spark, t, in_dir, "@a")
 
-    sp.run_routed_available_now(spark, in_dir, out_dir, ckpt)
+    def drain():
+        # fan-out: the drain of drain_to_parquet, partitioned by sink
+        sp.drain(
+            parse_stage(sp.stream_source(spark, in_dir))
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .partitionBy("sink")
+        )
+
+    drain()
     got1 = spark.read.parquet(out_dir)
     batch = parse_stage(spark.read.parquet(in_dir))
     assert got1.count() == batch.count()
@@ -38,7 +48,7 @@ def test_streaming_routed_and_incremental(spark, tmp_path):
 
     # append new files; restart with same checkpoint → only new rows added
     _write_input(spark, t, in_dir, "@b")
-    sp.run_routed_available_now(spark, in_dir, out_dir, ckpt)
+    drain()
     got2 = spark.read.parquet(out_dir)
     assert got2.count() == 2 * got1.count()
     # the first batch's rows were not reprocessed/duplicated
@@ -51,7 +61,11 @@ def test_streaming_hourly_matches_batch(spark, tmp_path):
     t = transcripts_df(spark, SF_SMOKE)
     t.coalesce(2).write.mode("overwrite").parquet(in_dir)
 
-    sp.run_hourly_to_memory(spark, in_dir, "hourly_t")
+    sp.drain_to_memory(
+        sp.hourly_counts(sp.stream_source(spark, in_dir)),
+        "hourly_t",
+        "complete",
+    )
     got = {
         (r["hour"], r["sink"]): r["rows"]
         for r in spark.sql("SELECT * FROM hourly_t").collect()
@@ -87,11 +101,18 @@ def test_stateful_assembly_equals_batch(spark, tmp_path):
     t = transcripts_df(spark, SF_SMOKE)
     cols = ["conv_id", "turn_idx", "msg_turn_idx", "ts_eff", "sink_eff"]
 
+    def drain():
+        sp.drain_to_parquet(
+            stateful.assembled_stream(sp.stream_source(spark, in_dir)),
+            out_dir,
+            ckpt,
+        )
+
     # two arrival batches split on turn ranges (append-only contract)
     t.filter("turn_idx < 20").coalesce(1).write.mode("append").parquet(in_dir)
-    stateful.run_assembled_available_now(spark, in_dir, out_dir, ckpt)
+    drain()
     t.filter("turn_idx >= 20").coalesce(1).write.mode("append").parquet(in_dir)
-    stateful.run_assembled_available_now(spark, in_dir, out_dir, ckpt)
+    drain()
 
     got = spark.read.parquet(out_dir).select(*cols)
     want = assemble_stage(anchor_uptime(parse_stage(t))).select(*cols)
@@ -125,13 +146,12 @@ def test_stateful_state_ttl_eviction(spark, tmp_path):
         ).parquet(in_dir)
 
     def run():
-        stateful.run_assembled_available_now(
-            spark,
-            in_dir,
+        stream = sp.stream_source(spark, in_dir, max_files_per_trigger=1)
+        sp.drain_to_parquet(
+            # evict 1 event-minute after anchor
+            stateful.assembled_stream(stream, state_ttl_ms=60_000),
             out_dir,
             ckpt,
-            state_ttl_ms=60_000,  # evict 1 event-minute after anchor
-            max_files_per_trigger=1,
         )
 
     t0 = __import__("datetime").datetime(2024, 1, 5, 3, 0, 0)
@@ -184,9 +204,11 @@ def test_stateful_ttl_late_datetime_row_dropped(spark, tmp_path):
         ).parquet(in_dir)
 
     def run():
-        stateful.run_assembled_available_now(
-            spark, in_dir, out_dir, ckpt,
-            state_ttl_ms=60_000, max_files_per_trigger=1,
+        stream = sp.stream_source(spark, in_dir, max_files_per_trigger=1)
+        sp.drain_to_parquet(
+            stateful.assembled_stream(stream, state_ttl_ms=60_000),
+            out_dir,
+            ckpt,
         )
 
     # batch 1 pushes the watermark to 09:00 (10:00 max - 1h delay)
@@ -235,7 +257,11 @@ def test_stateful_uptime_anchor_carried_across_batches(spark, tmp_path):
         ).parquet(in_dir)
 
     def run():
-        stateful.run_assembled_available_now(spark, in_dir, out_dir, ckpt)
+        sp.drain_to_parquet(
+            stateful.assembled_stream(sp.stream_source(spark, in_dir)),
+            out_dir,
+            ckpt,
+        )
 
     # batch 1: boot becomes computable — uptime 100s at ts 03:00:00
     # → boot = 02:58:20
@@ -278,8 +304,12 @@ def test_streaming_evtx_incremental_decode(spark, tmp_path):
     directory decode incrementally; the checkpoint makes the restart
     process ONLY the new file."""
     from super_speedy_syslog_searcher_spark.operators.evtx import (
+        RECORDS_SCHEMA,
+        decode_evtx_file,
         encode_evtx,
-        read_evtx_stream,
+    )
+    from super_speedy_syslog_searcher_spark.sources.logfiles import (
+        read_binary_stream,
     )
 
     in_dir = tmp_path / "evtx_in"
@@ -288,15 +318,10 @@ def test_streaming_evtx_incremental_decode(spark, tmp_path):
     ck = str(tmp_path / "evtx_ck")
 
     def drain():
-        q = (
-            read_evtx_stream(spark, str(in_dir))
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        stream = read_binary_stream(
+            spark, str(in_dir), ".evtx", decode_evtx_file, RECORDS_SCHEMA
         )
-        q.awaitTermination()
+        sp.drain_to_parquet(stream, out_dir, ck)
 
     base = 1_704_423_600_000_000
     (in_dir / "a.evtx").write_bytes(
@@ -335,7 +360,9 @@ def test_streaming_dedup_collapses_redelivery(spark, tmp_path):
         in_dir
     )
     name = "t_stream_dedup"
-    sp.run_dedup_to_memory(spark, in_dir, name)
+    sp.drain_to_memory(
+        sp.dedup_keys(sp.stream_source(spark, in_dir)), name, "append"
+    )
     got = spark.table(name)
     expected = t.select(F.md5("text").alias("digest")).distinct().count()
     assert got.count() == expected
@@ -357,11 +384,18 @@ def test_streaming_scores_equal_batch_and_best_of_n(spark, tmp_path):
     ckpt = str(tmp_path / "sc_ck")
     t = transcripts_df(spark, SF_SMOKE).cache()
 
+    def drain():
+        sp.drain_to_parquet(
+            stateful.scored_stream(sp.stream_source(spark, in_dir)),
+            out_dir,
+            ckpt,
+        )
+
     # two arrival batches split on turn ranges (append-only contract)
     t.filter("turn_idx < 10").coalesce(1).write.mode("append").parquet(in_dir)
-    stateful.run_scored_available_now(spark, in_dir, out_dir, ckpt)
+    drain()
     t.filter("turn_idx >= 10").coalesce(1).write.mode("append").parquet(in_dir)
-    stateful.run_scored_available_now(spark, in_dir, out_dir, ckpt)
+    drain()
 
     got = spark.read.parquet(out_dir)
     fin = got.groupBy("conv_id").agg(
@@ -419,14 +453,19 @@ def test_streaming_sessionize_equals_batch(spark, tmp_path):
         .first()
     )
     mid = span["t0"] + (span["t1"] - span["t0"]) / 2
+
+    def drain():
+        feed = sp.stream_source(spark, in_dir, schema=stateful.EVENTS_SCHEMA)
+        sp.drain_to_parquet(stateful.sessionized_stream(feed), out_dir, ckpt)
+
     ev.filter(F.col("ts") <= mid).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    stateful.run_sessions_available_now(spark, in_dir, out_dir, ckpt)
+    drain()
     ev.filter(F.col("ts") > mid).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    stateful.run_sessions_available_now(spark, in_dir, out_dir, ckpt)
+    drain()
 
     got = spark.read.parquet(out_dir).select(
         "event_id", "user_id", "ts", "session_id"
@@ -457,17 +496,24 @@ def test_streaming_hll_registers_equal_batch(spark, tmp_path):
     from super_speedy_syslog_searcher_spark.operators.sketch import (
         hll_registers,
     )
-    from super_speedy_syslog_searcher_spark.streaming import pipeline as sp2
 
     in_dir = str(tmp_path / "hll_in")
     t = transcripts_df(spark, SF_SMOKE).cache()
     t.filter("turn_idx < 10").coalesce(1).write.mode("append").parquet(in_dir)
     name = "t_stream_hll"
-    sp2.run_hll_to_memory(spark, in_dir, name, col="text")
+
+    def drain():
+        sp.drain_to_memory(
+            hll_registers(sp.stream_source(spark, in_dir), "text"),
+            name,
+            "complete",
+        )
+
+    drain()
     # second drain: more data + a redelivered subset
     t.filter("turn_idx >= 10").coalesce(1).write.mode("append").parquet(in_dir)
     t.filter("turn_idx % 3 = 0").coalesce(1).write.mode("append").parquet(in_dir)
-    sp2.run_hll_to_memory(spark, in_dir, name, col="text")
+    drain()
 
     got = spark.table(name).select("bucket", "maxrho")
     want = hll_registers(t.select("text"), "text")
@@ -486,13 +532,20 @@ def test_streaming_cms_cells_equal_batch_across_drains(spark, tmp_path):
     from super_speedy_syslog_searcher_spark.operators.sketch import (
         cms_cells,
     )
-    from super_speedy_syslog_searcher_spark.streaming import pipeline as sp2
 
     in_dir = str(tmp_path / "cms_in")
     t = transcripts_df(spark, SF_SMOKE).cache()
     t.filter("turn_idx < 10").coalesce(1).write.mode("append").parquet(in_dir)
     name = "t_stream_cms"
-    sp2.run_cms_to_memory(spark, in_dir, name, col="text")
+
+    def drain():
+        sp.drain_to_memory(
+            sp.cms_cell_stream(sp.stream_source(spark, in_dir), "text"),
+            name,
+            "complete",
+        )
+
+    drain()
 
     def batch_cells(df):
         vocab = (
@@ -513,9 +566,31 @@ def test_streaming_cms_cells_equal_batch_across_drains(spark, tmp_path):
     t.filter("turn_idx >= 10").coalesce(1).write.mode("append").parquet(
         in_dir
     )
-    sp2.run_cms_to_memory(spark, in_dir, name, col="text")
+    drain()
     got2 = spark.table(name).select("j", "cell", "c")
     want2 = batch_cells(t.select("text"))
     assert got2.exceptAll(want2).count() == 0
     assert want2.exceptAll(got2).count() == 0
     t.unpersist()
+
+
+def test_drains_leave_no_query_running(spark, tmp_path):
+    """Both drains return only after their AvailableNow query has
+    stopped: a query still running when the caller moves on (or the
+    process exits) would keep its executors and file handles."""
+    in_dir = str(tmp_path / "live_in")
+    transcripts_df(spark, SF_SMOKE).limit(50).write.parquet(in_dir)
+    sp.drain_to_parquet(
+        sp.stream_source(spark, in_dir),
+        str(tmp_path / "live_out"),
+        str(tmp_path / "live_ck"),
+    )
+    assert spark.streams.active == []
+    sp.drain_to_memory(
+        sp.hourly_counts(sp.stream_source(spark, in_dir)),
+        "t_live_hourly",
+        "complete",
+    )
+    assert spark.streams.active == []
+    assert spark.read.parquet(str(tmp_path / "live_out")).count() == 50
+    assert spark.table("t_live_hourly").count() > 0
