@@ -10,6 +10,7 @@ compare-current-and-expected strategy.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -46,16 +47,11 @@ DT_AFTER = "2024-01-10 00:00:00"
 DT_BEFORE = "2024-01-20 00:00:00"
 
 
-def _t(spark: SparkSession, sf_dir: str) -> DataFrame:
-    session.prep(spark)
-    return transcripts_df(spark, sf_dir)
-
-
 # --------------------------------------------------------------- queries
 
 def q_parse_extract(spark, sf_dir):
     """Pattern-bank datetime extraction + repair (SURVEY §2.2/§2.3)."""
-    df = P.parse_repair(_t(spark, sf_dir))
+    df = P.parse_repair(transcripts_df(spark, sf_dir))
     return df.select(
         "conv_id",
         "turn_idx",
@@ -73,7 +69,7 @@ def q_merge_ordered(spark, sf_dir):
     full_merge output is already range-sorted; ordered=True makes
     with_global_seq attach seq numbers without re-sorting (one sort,
     one lineage)."""
-    merged = P.full_merge(_t(spark, sf_dir), DT_AFTER, DT_BEFORE)
+    merged = P.full_merge(transcripts_df(spark, sf_dir), DT_AFTER, DT_BEFORE)
     return with_global_seq(merged, ordered=True).select(
         F.col("msg_seq").cast("bigint").alias("msg_seq"),
         "conv_id",
@@ -86,19 +82,23 @@ def q_merge_ordered(spark, sf_dir):
 
 
 def q_pattern_counts(spark, sf_dir):
-    return stats.pattern_counts(P.parse_repair(_t(spark, sf_dir), narrow=True))
+    t = transcripts_df(spark, sf_dir)
+    return stats.pattern_counts(P.parse_repair(t, narrow=True))
 
 
 def q_sink_counts(spark, sf_dir):
-    return stats.sink_counts(P.assembled(_t(spark, sf_dir), narrow=True))
+    t = transcripts_df(spark, sf_dir)
+    return stats.sink_counts(P.assembled(t, narrow=True))
 
 
 def q_hourly_hist(spark, sf_dir):
-    return stats.hourly_histogram(P.assembled(_t(spark, sf_dir), narrow=True))
+    t = transcripts_df(spark, sf_dir)
+    return stats.hourly_histogram(P.assembled(t, narrow=True))
 
 
 def q_conv_summary(spark, sf_dir):
-    df = stats.conv_summary(P.parse_repair(_t(spark, sf_dir), narrow=True))
+    t = transcripts_df(spark, sf_dir)
+    df = stats.conv_summary(P.parse_repair(t, narrow=True))
     return df.select(
         "conv_id",
         F.col("turns").cast("bigint").alias("turns"),
@@ -112,7 +112,7 @@ def q_conv_summary(spark, sf_dir):
 
 def q_routed_enriched(spark, sf_dir):
     """Broadcast-dim enrich + per-sink routed tallies (§2.4, route)."""
-    df = enrich_stage(P.assembled(_t(spark, sf_dir), narrow=True))
+    df = enrich_stage(P.assembled(transcripts_df(spark, sf_dir), narrow=True))
     return df.groupBy(
         F.col("sink_eff").alias("sink"), "role_kind"
     ).agg(
@@ -125,7 +125,8 @@ def q_routed_enriched(spark, sf_dir):
 
 
 def q_global_summary(spark, sf_dir):
-    df = stats.global_summary(P.assembled(_t(spark, sf_dir), narrow=True))
+    t = transcripts_df(spark, sf_dir)
+    df = stats.global_summary(P.assembled(t, narrow=True))
     return df.select(
         F.col("rows_total").cast("bigint").alias("rows_total"),
         F.col("syslines_total").cast("bigint").alias("syslines_total"),
@@ -138,7 +139,7 @@ def q_global_summary(spark, sf_dir):
 
 def q_sysline_assembly(spark, sf_dir):
     """Continuation-line attachment (§2.6 sysline assembly)."""
-    df = P.assembled(_t(spark, sf_dir), narrow=True)
+    df = P.assembled(transcripts_df(spark, sf_dir), narrow=True)
     return (
         df.filter(F.col("msg_turn_idx").isNotNull())
         .groupBy("conv_id", F.col("msg_turn_idx").cast("int").alias("msg_turn_idx"))
@@ -149,7 +150,8 @@ def q_sysline_assembly(spark, sf_dir):
 def q_dt_window_sinks(spark, sf_dir):
     """dt-range filter pushdown + per-sink counts (binary-search
     analogue, §2.7)."""
-    df = dt_filter(P.assembled(_t(spark, sf_dir), narrow=True), DT_AFTER, DT_BEFORE)
+    t = transcripts_df(spark, sf_dir)
+    df = dt_filter(P.assembled(t, narrow=True), DT_AFTER, DT_BEFORE)
     return df.groupBy(F.col("sink_eff").alias("sink")).agg(
         F.count("*").cast("bigint").alias("rows")
     )
@@ -158,7 +160,7 @@ def q_dt_window_sinks(spark, sf_dir):
 def q_conv_dominant_pattern(spark, sf_dir):
     """s4 dt_patterns_analysis: learned per-conv dominant pattern."""
     return stats.conv_dominant_pattern(
-        P.parse_repair(_t(spark, sf_dir), narrow=True)
+        P.parse_repair(transcripts_df(spark, sf_dir), narrow=True)
     )
 
 
@@ -170,7 +172,7 @@ def q_union_merge(spark, sf_dir):
     paths), then runs the full dt-filtered global merge.  Every turn
     ties with its twin on ts_eff, so the query also pins the
     deterministic tie-break (ts_eff, conv_id, turn_idx) at 2× scale."""
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     # same multiset as t UNION ALL ('alt-'-prefixed t), but via one
     # explode instead of a self-union: the union form evaluated the
     # whole transcripts derivation (two datagen window stages + the
@@ -221,8 +223,7 @@ def q_logfile_merge(spark, sf_dir):
         read_log_files_decoded,
     )
 
-    session.prep(spark)
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     rows = (
         t.select(
             (F.substring("conv_id", 6, 5).cast("int") % 3).alias("fb"),
@@ -286,22 +287,8 @@ def q_fixedstruct_records(spark, sf_dir):
         read_fixedstruct,
     )
 
-    session.prep(spark)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    rows = (
-        ev.select(
-            (F.col("event_id") % 2).cast("int").alias("fb"),
-            F.col("event_id").alias("e"),
-            F.col("user_id").alias("u"),
-            F.unix_micros(
-                F.col("ts").cast("timestamp")
-            ).alias("eus"),
-        )
-        .orderBy("fb", "e")
-        .collect()
-    )
     recs = {0: [], 1: []}
-    for r in rows:
+    for r in _binary_fixture_rows(spark, sf_dir):
         recs[r["fb"]].append(
             {
                 "ut_type": 8 if r["e"] % 4 == 0 else 7,
@@ -335,8 +322,9 @@ def q_fixedstruct_records(spark, sf_dir):
 
 def _binary_fixture_rows(spark, sf_dir):
     """Shared events-table derivation for the binary fixtures (two
-    files keyed by event_id parity; same rows feed q_evtx_records,
-    q_journal_records and their streaming twins)."""
+    files keyed by event_id parity; same rows feed
+    q_fixedstruct_records, q_evtx_records, q_journal_records and
+    their streaming twins)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
         ev.select(
@@ -448,7 +436,6 @@ def q_streaming_evtx(spark, sf_dir):
         drain_to_parquet,
     )
 
-    session.prep(spark)
     in_dir = tempfile.mkdtemp(prefix="s4sevtx_in_")
     out_dir = tempfile.mkdtemp(prefix="s4sevtx_out_")
     ck = tempfile.mkdtemp(prefix="s4sevtx_ck_")
@@ -484,7 +471,6 @@ def q_streaming_journal(spark, sf_dir):
         drain_to_parquet,
     )
 
-    session.prep(spark)
     in_dir = tempfile.mkdtemp(prefix="s4sjrnl_in_")
     out_dir = tempfile.mkdtemp(prefix="s4sjrnl_out_")
     ck = tempfile.mkdtemp(prefix="s4sjrnl_ck_")
@@ -530,7 +516,6 @@ def q_etl_records(spark, sf_dir):
         read_etl,
     )
 
-    session.prep(spark)
     START_US = 1_500_000_000_000_000
     files = {0: [], 1: []}
     for r in _binary_fixture_rows(spark, sf_dir):
@@ -588,7 +573,6 @@ def q_asl_records(spark, sf_dir):
         read_asl,
     )
 
-    session.prep(spark)
     files = {0: [], 1: []}
     for r in _binary_fixture_rows(spark, sf_dir):
         e, u = r["e"], r["u"]
@@ -660,7 +644,6 @@ def q_odl_records(spark, sf_dir):
         read_odl,
     )
 
-    session.prep(spark)
     files = {0: [], 1: []}
     for r in _binary_fixture_rows(spark, sf_dir):
         files[r["fb"]].append(
@@ -724,7 +707,6 @@ def q_evtx_records(spark, sf_dir):
         resort_with_ooo,
     )
 
-    session.prep(spark)
     d = tempfile.mkdtemp(prefix="s4evtx_")
     paths = _write_evtx_fixtures(spark, sf_dir, d)
     out = resort_with_ooo(read_evtx(spark, paths))
@@ -763,7 +745,6 @@ def q_journal_records(spark, sf_dir):
         read_journal,
     )
 
-    session.prep(spark)
     d = tempfile.mkdtemp(prefix="s4jrnl_")
     paths = _write_journal_fixtures(spark, sf_dir, d)
     out = read_journal(spark, paths)
@@ -783,7 +764,6 @@ def q_journal_records(spark, sf_dir):
 
 
 def q_dedup_exact(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dedup.exact_dups(docs).select(
         "digest",
@@ -798,13 +778,11 @@ def q_prefix_join(spark, sf_dir):
     doc-keyed verify; the oracle generates candidates INDEPENDENTLY
     (any shared shingle) — equality proves the pigeonhole
     completeness of the prefix filter."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dedup.prefix_filter_pairs(docs)
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dedup.minhash_band_pairs(docs).select(
         F.col("doc_a").cast("bigint").alias("doc_a"),
@@ -813,7 +791,6 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dedup.ngram_jaccard_pairs(docs).select(
         F.col("doc_a").cast("bigint").alias("doc_a"),
@@ -825,7 +802,6 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
 def q_dedup_lsh_verified(spark, sf_dir):
     """Scale path: LSH band candidates → exact Jaccard verify (no
     shingle×shingle join anywhere in the plan)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dedup.lsh_verified_pairs(docs).select(
         F.col("doc_a").cast("bigint").alias("doc_a"),
@@ -835,7 +811,6 @@ def q_dedup_lsh_verified(spark, sf_dir):
 
 
 def q_simhash(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dedup.simhash(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "simhash_hex"
@@ -843,7 +818,6 @@ def q_simhash(spark, sf_dir):
 
 
 def q_ann_cosine_topk(spark, sf_dir):
-    session.prep(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return similarity.cosine_topk(emb).select(
         F.col("probe_id").cast("bigint").alias("probe_id"),
@@ -854,7 +828,6 @@ def q_ann_cosine_topk(spark, sf_dir):
 
 
 def q_ann_ivf_topk(spark, sf_dir):
-    session.prep(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return similarity.ivf_topk(emb).select(
         F.col("probe_id").cast("bigint").alias("probe_id"),
@@ -873,12 +846,11 @@ def q_streaming_hourly(spark, sf_dir):
     their timestamp exists only after the batch repair stage)."""
     import tempfile
 
-    session.prep(spark)
     from super_speedy_syslog_searcher_spark.streaming import (
         pipeline as SP,
     )
 
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     in_dir = tempfile.mkdtemp(prefix="s4stream_in_")
     t.write.mode("overwrite").parquet(in_dir)
     name = "s4_stream_hourly_q"
@@ -904,12 +876,11 @@ def q_streaming_dedup(spark, sf_dir):
     oracle is the batch DISTINCT."""
     import tempfile
 
-    session.prep(spark)
     from super_speedy_syslog_searcher_spark.streaming import (
         pipeline as SP,
     )
 
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     in_dir = tempfile.mkdtemp(prefix="s4stream_dedup_in_")
     t.write.mode("overwrite").parquet(in_dir)
     t.filter(F.col("turn_idx") % 7 == 0).write.mode("append").parquet(
@@ -945,8 +916,7 @@ def q_streaming_assembly(spark, sf_dir):
         assembled_stream,
     )
 
-    session.prep(spark)
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     in_dir = tempfile.mkdtemp(prefix="s4sasm_in_")
     out_dir = tempfile.mkdtemp(prefix="s4sasm_out_")
     ck = tempfile.mkdtemp(prefix="s4sasm_ck_")
@@ -985,7 +955,6 @@ def q_streaming_scores(spark, sf_dir):
         scored_stream,
     )
 
-    session.prep(spark)
     r = _rollouts(spark, sf_dir)
     in_dir = tempfile.mkdtemp(prefix="s4score_in_")
     out_dir = tempfile.mkdtemp(prefix="s4score_out_")
@@ -1009,7 +978,6 @@ def q_dedup_embedding(spark, sf_dir):
     derive-the-fixture idiom as the transcripts corpus; the operator
     then finds the planted pairs via IVF-bucket candidates, never
     all-pairs."""
-    session.prep(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     copies = emb.filter(F.col("vec_id") % 25 == 0).select(
         (F.col("vec_id") + 10000).alias("vec_id"),
@@ -1036,7 +1004,6 @@ def q_contamination(spark, sf_dir):
     then the 5-gram-overlap check flags every contaminated training
     doc.  The benchmark's distinct grams broadcast; corpus rows never
     shuffle."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plant = lambda cond: F.concat(  # noqa: E731
         F.col("text"), F.when(cond, F.lit(LEAK)).otherwise(F.lit(""))
@@ -1062,7 +1029,6 @@ def q_pii_redact(spark, sf_dir):
     redact it independently — Spark with Java-regex regexp_replace,
     the oracle with DuckDB's RE2 ('g' flag); the shared patterns avoid
     every dialect-divergent construct."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     aug = docs.select(
         "doc_id",
@@ -1100,7 +1066,6 @@ def q_domain_profile(spark, sf_dir):
     extract hosts with the shared RE2-safe pattern, and aggregate
     (n_urls, n_docs) per domain; a 4-entry blocklist marks blocked
     domains via broadcast join."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     aug = docs.select(
         "doc_id",
@@ -1136,7 +1101,6 @@ def q_winnow(spark, sf_dir):
     guarantee-carrying selection (any shared ≥ w+k-1-token substring
     shares a fingerprint) computed by both engines through the same
     packed-integer min-per-window, no augmentation needed."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = dedup.winnow_fingerprints(docs)
     return out.select(
@@ -1150,7 +1114,6 @@ def q_gopher_quality(spark, sf_dir):
     """Gopher rule-based quality filter (Rae et al. 2021): per-doc
     rule flags + combined keep decision, all thresholds evaluated by
     integer cross-multiplication (engine-portable, no floats)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.gopher_quality(docs)
 
@@ -1158,7 +1121,6 @@ def q_gopher_quality(spark, sf_dir):
 def q_tfidf_topk(spark, sf_dir):
     """Top-5 tf-idf terms per document (linear idf N/df — mul/div
     only, engine-portable integer-scaled score)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.tfidf_topk(docs, k=5)
 
@@ -1167,7 +1129,6 @@ def q_kmeans_embed(spark, sf_dir):
     """Lloyd's k-means (k=8, 4 iterations) over the embedding table in
     fixed-point integer arithmetic — iterative yet hash-checkable: the
     DuckDB oracle replays the identical iterations as chained CTEs."""
-    session.prep(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return cluster.kmeans_embed(emb, k=8, n_iter=4)
 
@@ -1175,7 +1136,6 @@ def q_kmeans_embed(spark, sf_dir):
 def q_dsir_weights(spark, sf_dir):
     """DSIR importance weights (target = lang 'en'): count-weighted
     integer sum of quantized unigram probability ratios."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.dsir_weights(docs)
 
@@ -1184,14 +1144,12 @@ def q_sft_pairs(spark, sf_dir):
     """SFT (prompt, response) extraction: each user turn paired with
     the first following assistant turn in-conversation, skipped when
     another user turn intervenes.  One conv_id-keyed window scan."""
-    session.prep(spark)
     return sft.build_sft_pairs(transcripts_df(spark, sf_dir))
 
 
 def q_conv_chunks(spark, sf_dir):
     """Sliding last-4-turn context windows at stride 2 per
     conversation (long-context curriculum chunking)."""
-    session.prep(spark)
     return sft.conv_chunks(transcripts_df(spark, sf_dir), k=4, stride=2)
 
 
@@ -1247,7 +1205,6 @@ def q_rollout_tree(spark, sf_dir):
     per distinct conversation prefix, the number of rollouts passing
     through it and the number of distinct continuations — the dedup
     ledger for shared-prefix storage of RL / best-of-n samples."""
-    session.prep(spark)
     return sft.rollout_tree(_rollouts(spark, sf_dir))
 
 
@@ -1255,14 +1212,12 @@ def q_best_of_n(spark, sf_dir):
     """Best-of-n selection: highest-scoring rollout per shared-prompt
     group (score = total assistant characters, deterministic
     tie-break)."""
-    session.prep(spark)
     return sft.best_of_n(_rollouts(spark, sf_dir))
 
 
 def q_preference_pairs(spark, sf_dir):
     """RLHF preference pairs: (chosen, rejected) = (argmax, argmin)
     rollout per shared-prompt group where the scores differ."""
-    session.prep(spark)
     return sft.preference_pairs(_rollouts(spark, sf_dir))
 
 
@@ -1270,7 +1225,6 @@ def q_grpo_advantage(spark, sf_dir):
     """Group-relative advantages (GRPO/RLOO baseline): per rollout,
     its score centered on its shared-prompt group mean, integer
     permille via truncating division (identical in both engines)."""
-    session.prep(spark)
     return sft.grpo_advantage(_rollouts(spark, sf_dir))
 
 
@@ -1309,7 +1263,6 @@ def q_bt_ratings(spark, sf_dir):
     """Bradley-Terry strength fitting over pairwise rollout outcomes
     (fixed-point MM iterations, bit-identical to the DuckDB chained-
     CTE replay): the rating step of RLHF preference-data curation."""
-    session.prep(spark)
     out = rank.pairwise_outcomes(_bt_scored(spark, sf_dir))
     return rank.bradley_terry(out, n_iter=6)
 
@@ -1318,21 +1271,18 @@ def q_loss_mask_spans(spark, sf_dir):
     """SFT loss-mask char spans: [start, end) offsets of every
     assistant turn's text within the 'role: text\\n'-rendered
     conversation — pure integer cumulative-window math."""
-    session.prep(spark)
     return sft.loss_mask_spans(transcripts_df(spark, sf_dir))
 
 
 def q_role_alternation(spark, sf_dir):
     """Per-conversation chat-format hygiene report: first/last role,
     adjacent same-role repeats, and the strict-dialogue verdict."""
-    session.prep(spark)
     return sft.role_alternation(transcripts_df(spark, sf_dir))
 
 
 def q_fim_split(spark, sf_dir):
     """Deterministic fill-in-the-middle transform (PSM mode): two
     hash-derived interior cuts per document, zero shuffle."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return transforms.fim_split(docs)
 
@@ -1341,7 +1291,6 @@ def q_token_budget_sample(spark, sf_dir):
     """Token-budget corpus assembly: per-source token quotas filled
     in deterministic hash order (whitespace tokens; budget map keyed
     on the synthetic sources)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     budgets = {f"src{k}": 150 * (k + 1) for k in range(0, 20, 2)}
     return sketch.token_budget_sample(docs, budgets)
@@ -1351,7 +1300,6 @@ def q_pack_sft(spark, sf_dir):
     """SFT packing with loss masks: whole conversations packed into
     2000-char sequences (two-level distributed prefix sum, no global
     window), assistant spans re-based to their pack."""
-    session.prep(spark)
     return sft.pack_sft(transcripts_df(spark, sf_dir), capacity=2000)
 
 
@@ -1361,7 +1309,6 @@ def q_dedup_survivors(spark, sf_dir):
     (tie-break smallest doc_id) — the step that turns pair detection
     into an actual deduplicated corpus keyed on quality, not on
     arbitrary min-id."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cc = dedup.duplicate_clusters(dedup.lsh_verified_pairs(docs))
     qual = textstats.quality_scores(docs).select("doc_id", "quality_x10k")
@@ -1384,7 +1331,6 @@ def q_curriculum_bins(spark, sf_dir):
     """Exact quality-decile curriculum bins: order-statistic
     thresholds from the frequency table, applied as a narrow literal
     comparison map (no global window)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     qual = textstats.quality_scores(docs).select("doc_id", "quality_x10k")
     return sketch.curriculum_bins(qual)
@@ -1405,7 +1351,6 @@ def q_c4_filter(spark, sf_dir):
     terminal-punctuation / >=5-words / no-javascript rules, per-doc
     curly-brace / lorem-ipsum / >=3-surviving-lines rules, rebuilt
     clean text.  One doc_id hash aggregate, no join or window."""
-    session.prep(spark)
     return lines.c4_line_filter(_synth_lines(spark, sf_dir))
 
 
@@ -1415,7 +1360,6 @@ def q_line_dedup(spark, sf_dir):
     excised — boilerplate banners vanish.  First-occurrence table via
     map-side-combinable groupBy (hot banner keys collapse per map
     task), then one line-keyed join back and one doc aggregate."""
-    session.prep(spark)
     return lines.line_dedup(_synth_lines(spark, sf_dir))
 
 
@@ -1423,7 +1367,6 @@ def q_bpe_pairs(spark, sf_dir):
     """Weighted adjacent character-pair counts over the corpus — the
     statistic the first BPE merge maximizes; the explode runs on the
     distinct-token table, never the corpus."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return bpe.pair_counts(docs).select(
         "pair", F.col("n").cast("bigint").alias("n")
@@ -1436,7 +1379,6 @@ def q_bpe_train(spark, sf_dir):
     rewrote), so there is no single-statement SQL oracle; the driver
     records the rows-only check and pytest pins equivalence against a
     naive single-machine trainer on randomized corpora."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return bpe.train_bpe(docs, n_merges=8).select(
         F.col("rank").cast("int").alias("rank"),
@@ -1461,7 +1403,6 @@ def q_dup_spans(spark, sf_dir):
     both), so corpus-wide duplicate 8-grams exist by construction in
     both engines; duplicate_spans marks every covered token, merges
     islands into spans, and rebuilds the excised text."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     aug = docs.select(
         "doc_id",
@@ -1493,7 +1434,6 @@ def q_dedup_incremental(spark, sf_dir):
     copies — and docs ≡ 15 mod 30 take base doc (id+2)'s text plus one
     appended token — near-dup candidates.  Both engines derive the
     planted texts and the digest/band classification identically."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = docs.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
     n1 = docs.select(
@@ -1536,7 +1476,6 @@ def q_pack_sequences(spark, sf_dir):
     output-identical to the global-window form; bounded explode onto
     overlapped packs, pack_id shuffle; DuckDB oracle reproduces with
     one global window (its own engine's choice)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = textstats.pack_sequences_bucketed(docs)
     return out.select(
@@ -1553,7 +1492,6 @@ def q_dedup_semantic(spark, sf_dir):
     (planted 1.5x-scaled copies, same derivation as dedup_embedding):
     nearest-cell assignment, lowest-vec_id representative per cell,
     drop members above the cosine-to-representative threshold."""
-    session.prep(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     copies = emb.filter(F.col("vec_id") % 25 == 0).select(
         (F.col("vec_id") + 10000).alias("vec_id"),
@@ -1573,7 +1511,6 @@ def q_dedup_semantic(spark, sf_dir):
 
 
 def q_text_tokens(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.token_counts(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1584,7 +1521,6 @@ def q_text_tokens(spark, sf_dir):
 
 
 def q_text_quality(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.quality_scores(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1597,7 +1533,6 @@ def q_text_quality(spark, sf_dir):
 
 
 def q_lang_id(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.lang_id(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1608,7 +1543,6 @@ def q_lang_id(spark, sf_dir):
 
 
 def q_doc_fingerprint(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.fingerprints(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1621,7 +1555,6 @@ def q_multimodal_frames(spark, sf_dir):
     """Frame-sampling over the binary payload (mapInPandas; the
     video/audio frame-sample plumbing with a deterministic fake
     decode)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return multimodal.frame_samples(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1631,7 +1564,6 @@ def q_multimodal_frames(spark, sf_dir):
 
 
 def q_multimodal_meta(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return multimodal.extract_metadata(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1645,7 +1577,6 @@ def q_distinct_kmv(spark, sf_dir):
     """Deterministic K-minimum-values distinct estimate of the corpus
     vocabulary (engine-portable alternative to HLL++; the DuckDB
     oracle reproduces the estimate bit-for-bit)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = docs.select(
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok")
@@ -1661,7 +1592,6 @@ def q_cms_heavy_hitters(spark, sf_dir):
     guarantee that makes the constant-size sketch a scan pre-filter
     at 100 TB).  One corpus groupBy; everything after runs on the
     vocabulary / the d*w-row sketch (broadcast)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return sketch.cms_heavy_hitters(docs, d=4, w=1024, denom=500)
 
@@ -1673,12 +1603,11 @@ def q_hll_distinct(spark, sf_dir):
     engines, unlike approx_count_distinct's JVM-internal HLL++.
     Two regimes in one result: the tiny document vocabulary (linear
     counting) and the near-unique transcript texts (raw HLL)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = docs.select(
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok")
     )
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     d1 = sketch.hll_distinct(toks, "tok").withColumn(
         "src", F.lit("doc_tokens")
     )
@@ -1709,7 +1638,6 @@ def q_streaming_sessions(spark, sf_dir):
         sessionized_stream,
     )
 
-    session.prep(spark)
     ev = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -1749,7 +1677,6 @@ def q_bloom_prefilter(spark, sf_dir):
     set.  No false negatives ever (bloom_pass ⊇ exact, test-pinned);
     false positives surfaced per row — the deterministic, oracle-
     checkable form of Spark's runtime bloom-filter pushdown."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     keys = docs.filter(F.col("doc_id") % 10 == 0).select("text")
     return sketch.bloom_prefilter(docs, keys, mbits=512, k=4)
@@ -1760,9 +1687,8 @@ def q_rate_anomalies(spark, sf_dir):
     output: hours whose row count exceeds 3× the sink's exact median
     hourly count, flagged with integer cross-multiplication (no
     float percentile)."""
-    session.prep(spark)
     return stats.rate_anomalies(
-        P.assembled(_t(spark, sf_dir), narrow=True)
+        P.assembled(transcripts_df(spark, sf_dir), narrow=True)
     )
 
 
@@ -1772,8 +1698,7 @@ def q_zorder_key(spark, sf_dir):
     rewrites, pure integer bit interleave + top-bit bucket."""
     from super_speedy_syslog_searcher_spark.operators import layout
 
-    session.prep(spark)
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     d = t.select(
         "conv_id",
         F.col("turn_idx").cast("int").alias("turn_idx"),
@@ -1794,7 +1719,6 @@ def q_inverted_index(spark, sf_dir):
     and the posting-list skew guard)."""
     from super_speedy_syslog_searcher_spark.operators import textstats
 
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.inverted_index(docs, df_cap=64)
 
@@ -1803,7 +1727,6 @@ def q_response_latency(spark, sf_dir):
     """Reply-latency distribution over (user -> assistant) pairs:
     exact integer p50/p90/p99 of whole-second latencies — the SLA
     profile of an agent-transcript corpus."""
-    session.prep(spark)
     out = sft.response_latency(transcripts_df(spark, sf_dir))
     return out.select(
         F.col("q_permille").cast("int").alias("q_permille"),
@@ -1817,7 +1740,6 @@ def q_hourly_uniques(spark, sf_dir):
     per-group HLL estimate (one sketch per hour, 2^8 registers each)
     — the grouped-distinct shape where the sketch replaces the
     row-wide distinct shuffle at 10^12 rows."""
-    session.prep(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return temporal.hourly_uniques(ev, p=8)
 
@@ -1827,7 +1749,6 @@ def q_corpus_diff(spark, sf_dir):
     derived identically in both engines: every 13th doc removed,
     every 7th changed (' v2' suffix), every 11th re-added under a new
     id.  One id-keyed digest join; no text moves."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     changed = docs.filter(F.col("doc_id") % 13 != 0).select(
         "doc_id",
@@ -1854,7 +1775,6 @@ def q_snapshot_apply(spark, sf_dir):
     tombstones — to the base snapshot; the oracle derives the target
     snapshot directly, so hash equality proves the round-trip law
     (diff -> apply == new)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     deletes = docs.filter(F.col("doc_id") % 13 == 0).select("doc_id")
     updates = docs.filter(
@@ -1877,7 +1797,6 @@ def q_json_props(spark, sf_dir):
     """Schema-on-read JSON payload extraction over events.props
     (JVM-side get_json_object, whole-stage codegen) aggregated per
     event_type."""
-    session.prep(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return transforms.json_props_stats(ev)
 
@@ -1898,8 +1817,7 @@ def q_streaming_hll(spark, sf_dir):
         pipeline as SP,
     )
 
-    session.prep(spark)
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     in_dir = tempfile.mkdtemp(prefix="s4hll_in_")
     t.write.mode("overwrite").parquet(in_dir)
     t.filter(F.col("turn_idx") % 5 == 0).write.mode("append").parquet(
@@ -1932,8 +1850,7 @@ def q_streaming_cms(spark, sf_dir):
         pipeline as SP,
     )
 
-    session.prep(spark)
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     in_dir = tempfile.mkdtemp(prefix="s4cms_in_")
     t.write.mode("overwrite").parquet(in_dir)
     name = "s4_stream_cms_q"
@@ -1958,7 +1875,6 @@ def q_length_quantiles(spark, sf_dir):
     (p50/p90/p99 of n_chars in permille ranks) — pure integer math on
     the distinct-length frequency table, so both engines select the
     identical threshold values."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = sketch.int_quantiles(docs, "n_chars")
     return out.select(
@@ -1972,7 +1888,6 @@ def q_stratified_sample(spark, sf_dir):
     """Deterministic 10% hash-bucket sample of documents, tallied per
     stratum — the reproducible train/val-split shape (pure narrow
     filter, zero shuffle before the tally)."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     s = sketch.stratified_sample(docs, "doc_id", pct=10)
     return s.groupBy("lang").agg(
@@ -1986,7 +1901,6 @@ def q_temperature_mix(spark, sf_dir):
     """Temperature-based (alpha = 1/2) mixture sampling: each source
     contributes budget * sqrt(n_s)/sum sqrt docs, picked in
     deterministic hash order; isqrt is exact integer in both engines."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return sketch.temperature_mix(docs, budget=200)
 
@@ -1994,7 +1908,6 @@ def q_temperature_mix(spark, sf_dir):
 def q_rollout_diversity(spark, sf_dir):
     """Distinct-bigram diversity per shared-prompt rollout group —
     the mode-collapse metric of best-of-n sampling, integer permille."""
-    session.prep(spark)
     return sft.rollout_diversity(_rollouts(spark, sf_dir))
 
 
@@ -2003,7 +1916,7 @@ def q_repeat_collapse(spark, sf_dir):
     conversation collapse to (first_turn, last_turn, n_repeats) —
     runs planted deterministically (system turns of every third conv
     tripled) identically in both engines."""
-    t = _t(spark, sf_dir)
+    t = transcripts_df(spark, sf_dir)
     cnum = F.substring("conv_id", 6, 10).cast("int")
     reps = F.when(
         ((cnum % 3) == 0) & (F.col("role") == "system"),
@@ -2022,14 +1935,13 @@ def q_repeat_collapse(spark, sf_dir):
 def q_log_templates(spark, sf_dir):
     """Log-template mining: digit runs masked to '<n>', templates
     tallied, top-50 via TakeOrdered with deterministic tie-breaks."""
-    return stats.log_templates(_t(spark, sf_dir), topn=50)
+    return stats.log_templates(transcripts_df(spark, sf_dir), topn=50)
 
 
 def q_length_histogram(spark, sf_dir):
     """Mergeable power-of-two histogram of document lengths: bucket =
     floor(log2(n_chars)) exactly via binary-string length (no float
     log); at most 64 rows at any corpus size."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return sketch.log2_histogram(docs, "n_chars")
 
@@ -2039,7 +1951,6 @@ def q_hourly_forecast(spark, sf_dir):
     prediction = actual 24 h earlier, absolute error alongside — the
     capacity-planning baseline; the self-join runs on the hourly
     aggregate, never on events."""
-    session.prep(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return temporal.hourly_forecast(ev)
 
@@ -2048,7 +1959,6 @@ def q_retention(spark, sf_dir):
     """Retention-cohort matrix over the events stream: users bucketed
     by first-event date, counted per later active-day offset — two
     map-side aggs + one user-keyed join, no count(DISTINCT) re-shuffle."""
-    session.prep(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return temporal.retention_cohorts(ev)
 
@@ -2058,7 +1968,6 @@ def q_funnel(spark, sf_dir):
     first qualifying event per step, each step strictly after the
     previous one's timestamp; k user-keyed agg+join rounds, no
     per-user array collection."""
-    session.prep(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return temporal.funnel_conversion(ev)
 
@@ -2069,7 +1978,6 @@ def q_pq_topk(spark, sf_dir):
     deterministic probe — with the true distance alongside so the
     quantization error is auditable.  Bit-identical to the DuckDB
     chained-CTE replay."""
-    session.prep(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return pq.pq_topk(emb)
 
@@ -2078,7 +1986,6 @@ def q_ivf_pq(spark, sf_dir):
     """IVF-PQ ANN (the FAISS IVFx,PQy production shape): coarse cell
     pruning to the probe's 3 nearest cells, PQ ADC only within them;
     true distance audited per row.  Bit-identical DuckDB replay."""
-    session.prep(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return pq.ivf_pq_topk(emb)
 
@@ -2088,7 +1995,7 @@ def q_tool_pagerank(spark, sf_dir):
     transcripts (which tool tends to follow which): fixed-point
     iterations bit-identical to the DuckDB chained-CTE replay; the
     rank table stays distributed through every iteration."""
-    edges = graph.tool_edges(_t(spark, sf_dir))
+    edges = graph.tool_edges(transcripts_df(spark, sf_dir))
     return graph.pagerank(edges, n_iter=3)
 
 
@@ -2097,7 +2004,7 @@ def q_tool_triangles(spark, sf_dir):
     degree orientation (out-degree bounded wedge join); the oracle
     counts triangles independently with a direct a < b < c triple
     join — two different algorithms agreeing bit-for-bit."""
-    edges = graph.tool_edges(_t(spark, sf_dir))
+    edges = graph.tool_edges(transcripts_df(spark, sf_dir))
     return graph.triangle_counts(edges)
 
 
@@ -2105,7 +2012,6 @@ def q_group_split(spark, sf_dir):
     """Leakage-safe train/val/test split: the split key is the hash of
     the SOURCE (group), not the doc, so near-duplicate pages of one
     site can never straddle train and test.  Pure narrow map."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return sketch.group_split(docs, "source", "doc_id", seed="split1")
 
@@ -2113,7 +2019,6 @@ def q_group_split(spark, sf_dir):
 # ------------------------------------------------ general OLAP (TPC-H-ish)
 
 def q_tpch_q1(spark, sf_dir):
-    session.prep(spark)
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -2131,7 +2036,6 @@ def q_tpch_q1(spark, sf_dir):
 
 
 def q_tpch_q3(spark, sf_dir):
-    session.prep(spark)
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -2162,7 +2066,7 @@ def q_tpch_q3(spark, sf_dir):
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: parse → repair →
     assemble → dt-filter → globally ordered merge."""
-    return q_merge_ordered(spark, "/root/testdata/sf0.001")
+    return queries()["merge_ordered"](spark, "/root/testdata/sf0.001")
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -2170,7 +2074,6 @@ def q_dedup_clusters(spark, sf_dir):
     pairs: Spark runs min-label propagation with pointer jumping
     (operators/dedup.duplicate_clusters); the oracle computes the same
     closure with a recursive CTE — two independent CC algorithms."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = dedup.lsh_verified_pairs(docs)
     cc = dedup.duplicate_clusters(pairs)
@@ -2186,7 +2089,6 @@ def q_dedup_clusters(spark, sf_dir):
 
 
 def q_sessionize(spark, sf_dir):
-    session.prep(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -2201,7 +2103,6 @@ def q_sessionize(spark, sf_dir):
 
 
 def q_asof_join(spark, sf_dir):
-    session.prep(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -2224,7 +2125,6 @@ def q_asof_tables(spark, sf_dir):
     NATIVE ASOF JOIN operator — an entirely independent algorithm.
     The right side is pre-aggregated to unique (user_id, ts) with
     max_by so the as-of target is deterministic in both engines."""
-    session.prep(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -2247,7 +2147,6 @@ def q_asof_tables(spark, sf_dir):
 
 
 def q_repetition_metrics(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.repetition_metrics(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2262,7 +2161,6 @@ def q_mixture_sample(spark, sf_dir):
     """Weighted data-mixing sample: per-source keep rates (permille)
     derived from the source suffix so the same map works at every SF;
     src0 carries rate 0 and must vanish from the output."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     rates = {f"src{i}": 50 * (i % 20) for i in range(20)}
     return (
@@ -2277,7 +2175,6 @@ def q_mixture_sample(spark, sf_dir):
 
 
 def q_unigram_logprob(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.unigram_logprob(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2293,7 +2190,6 @@ def q_bigram_logprob(spark, sf_dir):
     unigram_logprob determinism recipe one order up).  Docs with a
     single token have no bigram and produce no row, identically in
     both engines."""
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.bigram_logprob(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2304,7 +2200,6 @@ def q_bigram_logprob(spark, sf_dir):
 
 
 def q_vocab_topk(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.vocab_topk(docs).select(
         "rank", "tok", "count", "cum_permille"
@@ -2312,7 +2207,6 @@ def q_vocab_topk(spark, sf_dir):
 
 
 def q_shard_assign(spark, sf_dir):
-    session.prep(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return sketch.shard_assign(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2321,8 +2215,19 @@ def q_shard_assign(spark, sf_dir):
     )
 
 
+def _prepped(fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` on a session with the package's runtime confs pinned
+    (session.prep): the driver hands every query its own session."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(session.prep(spark), sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
+    return {name: _prepped(fn) for name, fn in {
         "parse_extract": q_parse_extract,
         "merge_ordered": q_merge_ordered,
         "logfile_merge": q_logfile_merge,
@@ -2435,7 +2340,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_train": q_bpe_train,
         "tpch_q1": q_tpch_q1,
         "tpch_q3": q_tpch_q3,
-    }
+    }.items()}
 
 
 # ---------------------------------------------------------------- oracle

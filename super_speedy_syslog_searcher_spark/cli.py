@@ -6,13 +6,14 @@
         /var/log/app.log logs/*.gz events.evtx system.journal wtmp -u -n
 
 Two input modes: a testdata dir holding events.parquet (the
-transcripts-table corpus), or — s4's own invocation shape — one or
-more file paths/globs routed by type (filepreprocessor.rs:1188
-path_to_filetype): text (+gz/bz2/xz, any UTF encoding) runs the full
-parse→repair→assemble pipeline with per-source mtime anchor years;
-.evtx / .journal / utmp-family files decode through the binary
-readers and arrive pre-timestamped; everything fans into ONE
-dt-filtered globally ordered merge.
+transcripts table), or — s4's own shape — file paths/globs routed by
+type (filepreprocessor.rs:1188 path_to_filetype): text (+gz/bz2/xz,
+any UTF encoding) is parsed, repaired and assembled with per-source
+mtime anchor years; .evtx / .journal / utmp-family records arrive
+pre-timestamped.  Either way the assembled rows fan into ONE
+dt-filtered, globally ordered merge, and ``--summary`` reads the same
+assembled frame: regex parsers for text sources (with the no-year
+estimate), the reader kind for binary ones.
 
 Mirrors the reference's UX (README.md:34-56): a datetime window
 (-a/-b) over many sources, globally datetime-ordered output, optional
@@ -440,48 +441,39 @@ def _drain(lines, limit: int) -> dict:
 _SUMMARY_FILE_CAP = 20  # human-facing cap on per-source blocks
 
 
-def _maybe_summary(args, t, printed: dict, after=None, before=None,
-                   t0: float = 0.0, asm=None, tzmin: int = 0) -> None:
+def _maybe_summary(args, asm, printed: dict, after, before, t0: float,
+                   n_invalid: int, table_mode: bool) -> None:
     """--summary parity (printer/summary.rs:864-990 print_summary,
     :1279-1515 per-file Processed/Parsers blocks, :163-189
     SummaryPrinted): per-source About/Processed/Parsers sections for
     the first _SUMMARY_FILE_CAP sources, then the global 'Program
-    summary:' block.  Everything aggregates distributed; only the
-    capped per-source rows and one global row reach the driver (at
-    10^8 convs the full per-source table belongs in a table sink)."""
+    summary:' block, all read from the assembled frame ``asm``.  A
+    row is a sysline when it is its message's anchor; the Parsers
+    block counts anchors per sink, a sink naming a regex pattern
+    printing as that pattern.  Everything aggregates distributed;
+    only the capped per-source rows and one global row reach the
+    driver (at 10^8 convs the full per-source table belongs in a
+    table sink)."""
     if not args.summary:
         return
     import time as _time
 
     from pyspark.sql import functions as F
 
-    from . import pipeline as P
     from .patterns import PATTERNS
-    from .operators.repair import NOYEAR_PATTERN_IDS
     from .sources.logfiles import path_to_filetype
 
     err = sys.stderr
-
-    if asm is not None:
-        # file mode hands us the already-assembled frame (every source
-        # type, binary readers included, carries ts_eff/sink_eff) —
-        # no second parse, and binary sources report real syslines
-        is_anchor = F.col("msg_turn_idx") == F.col("turn_idx")
-        parsed = asm.select(
-            "conv_id",
-            "ts",
-            F.octet_length("text").cast("int").alias("text_len"),
-            F.when(is_anchor, F.col("ts_eff")).alias("ts_parsed"),
-            F.when(
-                is_anchor & (F.col("sink_eff") != "continuation"),
-                F.col("sink_eff"),
-            ).alias("sink_name"),
-        )
-    else:
-        # thread the job's default tz offset through so summary
-        # dt_first/dt_last agree with the rows full_merge emitted
-        # (which parse with tz_offset_min=tzmin) on non-UTC machines
-        parsed = P.parse_repair(t, narrow=True, tz_offset_min=tzmin)
+    by_name = {p.name: p for p in PATTERNS}
+    noyear = [p.name for p in PATTERNS if p.noyear]
+    is_anchor = F.col("msg_turn_idx") == F.col("turn_idx")
+    parsed = asm.select(
+        "conv_id",
+        "ts",
+        F.octet_length("text").cast("int").alias("text_len"),
+        F.when(is_anchor, F.col("ts_eff")).alias("ts_parsed"),
+        F.when(is_anchor, F.col("sink_eff")).alias("sink"),
+    )
     parsed.persist()
     try:
         per_conv = (
@@ -493,17 +485,10 @@ def _maybe_summary(args, t, printed: dict, after=None, before=None,
                 F.min("ts_parsed").alias("dt_first"),
                 F.max("ts_parsed").alias("dt_last"),
                 F.max("ts").alias("mtime"),
-                (
-                    F.lit(None).cast("int")
-                    if asm is not None
-                    else F.year(
-                        F.max(
-                            F.when(
-                                F.col("pattern_id").isin(
-                                    *NOYEAR_PATTERN_IDS
-                                ),
-                                F.col("ts_parsed"),
-                            )
+                F.year(
+                    F.max(
+                        F.when(
+                            F.col("sink").isin(*noyear), F.col("ts_parsed")
                         )
                     )
                 ).alias("noyear_est"),
@@ -513,33 +498,19 @@ def _maybe_summary(args, t, printed: dict, after=None, before=None,
             .collect()
         )
         ids = [r["conv_id"] for r in per_conv]
-        if asm is not None:
-            pat_rows = (
-                parsed.filter(
-                    F.col("conv_id").isin(ids)
-                    & F.col("sink_name").isNotNull()
-                )
-                .groupBy("conv_id", "sink_name")
-                .agg(F.count("*").alias("uses"))
-                .collect()
+        pat_rows = (
+            parsed.filter(
+                F.col("conv_id").isin(ids) & F.col("sink").isNotNull()
             )
-        else:
-            pat_rows = (
-                parsed.filter(
-                    F.col("conv_id").isin(ids)
-                    & F.col("pattern_id").isNotNull()
-                )
-                .groupBy("conv_id", "pattern_id")
-                .agg(F.count("*").alias("uses"))
-                .collect()
-            )
+            .groupBy("conv_id", "sink")
+            .agg(F.count("*").alias("uses"))
+            .collect()
+        )
         pats = {}
         for r in pat_rows:
-            key = (
-                r["sink_name"] if asm is not None else int(r["pattern_id"])
-            )
+            p = by_name.get(r["sink"])
             pats.setdefault(r["conv_id"], []).append(
-                (key, int(r["uses"]))
+                (p.pid if p else r["sink"], int(r["uses"]), p)
             )
         g = parsed.agg(
             F.countDistinct("conv_id").alias("convs"),
@@ -550,14 +521,13 @@ def _maybe_summary(args, t, printed: dict, after=None, before=None,
     finally:
         parsed.unpersist()
 
-    by_pid = {p.pid: p for p in PATTERNS}
     ind1, ind2, ind3 = " " * 4, " " * 8, " " * 12
     for r in per_conv:
         err.write(f"File: {r['conv_id']}\n")
         err.write(f"{ind1}About:\n")
         kind = (
-            path_to_filetype(r["conv_id"]) if asm is not None
-            else "transcripts table source"
+            "transcripts table source" if table_mode
+            else path_to_filetype(r["conv_id"])
         )
         err.write(f"{ind2}FileType      : {kind}\n")
         if r["mtime"] is not None:
@@ -568,19 +538,15 @@ def _maybe_summary(args, t, printed: dict, after=None, before=None,
         err.write(f"{ind2}Syslines      : {r['syslines']}\n")
         err.write(f"{ind2}datetime first: {r['dt_first']}\n")
         err.write(f"{ind2}datetime last : {r['dt_last']}\n")
-        plist = sorted(pats.get(r["conv_id"], []), key=str)
+        plist = sorted(pats.get(r["conv_id"], []), key=lambda e: str(e[:2]))
         if plist:
             err.write(f"{ind1}Parsers:\n")
-        for pid, uses in plist:
-            if isinstance(pid, str):  # file mode: sink name directly
-                err.write(f"{ind2}@[{pid}] (uses {uses})\n")
+        for tag, uses, p in plist:
+            if p is None:  # a binary reader's pre-stamped records
+                err.write(f"{ind2}@[{tag}] (uses {uses})\n")
                 continue
-            p = by_pid.get(pid)
-            err.write(
-                f"{ind2}@[{pid}] regex {p.name if p else '?'} "
-                f"(uses {uses})\n"
-            )
-            if p is not None and p.noyear and r["noyear_est"]:
+            err.write(f"{ind2}@[{tag}] regex {p.name} (uses {uses})\n")
+            if p.noyear and r["noyear_est"]:
                 err.write(
                     f"{ind3}datetime format missing year; estimated "
                     f"year of last sysline {r['noyear_est']}\n"
@@ -591,7 +557,6 @@ def _maybe_summary(args, t, printed: dict, after=None, before=None,
             f"per-source cap {_SUMMARY_FILE_CAP})\n"
         )
 
-    n_invalid = getattr(args, "_n_invalid", 0)
     err.write("Program summary:\n\n")
     err.write(
         f"Paths considered       : {int(g['convs']) + n_invalid}\n"
@@ -609,36 +574,18 @@ def _maybe_summary(args, t, printed: dict, after=None, before=None,
     err.write(f"Processed Syslines     : {g['syslines']}\n")
     err.write("Regex patterns known   : 188\n")
     err.write(f"Regex patterns compiled: {len(PATTERNS)}\n")
-    err.write(
-        "Datetime filter -a     :"
-        + (f" {after} (UTC)\n" if after else "\n")
-    )
-    err.write(
-        "Datetime printed first :"
-        + (
-            f" {printed['dt_first']} (UTC)\n"
-            if printed["dt_first"]
-            else "\n"
-        )
-    )
-    err.write(
-        "Datetime filter -b     :"
-        + (f" {before} (UTC)\n" if before else "\n")
-    )
-    err.write(
-        "Datetime printed last  :"
-        + (
-            f" {printed['dt_last']} (UTC)\n"
-            if printed["dt_last"]
-            else "\n"
-        )
-    )
+    for label, ts in (
+        ("Datetime filter -a     :", after),
+        ("Datetime printed first :", printed["dt_first"]),
+        ("Datetime filter -b     :", before),
+        ("Datetime printed last  :", printed["dt_last"]),
+    ):
+        err.write(label + (f" {ts} (UTC)\n" if ts else "\n"))
     if t0:
         err.write(
             f"realtime elapsed       : "
             f"{_time.perf_counter() - t0:.3f} s\n"
         )
-
 
 
 def _journal_formats():
@@ -853,24 +800,21 @@ def main(argv: list[str] | None = None) -> int:
         and os.path.isdir(args.inputs[0])
         and os.path.exists(os.path.join(args.inputs[0], "events.parquet"))
     )
-    asm_summary = None
+    invalid_paths: list = []
     if table_mode:
         t = transcripts_df(spark, args.inputs[0])
         merged = P.full_merge(t, a_str, b_str, tz_offset_min=tzmin)
+        asm = P.assembled(t, tz_offset_min=tzmin)
     else:
         # s4 <paths> mode: one Python pass per file decodes it by file
         # type, parses text lines with per-source mtime anchor years,
         # and repairs and assembles each source; binary records arrive
         # pre-timestamped.  Then one dt filter and a one-partition
         # merge (drained serially, like s4's single merge thread).
-        # --summary reads this assembled frame (no second parse), so
-        # binary sources show their records as pre-stamped rows (the
-        # Parsers table covers regex-parsed sources only).
         from .operators.merge import dt_filter as _dtf
         from .operators.merge import merge_ordered as _mo
         from .sources.logfiles import assembled_from_paths
 
-        invalid_paths: list = []
         try:
             asm = assembled_from_paths(
                 spark, args.inputs, tz_offset_min=tzmin,
@@ -883,11 +827,7 @@ def main(argv: list[str] | None = None) -> int:
             spark.stop()
             return 1
         merged = _mo(_dtf(asm, a_str, b_str))
-        asm_summary = asm
-        args._n_invalid = len(invalid_paths)
-        t = asm.select(
-            "conv_id", "turn_idx", "role", "text", "tool", "ts"
-        )
+        t = asm
     sep = decode_separator(args.separator)
     if args.out_format == "jsonl":
         # journalctl -o json analogue: a to_json projection, rendered
@@ -973,7 +913,9 @@ def main(argv: list[str] | None = None) -> int:
         lines = merged.select(out.alias("line"), "ts_eff", "conv_id")
     st = _drain(_maybe_color(args, lines), args.limit)
     # --summary works with every output format
-    _maybe_summary(args, t, st, after, before, t0, asm_summary, tzmin=tzmin)
+    _maybe_summary(
+        args, asm, st, after, before, t0, len(invalid_paths), table_mode
+    )
     spark.stop()
     return 0
 

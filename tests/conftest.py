@@ -6,7 +6,8 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # The suite shares one long-lived JVM (the session fixture).  Under the
 # package's 64g default driver heap it grows past the RAM of a small

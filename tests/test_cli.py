@@ -4,6 +4,7 @@ src/s4/s4.rs:552-559,3537,3614) + end-to-end CLI run."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import subprocess
 import sys
 
@@ -17,6 +18,15 @@ from super_speedy_syslog_searcher_spark.cli import (
 )
 
 NOW = dt.datetime(2024, 6, 1, 12, 0, 0)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _cli(*argv):
+    """Run this checkout's CLI in a subprocess, output captured."""
+    cmd = [sys.executable, "-m", "super_speedy_syslog_searcher_spark.cli"]
+    return subprocess.run(
+        [*cmd, *argv], capture_output=True, text=True, timeout=300, cwd=REPO
+    )
 
 
 @pytest.mark.parametrize(
@@ -84,25 +94,16 @@ def test_bad_filter_rejected():
 
 def test_cli_end_to_end():
     """Run the CLI binary-style; ordered, prepended, bounded output."""
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            "/root/testdata/sf0.001",
-            "-a",
-            "2024-01-10",
-            "-b",
-            "@+5d",
-            "-u",
-            "-l",
-            "--limit",
-            "25",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
+    out = _cli(
+        "/root/testdata/sf0.001",
+        "-a",
+        "2024-01-10",
+        "-b",
+        "@+5d",
+        "-u",
+        "-l",
+        "--limit",
+        "25",
     )
     assert out.returncode == 0, out.stderr[-800:]
     lines = out.stdout.strip().splitlines()
@@ -115,29 +116,20 @@ def test_cli_end_to_end():
 def test_cli_align_tz_separator():
     """-w width alignment + -z arbitrary tz + escaped separator:
     byte-level shape of every prepended field."""
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            "/root/testdata/sf0.001",
-            "-a",
-            "2024-01-10",
-            "-b",
-            "@+5d",
-            "-z",
-            "-0800",
-            "-l",
-            "-w",
-            "--separator",
-            r"\t",
-            "--limit",
-            "20",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
+    out = _cli(
+        "/root/testdata/sf0.001",
+        "-a",
+        "2024-01-10",
+        "-b",
+        "@+5d",
+        "-z",
+        "-0800",
+        "-l",
+        "-w",
+        "--separator",
+        r"\t",
+        "--limit",
+        "20",
     )
     assert out.returncode == 0, out.stderr[-800:]
     lines = out.stdout.rstrip("\n").split("\n")
@@ -160,25 +152,16 @@ def test_cli_format_jsonl():
     per merged row, rendered by a distributed to_json projection."""
     import json as _json
 
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            "/root/testdata/sf0.001",
-            "-a",
-            "2024-01-10",
-            "-b",
-            "@+5d",
-            "--format",
-            "jsonl",
-            "--limit",
-            "15",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
+    out = _cli(
+        "/root/testdata/sf0.001",
+        "-a",
+        "2024-01-10",
+        "-b",
+        "@+5d",
+        "--format",
+        "jsonl",
+        "--limit",
+        "15",
     )
     assert out.returncode == 0, out.stderr[-800:]
     lines = out.stdout.strip().splitlines()
@@ -195,15 +178,10 @@ def test_cli_format_short_iso_and_export():
     lines carry an ISO stamp + host/ident[pid] prefix; export emits
     key=value blocks (journalreader.rs:544-583 mode set)."""
     def run(fmt):
-        out = subprocess.run(
-            [
-                sys.executable, "-m",
-                "super_speedy_syslog_searcher_spark.cli",
-                "/root/testdata/sf0.001",
-                "-a", "2024-01-10", "-b", "@+5d",
-                "--format", fmt, "--limit", "5",
-            ],
-            capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        out = _cli(
+            "/root/testdata/sf0.001",
+            "-a", "2024-01-10", "-b", "@+5d",
+            "--format", fmt, "--limit", "5",
         )
         assert out.returncode == 0, out.stderr[-800:]
         return out.stdout
@@ -227,17 +205,12 @@ def test_cli_prepend_dt_format_and_filename():
     -n prepends the source basename (s4 -n / --prepend-dt-format)."""
     import re as _re
 
-    out = subprocess.run(
-        [
-            sys.executable, "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            "/root/testdata/sf0.001",
-            "-a", "2024-01-10", "-b", "@+5d",
-            "-u", "--prepend-dt-format", "%Y-%m-%d %H:%M:%S",
-            "-n", "--prepend-separator", "|",
-            "--limit", "4",
-        ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+    out = _cli(
+        "/root/testdata/sf0.001",
+        "-a", "2024-01-10", "-b", "@+5d",
+        "-u", "--prepend-dt-format", "%Y-%m-%d %H:%M:%S",
+        "-n", "--prepend-separator", "|",
+        "--limit", "4",
     )
     assert out.returncode == 0, out.stderr[-800:]
     lines = out.stdout.splitlines()
@@ -265,24 +238,15 @@ def test_cli_full_summary_layout():
     counters)."""
     import re as _re
 
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            "/root/testdata/sf0.001",
-            "-a",
-            "2024-01-10",
-            "-b",
-            "2024-01-20",
-            "--limit",
-            "10",
-            "--summary",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
+    out = _cli(
+        "/root/testdata/sf0.001",
+        "-a",
+        "2024-01-10",
+        "-b",
+        "2024-01-20",
+        "--limit",
+        "10",
+        "--summary",
     )
     assert out.returncode == 0, out.stderr[-800:]
     assert len(out.stdout.strip().splitlines()) == 10
@@ -379,21 +343,13 @@ def test_cli_file_paths_mode_multi_format(tmp_path):
             ]
         )
     )
-    out = subprocess.run(
-        [
-            sys.executable, "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            str(tmp_path / "app.log"),
-            str(tmp_path / "zip.log.gz"),
-            str(tmp_path / "events.evtx"),
-            str(tmp_path / "system.journal"),
-            str(tmp_path / "wtmp"),
-            "-u", "-n",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
+    out = _cli(
+        str(tmp_path / "app.log"),
+        str(tmp_path / "zip.log.gz"),
+        str(tmp_path / "events.evtx"),
+        str(tmp_path / "system.journal"),
+        str(tmp_path / "wtmp"),
+        "-u", "-n",
     )
     assert out.returncode == 0, out.stderr[-1500:]
     lines = out.stdout.strip().splitlines()
@@ -419,14 +375,23 @@ def test_cli_file_paths_mode_multi_format(tmp_path):
 def test_cli_file_mode_summary_counts_binary_syslines(tmp_path):
     """File-mode --summary consumes the assembled frame: binary
     sources (pre-timestamped) report their records as syslines, the
-    Parsers block lists the sink, and FileType is the routed kind."""
+    Parsers block lists the sink, text sources list their regex
+    pattern (with the no-year estimate), and FileType is the routed
+    kind."""
+    import os as _os
+
     from super_speedy_syslog_searcher_spark.operators.evtx import (
         encode_evtx,
     )
+    from super_speedy_syslog_searcher_spark.patterns import PATTERNS
 
     (tmp_path / "a.log").write_text(
         "2024-01-05T03:00:10 one\n2024-01-05T03:00:20 two\n"
     )
+    # no-year syslog: the year comes from the file's mtime (2024)
+    (tmp_path / "ny.log").write_text("Jan  5 03:00:10 host msg\n")
+    mtime = dt.datetime(2024, 2, 15, tzinfo=dt.timezone.utc).timestamp()
+    _os.utime(tmp_path / "ny.log", (mtime, mtime))
     (tmp_path / "e.evtx").write_bytes(
         encode_evtx(
             [
@@ -439,21 +404,14 @@ def test_cli_file_mode_summary_counts_binary_syslines(tmp_path):
             ]
         )
     )
-    out = subprocess.run(
-        [
-            sys.executable, "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            str(tmp_path / "a.log"),
-            str(tmp_path / "e.evtx"),
-            "--summary",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
+    out = _cli(
+        str(tmp_path / "a.log"),
+        str(tmp_path / "e.evtx"),
+        str(tmp_path / "ny.log"),
+        "--summary",
     )
     assert out.returncode == 0, out.stderr[-1200:]
-    assert len(out.stdout.strip().splitlines()) == 5
+    assert len(out.stdout.strip().splitlines()) == 6
     import re as _re
 
     err = out.stderr
@@ -467,6 +425,9 @@ def test_cli_file_mode_summary_counts_binary_syslines(tmp_path):
     assert blocks.get("e.evtx") == "3"
     assert blocks.get("a.log") == "2"
     assert "@[evtx] (uses 3)" in err
+    pid = {p.name: p.pid for p in PATTERNS}["iso8601_notz"]
+    assert f"@[{pid}] regex iso8601_notz (uses 2)" in err
+    assert "estimated year of last sysline 2024" in err
     # file mode names each source's routed kind
     kinds = dict(
         _re.findall(
@@ -475,7 +436,7 @@ def test_cli_file_mode_summary_counts_binary_syslines(tmp_path):
             _re.S,
         )
     )
-    assert kinds == {"a.log": "text", "e.evtx": "evtx"}
+    assert kinds == {"a.log": "text", "e.evtx": "evtx", "ny.log": "text"}
 
 
 def test_cli_tz_offset_end_to_end(tmp_path):
@@ -488,14 +449,8 @@ def test_cli_tz_offset_end_to_end(tmp_path):
     )
 
     def run(*extra):
-        out = subprocess.run(
-            [
-                sys.executable, "-m",
-                "super_speedy_syslog_searcher_spark.cli",
-                str(tmp_path / "naive.log"), "-u", *extra,
-            ],
-            capture_output=True, text=True, timeout=300,
-            cwd="/root/repo",
+        out = _cli(
+            str(tmp_path / "naive.log"), "-u", *extra,
         )
         assert out.returncode == 0, out.stderr[-800:]
         return out.stdout.strip().splitlines()
@@ -529,14 +484,9 @@ def test_cli_journal_file_with_export_format(tmp_path):
             ]
         )
     )
-    out = subprocess.run(
-        [
-            sys.executable, "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            str(tmp_path / "sys.journal"),
-            "--format", "export",
-        ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+    out = _cli(
+        str(tmp_path / "sys.journal"),
+        "--format", "export",
     )
     assert out.returncode == 0, out.stderr[-800:]
     text = out.stdout
@@ -547,14 +497,9 @@ def test_cli_journal_file_with_export_format(tmp_path):
 
 def test_cli_invalid_path_warns_and_continues(tmp_path):
     (tmp_path / "ok.log").write_text("2024-01-05T03:00:10 fine\n")
-    out = subprocess.run(
-        [
-            sys.executable, "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            str(tmp_path / "ok.log"),
-            str(tmp_path / "missing.log"),
-        ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+    out = _cli(
+        str(tmp_path / "ok.log"),
+        str(tmp_path / "missing.log"),
     )
     assert out.returncode == 0, out.stderr[-800:]
     assert len(out.stdout.strip().splitlines()) == 1
@@ -564,14 +509,9 @@ def test_cli_invalid_path_warns_and_continues(tmp_path):
 def test_cli_all_invalid_inputs_clean_error(tmp_path):
     # every input unreadable → one-line ERROR + nonzero exit, no
     # traceback (s4 exits cleanly when nothing is processable)
-    out = subprocess.run(
-        [
-            sys.executable, "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            str(tmp_path / "missing-a.log"),
-            str(tmp_path / "missing-b.log"),
-        ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+    out = _cli(
+        str(tmp_path / "missing-a.log"),
+        str(tmp_path / "missing-b.log"),
     )
     assert out.returncode == 1
     assert "ERROR:" in out.stderr
@@ -587,14 +527,9 @@ def test_cli_color_always(tmp_path):
         "2024-01-05T03:00:10 alpha\n2024-01-05T03:00:11 beta\n"
     )
     (tmp_path / "two.log").write_text("2024-01-05T03:00:12 gamma\n")
-    out = subprocess.run(
-        [
-            sys.executable, "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            str(tmp_path / "one.log"), str(tmp_path / "two.log"),
-            "-c", "always",
-        ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+    out = _cli(
+        str(tmp_path / "one.log"), str(tmp_path / "two.log"),
+        "-c", "always",
     )
     assert out.returncode == 0, out.stderr[-800:]
     lines = out.stdout.strip().splitlines()
@@ -619,12 +554,7 @@ def test_cli_color_always(tmp_path):
     # same source -> same color; deterministic across runs
     assert prefixes[0] == prefixes[1]
     # auto on a non-tty (captured stdout) emits no escapes
-    out2 = subprocess.run(
-        [
-            sys.executable, "-m",
-            "super_speedy_syslog_searcher_spark.cli",
-            str(tmp_path / "one.log"),
-        ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+    out2 = _cli(
+        str(tmp_path / "one.log"),
     )
     assert "\x1b[" not in out2.stdout

@@ -10,7 +10,7 @@ import sys
 
 import pytest
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 pytestmark = pytest.mark.skipif(
