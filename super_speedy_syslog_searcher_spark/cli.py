@@ -826,6 +826,10 @@ def main(argv: list[str] | None = None) -> int:
             print(f"ERROR: {exc}", file=sys.stderr)
             spark.stop()
             return 1
+        if args.summary or args.prepend_align:
+            # -w's label width (before the drain) and --summary (after
+            # it) read asm again: decode every file once, not per read
+            asm.persist()
         merged = _mo(_dtf(asm, a_str, b_str))
         t = asm
     sep = decode_separator(args.separator)
@@ -881,7 +885,8 @@ def main(argv: list[str] | None = None) -> int:
             if args.prepend_align:
                 # s4 -w: pad every source label to the widest (s4.rs:
                 # 6282-6299 computes prepended-name width before printing).
-                # One metadata-sized agg on the cheap transcripts frame.
+                # One agg over the transcripts frame (file mode: the
+                # persisted assembled frame).
                 width = t.agg(
                     F.max(F.length("conv_id")).alias("w")
                 ).collect()[0]["w"] or 0
@@ -916,6 +921,7 @@ def main(argv: list[str] | None = None) -> int:
     _maybe_summary(
         args, asm, st, after, before, t0, len(invalid_paths), table_mode
     )
+    asm.unpersist()
     spark.stop()
     return 0
 

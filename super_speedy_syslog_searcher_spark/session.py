@@ -55,6 +55,22 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.extraJavaOptions", "-XX:+UseG1GC")
+        # pyspark runs importlib.invalidate_caches() before every Python
+        # task, and under CPython 3.11 each cached zipimporter then
+        # re-reads its archive's central directory (pyspark.zip alone
+        # holds 1,328 entries): 100-200 ms of CPU per task over a
+        # worker's 16 cached zipimporters, against 0.04-0.07 ms under
+        # this daemon, which makes that re-read a no-op and is otherwise
+        # pyspark's own.  Safe because no zip on a worker's sys.path
+        # (pyspark.zip, the py4j zip, fetched --py-files) is rewritten
+        # while the worker lives, and a zip added later (addPyFile) gets
+        # a fresh importer that reads its directory when built.  The
+        # module must be importable when the daemon starts, as the
+        # package's UDFs already must be; sessions built elsewhere (a
+        # caller's own, then prep()-ed, or tools/submit_job.py's, whose
+        # package arrives by --py-files) keep pyspark's daemon, since
+        # this conf is fixed at context start.
+        .config("spark.python.daemon.module", f"{__package__}._daemon")
     )
     for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)

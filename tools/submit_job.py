@@ -12,7 +12,10 @@ ordered merge, and prints one JSON line with row count + wall time.
         /root/testdata/sf0.01 [repl]
 
 On a real cluster the same invocation takes ``--master yarn``/k8s and
-N vs 4N executors; everything below is master-agnostic.
+N vs 4N executors; everything below is master-agnostic.  The session
+is spark-submit's, not ``session.get_spark``'s, so it keeps pyspark's
+stock worker daemon: the package is not importable until --py-files
+has shipped it, after the daemon starts.
 """
 
 from __future__ import annotations
